@@ -55,14 +55,15 @@ object Bpe {
     * overhead per text char) — so an adversarial high-distinct-vocab input
     * near the limit could blow the driver heap on a lying estimate. After
     * the (maxResultSize-bounded) collect, re-check the ACTUAL vocabulary
-    * chars against the same limit and fall back to the distributed loop
-    * when exceeded. */
+    * UTF-8 bytes against the same byte limit and fall back to the
+    * distributed loop when exceeded. */
   private[operators] def driverVocabFits(spark: org.apache.spark.sql.SparkSession,
-      chars: Long, what: String): Boolean = {
+      words: Iterator[String], what: String): Boolean = {
     val lim = driverInputLimit(spark)
-    val ok = chars <= lim
+    val bytes = words.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum
+    val ok = bytes <= lim
     if (!ok) System.err.println(s"[bpe] driver-regime estimate lied ($what): " +
-      s"collected vocabulary is $chars chars > limit $lim bytes — " +
+      s"collected vocabulary is $bytes bytes > limit $lim bytes — " +
       "falling back to the distributed loop")
     ok
   }
@@ -214,7 +215,7 @@ object Bpe {
       // bounded-input fast path (see DriverInputBytesLimit): one vocab
       // job instead of ~2·numMerges sequential argmax/rewrite jobs
       val rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      if (driverVocabFits(spark, rows.iterator.map(_._1.length.toLong).sum, "train")) {
+      if (driverVocabFits(spark, rows.iterator.map(_._1), "train")) {
         System.err.println(s"[bpe] driver regime: ${rows.length} vocab words, " +
           s"$numMerges merges on the driver (input under the byte limit)")
         return trainDriver(rows, numMerges, minPairCount, batchSize = 1)
@@ -325,7 +326,7 @@ object Bpe {
     if (driverRegime(df)) {
       // bounded-input fast path — same rule set, one vocab job
       val rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      if (driverVocabFits(spark, rows.iterator.map(_._1.length.toLong).sum, "train-batched")) {
+      if (driverVocabFits(spark, rows.iterator.map(_._1), "train-batched")) {
         System.err.println(s"[bpe] driver regime (batched): ${rows.length} vocab " +
           s"words, $numMerges merges x batch $batchSize on the driver")
         return trainDriver(rows, numMerges, minPairCount, batchSize)
@@ -511,7 +512,7 @@ object Bpe {
       // the same plan either way.
       val spark = df.sparkSession
       val vocabWords = words.select("wd").distinct().collect().map(_.getString(0))
-      if (driverVocabFits(spark, vocabWords.iterator.map(_.length.toLong).sum, "encode")) {
+      if (driverVocabFits(spark, vocabWords.iterator, "encode")) {
         System.err.println(s"[bpe] driver regime (encode): ${vocabWords.length} " +
           s"vocab words x ${merges.size} merges on the driver")
         import spark.implicits._

@@ -217,7 +217,15 @@ object Dedup {
     * 100 TB the alternative (re-banding or re-shuffling the corpus per
     * arriving batch) is the difference between a streaming pipeline and
     * a nightly job. Returns (batch_id, corpus_id, n_agree,
-    * est_jaccard ≥ `minAgree`). */
+    * est_jaccard ≥ `minAgree`).
+    *
+    * Persistence: the batch signature table is persisted (MEMORY_AND_DISK),
+    * filled by the result's first action. The caller owns releasing it: the
+    * cache is not reachable from the returned frame, so a long-lived session
+    * drops it with `spark.catalog.clearCache()` once done with the result, or
+    * accumulates one cache per call until the ContextCleaner reclaims it. A
+    * caller that needs to release exactly its own cache computes the
+    * signatures itself and calls [[incrementalNearDupFromSig]]. */
   def incrementalNearDup(batch: DataFrame, corpusSig: DataFrame,
       idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 32, bands: Int = 8,

@@ -537,7 +537,13 @@ object TextAnalysis {
     * the shared postings stream; `n_docs` rides in as a broadcast
     * one-row aggregate (no driver action — the plan stays lazy); the
     * ranking window partitions by doc id, bounded by per-doc vocabulary.
-    * Returns (id, term, tf, df, score, rn ≤ k). */
+    * Returns (id, term, tf, df, score, rn ≤ k).
+    *
+    * Persistence: the (id, term, tf) frame is persisted (MEMORY_AND_DISK),
+    * filled by the result's first action. The caller owns releasing it: the
+    * cache is not reachable from the returned frame, so a long-lived session
+    * drops it with `spark.catalog.clearCache()` once done with the result, or
+    * accumulates one cache per call until the ContextCleaner reclaims it. */
   def tfidfKeywords(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, k: Int = 3,
       maxDfFrac: Double = 0.5): org.apache.spark.sql.DataFrame = {
@@ -609,7 +615,14 @@ object TextAnalysis {
     * Scale shape: two map-side-combinable token counts, a full outer
     * join on token (vocabulary-sized, far smaller than the corpora),
     * one-row totals broadcast, then distributed TakeOrdered for the
-    * top-k (the [[vocabulary]] shape — never a global sort). */
+    * top-k (the [[vocabulary]] shape — never a global sort).
+    *
+    * Persistence: the joined (token, n_a, n_b) vocabulary is persisted
+    * (MEMORY_AND_DISK), filled by the result's first action. The caller owns
+    * releasing it: the cache is not reachable from the returned frame, so a
+    * long-lived session drops it with `spark.catalog.clearCache()` once done
+    * with the result, or accumulates one cache per call until the
+    * ContextCleaner reclaims it. */
   def vocabularyDrift(a: org.apache.spark.sql.DataFrame,
       b: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       k: Int): org.apache.spark.sql.DataFrame = {
@@ -730,7 +743,13 @@ object TextAnalysis {
     * groupBys; the unigram table is vocabulary-bounded and broadcasts
     * into the bigram stream twice (w1, w2) — swap to shuffled joins if
     * the vocabulary ever outgrows broadcast; the global top-K is a
-    * distributed TakeOrdered, never a single-partition sort. */
+    * distributed TakeOrdered, never a single-partition sort.
+    *
+    * Persistence: the bigram count table is persisted (MEMORY_AND_DISK),
+    * filled by the result's first action. The caller owns releasing it: the
+    * cache is not reachable from the returned frame, so a long-lived session
+    * drops it with `spark.catalog.clearCache()` once done with the result, or
+    * accumulates one cache per call until the ContextCleaner reclaims it. */
   def pmiBigrams(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, topK: Int = 20,
       minCount: Long = 5L): org.apache.spark.sql.DataFrame = {

@@ -122,7 +122,10 @@ object Compactor {
     * (crash-safe refinement of the reference's tmp+rename): merge →
     * hidden new files → manifest of merged names → deletes → promote →
     * drop manifest; a crash at any point is repaired by [[recover]] on
-    * the next sweep. Returns None if there was nothing to do. */
+    * the next sweep. The rewrite is the only Spark job (two for a
+    * multi-file generation, whose repartition is a shuffle): input
+    * schemas and the output row count come from footers read on the
+    * driver. Returns None if there was nothing to do. */
   def compactPartition(spark: SparkSession, lakeRoot: String, table: String,
       partition: String, compression: String = "zstd",
       targetFileBytes: Long = Long.MaxValue): Option[Stat] = {
@@ -177,7 +180,14 @@ object Compactor {
 
   /** One compaction sweep: for every partition containing files not yet in
     * the `compacted` history, rewrite and record. The anti-join is the
-    * idempotency gate (compactor.rs:597-641). */
+    * idempotency gate (compactor.rs:597-641).
+    *
+    * Spark jobs: the gate's one collect of the fresh `(table, partition,
+    * path)` rows (plus the broadcast of the history's keys), one rewrite
+    * per dirty partition ([[compactPartition]]) and one history append.
+    * On the driver: the partition listings, the dirty-partition and
+    * fresh-path sets (both derived from the one collect), and every
+    * footer read. */
   def runOnce(spark: SparkSession, lakeRoot: String, history: HistoryTable,
       targetFileBytes: Long = Long.MaxValue): Seq[Stat] = {
     import spark.implicits._
@@ -194,10 +204,9 @@ object Compactor {
     }
     if (candidates.isEmpty) return Seq.empty
     val cands = candidates.toDF("table", "partition", "path")
-    val fresh = history.filterNew(cands, "path")
-    val dirty = fresh.select("table", "partition").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val freshPaths = fresh.select("path").as[String].collect()
+    val fresh = history.filterNew(cands, "path").as[(String, String, String)].collect()
+    val dirty = fresh.map { case (t, p, _) => (t, p) }.distinct
+    val freshPaths = fresh.map(_._3)
     // fan the per-partition rewrites out concurrently (the reference's
     // rayon scope, compactor.rs:76-94): output dirs are disjoint and the
     // manifest protocol is per-dir, so no lock is needed. Each job is a

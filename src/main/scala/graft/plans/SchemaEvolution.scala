@@ -76,13 +76,22 @@ object SchemaEvolution {
 
   /** Read a set of parquet files as one frame under the widened schema —
     * the `union_by_name + to_supertypes` read used everywhere in the
-    * reference (crunch.rs:183-217, dashboards' union_by_name=true). Footer
-    * schemas only; no data scan until the result is consumed. */
+    * reference (crunch.rs:183-217, dashboards' union_by_name=true).
+    *
+    * Runs no Spark job: every file's schema comes from its footer, read on
+    * the driver ([[graft.sources.ParquetMeta.sparkSchema]]; Spark's own
+    * inference would run one job per file). Each run of consecutive files
+    * with the same schema is one relation read under that schema and
+    * conformed once, so the union keeps the files' order run by run.
+    * Nothing is scanned until the result is consumed. */
   def readWidened(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): DataFrame = {
-    val schemas = files.map(f => spark.read.parquet(f).schema)
+    val schemas = files.map(graft.sources.ParquetMeta.sparkSchema(spark, _))
     val target = widen(schemas)
-    files.zip(schemas).map { case (f, _) =>
-      conform(spark.read.parquet(f), target)
-    }.reduce(_ unionByName _)
+    val runs = files.zip(schemas).foldLeft(Vector.empty[(StructType, Vector[String])]) {
+      case (done :+ ((s, run)), (f, fs)) if fs == s => done :+ ((s, run :+ f))
+      case (done, (f, fs)) => done :+ ((fs, Vector(f)))
+    }
+    runs.map { case (s, run) => conform(spark.read.schema(s).parquet(run: _*), target) }
+      .reduce(_ unionByName _)
   }
 }

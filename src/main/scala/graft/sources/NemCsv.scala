@@ -199,21 +199,41 @@ object NemCsv {
     * (chunk.rs:324); we cap at the first 1,000 records of each file. */
   val SampleRows = 1000
 
-  /** First non-null sample value per (table, column index), ONE aggregation
-    * job over the whole raw stream regardless of table count. `min` over
-    * (file, seq, value) structs = the first value in file order —
-    * deterministic across partitions (a bare `first()` is not). */
-  private[sources] def sampleFirstNonNull(raw: DataFrame): Map[(String, Int), String] =
-    raw.filter(col("seq") <= SampleRows)
-      .select(col("table"), col("file"), col("seq"),
-        posexplode(col("values")).as(Seq("idx", "v")))
-      .filter(col("v") =!= "") // empty string is null-equivalent pre-cast
-      .groupBy("table", "idx")
-      .agg(min(struct(col("file"), col("seq"), col("v"))).as("s"))
-      .select(col("table"), col("idx"), col("s.v").as("v"))
+  /** What column-izing one logical table needs: its row count, header
+    * and each column's first non-null sample (None: all null). */
+  private[sources] final case class TableMeta(table: String, rows: Long, header: Seq[String],
+      samples: Seq[Option[String]])
+
+  /** Every table's [[TableMeta]] from ONE aggregation over the raw stream,
+    * whatever the table count. Each record explodes to a position-0 row,
+    * which carries its header and is counted, and one row per non-empty
+    * value of its first [[SampleRows]] records (position = column + 1;
+    * empty string is null-equivalent pre-cast). Grouped by (table,
+    * position), `min` over (file, seq, …) structs picks the first header
+    * and the first value in file order — deterministic across partitions
+    * (a bare `first()` is not); (file, seq) is unique within a table, so
+    * the payload never decides. */
+  private[sources] def tableMeta(raw: DataFrame): Seq[TableMeta] = {
+    val byPos = raw
+      .select(col("table"), col("file"), col("seq"), col("header"),
+        posexplode(concat(array(lit("")),
+          when(col("seq") <= SampleRows, col("values")).otherwise(typedLit(Seq.empty[String]))))
+          .as(Seq("pos", "v")))
+      .filter(col("pos") === 0 || col("v") =!= "")
+      .groupBy("table", "pos")
+      .agg(count(lit(1)).as("n"), min(struct(col("file"), col("seq"),
+        when(col("pos") === 0, col("header")).as("header"),
+        when(col("pos") > 0, col("v")).as("v"))).as("s"))
+      .select(col("table"), col("pos"), col("n"), col("s.header"), col("s.v"))
       .collect()
-      .map(r => ((r.getString(0), r.getInt(1)), r.getString(2)))
-      .toMap
+      .groupBy(_.getString(0))
+    byPos.toSeq.sortBy(_._1).map { case (t, rs) =>
+      val record = rs.find(_.getInt(1) == 0).get
+      val header = record.getSeq[String](3)
+      val samples = rs.filter(_.getInt(1) > 0).map(r => (r.getInt(1) - 1) -> r.getString(4)).toMap
+      TableMeta(t, record.getLong(2), header, header.indices.map(samples.get))
+    }
+  }
 
   /** Column-ize one logical table given its precomputed header and
     * per-column first-non-null samples — no inference jobs of its own.
@@ -247,16 +267,9 @@ object NemCsv {
     * reference's 3-type inference (first non-null value in the first
     * [[SampleRows]] records of each file decides, chunk.rs:69-141). */
   def tableFrame(raw: DataFrame, table: String): DataFrame = {
-    val recs = raw.filter(col("table") === table)
-    val header = recs.select("header").head().getSeq[String](0)
-    val samp = sampleFirstNonNull(recs)
-    tableFrameWith(raw, table, header, header.indices.map(i => samp.get((table, i))))
+    val m = tableMeta(raw.filter(col("table") === table)).head
+    tableFrameWith(raw, table, m.header, m.samples)
   }
-
-  /** Rows per table, one job over the (cached) raw stream. */
-  def tableCounts(raw: DataFrame): Map[String, Long] =
-    raw.groupBy("table").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Full split: read files, write each logical table to
     * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-N.parquet`, return a summary frame
@@ -268,24 +281,16 @@ object NemCsv {
     import spark.implicits._
     val raw = rawRecords(spark, paths).cache()
     try {
-      // job 1: per-table row count + deterministic header, all tables at once
-      val meta = raw.groupBy("table").agg(
-          count(lit(1)).as("rows"),
-          min(struct(col("file"), col("seq"), col("header"))).as("h"))
-        .select(col("table"), col("rows"), col("h.header").as("header"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2)))
-        .sortBy(_._1)
-      // job 2: every table's type-inference samples in one capped pass
-      val samples = sampleFirstNonNull(raw)
+      // one aggregation: every table's row count, header and samples
+      val meta = tableMeta(raw)
       // then the per-table writes run concurrently (disjoint output dirs) —
       // total job count is O(1) in table count + one write per table
-      val counts = graft.Par.mapBounded(meta.toIndexedSeq) { case (t, n, header) =>
-        tableFrameWith(raw, t, header, header.indices.map(i => samples.get((t, i))))
+      val counts = graft.Par.mapBounded(meta.toIndexedSeq) { m =>
+        tableFrameWith(raw, m.table, m.header, m.samples)
           .write.mode("append").partitionBy("date")
           .option("compression", compression)
-          .parquet(s"$lakeRoot/$t")
-        Some((t, n))
+          .parquet(s"$lakeRoot/${m.table}")
+        Some((m.table, m.rows))
       }
       counts.toDF("table", "rows")
     } finally raw.unpersist()

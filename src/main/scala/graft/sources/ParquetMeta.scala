@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * without scanning data (reference `src/bin/verify.rs:88-111`,
   * `src/bin/inspect_parquet.rs:21-188`). Driver-side footer reads only;
   * used by the reconciliation verify job where a full `count()` scan per
-  * file would be wasteful. */
+  * file would be wasteful, and by the lake's readers
+  * ([[graft.plans.SchemaEvolution.readWidened]], [[HistoryTable]]) in place
+  * of Spark's schema inference, which runs one job per read. */
 object ParquetMeta {
 
   final case class FileMeta(path: String, rows: Long, rowGroups: Int,
@@ -29,6 +33,34 @@ object ParquetMeta {
         columns = f.getFileMetaData.getSchema.getFieldCount,
         totalByteSize = blocks.map(_.getTotalByteSize).sum)
     } finally reader.close()
+  }
+
+  /** The schema `spark.read.parquet(path).schema` infers, read from one
+    * footer on the driver instead of by Spark's inference job: Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter` with the converter settings
+    * its inference uses, made nullable as the file source makes every
+    * inferred schema. A directory resolves as Spark resolves it without
+    * `mergeSchema`: to its first visible file in path order (flat
+    * directories only — no partition columns are discovered). */
+  def sparkSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minBy(_.toString)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try new Footer(file, reader.getFooter) finally reader.close()
+    val sql = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sql.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sql.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(footer, converter).toNullable
   }
 
   /** Per-column, per-row-group statistics — what the reference's

@@ -115,7 +115,9 @@ object IngestDaemon {
       if (toProcess.isEmpty) 0L
       else {
         val summary = NemCsv.splitToLake(spark, toProcess, lakeRoot)
-        val n = summary.count()
+        // the summary is a local frame: collecting it runs no Spark job,
+        // where count() runs an aggregation (two jobs under AQE)
+        val n = summary.collect().length.toLong
         val now = new java.sql.Timestamp(System.currentTimeMillis())
         processedHist.add(toProcess.toDF("filename") // keyed by path
           .withColumn("processed_at", org.apache.spark.sql.functions.lit(now)))

@@ -98,8 +98,18 @@ class BpeDriverRegimeSpec extends SparkSpec {
     // unbounded vocabulary to the ~50x-overhead driver loop (r21 ADVICE)
     spark.conf.set(LimitKey, "10")
     try {
-      assert(Bpe.driverVocabFits(spark, chars = 10L, what = "spec"))
-      assert(!Bpe.driverVocabFits(spark, chars = 11L, what = "spec"))
+      assert(Bpe.driverVocabFits(spark, Iterator("abcde", "fghij"), what = "spec"))
+      assert(!Bpe.driverVocabFits(spark, Iterator("abcde", "fghijk"), what = "spec"))
+    } finally spark.conf.unset(LimitKey)
+  }
+
+  test("post-collect vocab guard measures UTF-8 bytes, not chars") {
+    // the limit is in bytes: 10 chars of 'é' are 20 UTF-8 bytes and must
+    // trip the fallback where 10 ASCII chars (10 bytes) do not
+    spark.conf.set(LimitKey, "10")
+    try {
+      assert(Bpe.driverVocabFits(spark, Iterator("abcde", "fghij"), what = "spec"))
+      assert(!Bpe.driverVocabFits(spark, Iterator("ééééé", "ééééé"), what = "spec"))
     } finally spark.conf.unset(LimitKey)
   }
 }

@@ -36,4 +36,28 @@ class HistoryTableSpec extends SparkSpec {
     val fresh = h.filterNew(cands, "f").as[String].collect().sorted
     assert(fresh === Array("a.zip", "c.zip"))
   }
+
+  test("vacuum consolidates only the files it listed; a file added after the listing survives") {
+    import spark.implicits._
+    val root = tmpDir("hist3")
+    val h = HistoryTable.processed(spark, root)
+    h.add(Seq(("a.zip", 1L)).toDF("filename", "rows"))
+    h.add(Seq(("b.zip", 2L)).toDF("filename", "rows"))
+    val listed = h.files().map(_.getPath)
+    // an add that lands between the vacuum's listing and its rewrite
+    h.add(Seq(("c.zip", 3L)).toDF("filename", "rows"))
+    val late = h.files().map(_.getPath).filterNot(listed.contains)
+    assert(late.size === 1)
+    h.consolidate(listed)
+    val after = h.files().map(_.getPath)
+    assert(after.size === 2)
+    assert(after.contains(late.head)) // not deleted
+    val consolidated = after.filterNot(_ == late.head).head
+    assert(consolidated.getName.startsWith("consolidated-"))
+    assert(spark.read.parquet(consolidated.toString).as[(String, Long)].collect().map(_._1).sorted ===
+      Array("a.zip", "b.zip")) // not consolidated
+    // the late key still gates
+    val fresh = h.filterNew(Seq("a.zip", "b.zip", "c.zip", "d.zip").toDF("f"), "f").as[String].collect()
+    assert(fresh === Array("d.zip"))
+  }
 }
