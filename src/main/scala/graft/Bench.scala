@@ -65,7 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCores
     // warm repetitions per query (median reported): this sandbox swings
     // single-query times 2-5x between runs, which made single-sample
     // rounds unadjudicable (r5 "regression" panic was variance; r6's
@@ -78,14 +78,7 @@ object Bench {
     // whole suite N times and committing EVERY rep's total means the
     // artifact carries its own spread; no hand-picking between runs.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(spark)
+    val spark = GraftSession.local(cpus)
     val rt = Runtime.getRuntime
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -111,20 +104,6 @@ object Bench {
     // host-regime sentinel cadence: one fixed-workload sample at suite
     // start and every N queries, recorded per rep (see Bench.sentinel)
     val sentinelEvery = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_EVERY", "10").toInt
-    // evaluation forcing: "noop" (default — full-column noop-sink write,
-    // see Bench.force) or "count" (the pre-round-14 shape, kept selectable
-    // so cross-round artifact compares can reproduce the old measurement).
-    // Stamped into every artifact: a count-forced and a noop-forced run
-    // are NOT comparable for the window/generate-heavy families.
-    // Fail fast on anything but the two known modes: a typo ("Count",
-    // "noopp") would otherwise silently run noop forcing while stamping
-    // the unrecognized string into the artifact's force field, poisoning
-    // later benchdiff compares (r14 ADVICE).
-    val forceMode = sys.env.getOrElse("SPARK_GRAFT_FORCE", "noop")
-    require(forceMode == "noop" || forceMode == "count",
-      s"SPARK_GRAFT_FORCE must be 'noop' or 'count', got '$forceMode'")
-    val forceDf: org.apache.spark.sql.DataFrame => Unit =
-      if (forceMode == "count") df => { df.count(); () } else force _
     def runSuite(): (Map[String, (Double, Double, Seq[Double])], Seq[Double]) = {
       val sentinels = scala.collection.mutable.ArrayBuffer(sentinel(spark))
       var sinceSentinel = 0
@@ -136,7 +115,7 @@ object Bench {
         }
         def run(): Double = {
           val t0 = System.nanoTime()
-          forceDf(fn(spark, sfDir))
+          force(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }
         val cold = try run() catch {
@@ -154,12 +133,9 @@ object Bench {
           if (warms.contains(-1.0)) -1.0
           else if (warms.exists(_ < 0)) warms.min
           else median(warms)
-        // per-query session hygiene, BOTH layers: catalog caches (persist)
-        // AND rdd-level blocks (localCheckpoint generations) — the latter
-        // are invisible to clearCache and otherwise accumulate across the
-        // ~100-query run until the ContextCleaner gets to them
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        // per-query session hygiene: without it localCheckpoint blocks
+        // accumulate across the run until the ContextCleaner gets to them
+        GraftSession.releaseCaches(spark)
         val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
         System.err.println(f"[bench] $name%-28s cold=$cold%7.3f warm=$warm%7.3f " +
           f"min=${warms.min}%7.3f heapMB=$heapMb%5d")
@@ -230,91 +206,17 @@ object Bench {
     // (~0.2 s at 8 threads, ~0.55 s at 32 — dispatch overhead). Sentinel
     // ratios only adjudicate contention between same-config artifacts.
     val driverMem = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-    // Artifact-acceptance self-adjudication (r15 verdict #2): round 15
-    // shipped two same-HEAD sf0.1 artifacts 26% apart with three >2x
-    // per-query divergences and nothing flagged them at landing time.
-    // Before overwriting the committed artifact, compare this run
-    // against it: any query >2x off IN EITHER DIRECTION (sentinel-
-    // normalized, 0.3 s absolute floor — benchdiff's jitter rules) is
-    // stamped into the new artifact's "divergences" list and printed
-    // with its solo-probe command, so a divergent artifact arrives
-    // PRE-FLAGGED instead of being discovered by a judge a round later.
-    // Config-mismatched predecessors (different sf/cpus/force) are
-    // skipped — those ratios measure the config, not the engine.
     val benchOutPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    val divergences: Seq[String] = try {
-      val p = java.nio.file.Paths.get(benchOutPath)
-      if (!java.nio.file.Files.exists(p)) Seq.empty
-      else {
-        val prev = java.nio.file.Files.readString(p)
-        def field(name: String): Option[String] =
-          ("\"" + name + "\":\\s*\"?([^,\"\\n}]+)").r
-            .findFirstMatchIn(prev).map(_.group(1).trim)
-        val sameConfig = field("sf").contains(sfDir) &&
-          field("cpus").contains(cpus.toString) &&
-          field("force").contains(forceMode)
-        if (!sameConfig) {
-          // a mismatch is usually a real config change, but a scrape
-          // MISS looks identical — distinguish them in the log so a
-          // format drift can't silently no-op the gate (ADVICE r16)
-          System.err.println(s"[bench] divergence gate skipped: prior artifact " +
-            s"config (sf=${field("sf")}, cpus=${field("cpus")}, force=${field("force")}) " +
-            s"!= this run ($sfDir, $cpus, $forceMode)")
-          Seq.empty
-        } else {
-          val prevSent = field("sentinel_med").map(_.toDouble).getOrElse(-1.0)
-          val norm =
-            if (prevSent > 0 && sentMed > 0) math.max(sentMed / prevSent, 1.0)
-            else 1.0
-          val qre =
-            "\"([A-Za-z0-9_]+)\":\\s*\\{\"cold\":\\s*[-0-9.]+,\\s*\"warm\":\\s*([-0-9.]+)".r
-          val prevWarm = qre.findAllMatchIn(prev)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          // the per-query pattern is coupled to Bench's own write format;
-          // if the config fields matched but zero queries scraped, the
-          // format drifted — shout rather than silently pass (ADVICE r16)
-          if (prevWarm.isEmpty)
-            System.err.println("[bench] WARNING: divergence gate matched the " +
-              s"artifact config at $benchOutPath but scraped ZERO per-query " +
-              "warms — the artifact format drifted from the scrape pattern; " +
-              "the gate is NOT checking anything this run")
-          byCost.flatMap { case (k, (_, w, _)) =>
-            prevWarm.get(k) match {
-              case Some(o) if o > 0 && w > 0 =>
-                val adj = w / norm
-                val ratio = math.max(adj / o, o / adj)
-                if (ratio > 2.0 && math.abs(adj - o) > 0.3) {
-                  System.err.println(
-                    f"[bench] DIVERGENCE $k: committed $o%.2f s vs this run $w%.2f s" +
-                      f" (normalized $adj%.2f s, ${ratio}%.1fx) — adjudicate solo:" +
-                      s" SPARK_GRAFT_CPUS=$cpus sbt 'runMain graft.tools.ProbeQuery $k $sfDir 5'")
-                  Some("\"" + k + "\"")
-                } else None
-              case _ => None
-            }
-          }
-        }
-      }
-    } catch {
-      case e: Throwable =>
-        // a broken gate must be VISIBLE, not indistinguishable from
-        // "no divergences" — the exact silent-miss mode it exists to
-        // prevent (ADVICE r16)
-        System.err.println(s"[bench] WARNING: divergence gate threw " +
-          s"${e.getClass.getSimpleName}: ${e.getMessage} — gate disabled this run")
-        Seq.empty
-    }
-    val divergencesJson = divergences.mkString("[", ",", "]")
-    if (divergences.nonEmpty)
-      System.err.println(s"[bench] ${divergences.size} divergence(s) vs the artifact " +
-        s"at $benchOutPath — this run is stamped; adjudicate before accepting it")
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_cold":${f3(totalCold)},"warm_runs":$warmRuns,"reps":$reps,"cpus":$cpus,"driver_mem":"$driverMem","force":"$forceMode","sentinel_med":${f3(sentMed)},"sentinel_every":$sentinelEvery,"runs":$runsJson,"sf":"$sfDir","refused_by_guard":$refused,"divergences":$divergencesJson,"queries":$qs,"queries_cold":$colds}"""
+    // "force" stays stamped: benchdiff.py reads an artifact without it as
+    // a count-forced one and warns on the compare. Divergence against an
+    // earlier artifact is benchdiff.py's job (tools/benchgate.sh --accept)
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_cold":${f3(totalCold)},"warm_runs":$warmRuns,"reps":$reps,"cpus":$cpus,"driver_mem":"$driverMem","force":"noop","sentinel_med":${f3(sentMed)},"sentinel_every":$sentinelEvery,"runs":$runsJson,"sf":"$sfDir","refused_by_guard":$refused,"queries":$qs,"queries_cold":$colds}"""
     try {
       val full = results.toSeq.sortBy(_._1).map { case (k, (c, w, ws)) =>
         val samples = ws.map(f3).mkString("[", ", ", "]")
         s"""    "$k": {"cold": ${f3(c)}, "warm": ${f3(w)}, "warm_min": ${f3(ws.min)}, "warm_samples": $samples}"""
       }.mkString(
-        s"""{\n  "total_warm": ${f3(total)},\n  "total_cold": ${f3(totalCold)},\n  "warm_runs": $warmRuns,\n  "reps": $reps,\n  "cpus": $cpus,\n  "driver_mem": "$driverMem",\n  "force": "$forceMode",\n  "sentinel_med": ${f3(sentMed)},\n  "sentinel_every": $sentinelEvery,\n  "sentinel_samples": $sentinelSamplesJson,\n  "runs": $runsJson,\n  "sf": "$sfDir",\n  "refused_by_guard": $refused,\n  "divergences": $divergencesJson,\n  "queries": {\n""",
+        s"""{\n  "total_warm": ${f3(total)},\n  "total_cold": ${f3(totalCold)},\n  "warm_runs": $warmRuns,\n  "reps": $reps,\n  "cpus": $cpus,\n  "driver_mem": "$driverMem",\n  "force": "noop",\n  "sentinel_med": ${f3(sentMed)},\n  "sentinel_every": $sentinelEvery,\n  "sentinel_samples": $sentinelSamplesJson,\n  "runs": $runsJson,\n  "sf": "$sfDir",\n  "refused_by_guard": $refused,\n  "queries": {\n""",
         ",\n", "\n  }\n}\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOutPath), full)
     } catch { case _: Throwable => () } // stdout line is the contract; the file is best-effort
@@ -329,7 +231,7 @@ object Bench {
     // above; this one is the crash-proof summary of record.
     val topWarm = results.toSeq.sortBy(-_._2._2)
     val budget = 1500
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_cold":${f3(totalCold)},"sentinel_med":${f3(sentMed)},"reps":$reps,"cpus":$cpus,"force":"$forceMode","sf":"$sfDir","queries_n":${results.size},"divergences_n":${divergences.size},"artifact":"$benchOutPath","queries":{"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_cold":${f3(totalCold)},"sentinel_med":${f3(sentMed)},"reps":$reps,"cpus":$cpus,"force":"noop","sf":"$sfDir","queries_n":${results.size},"artifact":"$benchOutPath","queries":{"""
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 2
     var omitted = 0

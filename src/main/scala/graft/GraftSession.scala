@@ -211,8 +211,13 @@ object GraftSession {
     s
   }
 
-  /** Local session for tests / ad-hoc runs. */
-  def local(cores: Int = 4, tz: String = "UTC"): SparkSession = {
+  /** Local core count for the mains: `SPARK_GRAFT_CPUS`, else 4. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** Local session for specs, tools and the mains: `cores` local threads
+    * and as many shuffle partitions. Every session the engine builds for
+    * itself comes from here. */
+  def local(cores: Int = defaultCores, tz: String = "UTC"): SparkSession = {
     val s = tune(
       SparkSession.builder()
         .master(s"local[$cores]")
@@ -225,5 +230,14 @@ object GraftSession {
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     attach(s)
+  }
+
+  /** Drop every block a query left behind, at both layers: catalog caches
+    * (`persist`) and RDD-level blocks (`localCheckpoint` generations, which
+    * `clearCache` never sees). Blocking, so the next query starts with the
+    * storage memory free. The harness mains call it between queries. */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

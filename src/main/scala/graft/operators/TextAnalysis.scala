@@ -559,9 +559,17 @@ object TextAnalysis {
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val nDocs = df.select(countDistinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy("id").orderBy(col("score").desc, col("w"))
-    tf.join(dfreq, Seq("w"))
+    // Left outer, not inner: every word of tf has its df row, so both give
+    // the same rows, but only the outer join fixes which side AQE may
+    // broadcast. Inner, AQE broadcast whichever small side it had sized
+    // first; when tf's cached stage won the race (about 1 evaluation in
+    // 16 at fixture scale) it broadcast tf, lost tf's id layout and put an
+    // exchange before the window on id. Streaming tf keeps that layout.
+    // The df filter tolerates a null df (none occurs) so that the
+    // optimizer does not turn the join back into an inner one.
+    tf.join(dfreq, Seq("w"), "left")
       .join(broadcast(nDocs))
-      .filter(col("df").cast("double") <= col("n_docs") * maxDfFrac)
+      .filter(coalesce(col("df"), lit(0L)).cast("double") <= col("n_docs") * maxDfFrac)
       .withColumn("score", col("tf").cast("double") * col("n_docs") / col("df"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)

@@ -20,10 +20,6 @@ object IngestDaemon {
 
   final case class TickResult(scraped: Int, downloaded: Int, tablesWritten: Long)
 
-  /** Shared engine-wide control (see [[graft.DaemonControl]]); aliased
-    * here so existing callers keep `new IngestDaemon.DaemonControl`. */
-  type DaemonControl = graft.DaemonControl
-
   /** Continuous daemon: cycle `feeds` round-robin every `intervalMillis`
     * (the reference's 60 s loop, urls.rs:176-209), run a full ingest tick
     * per cycle, stop gracefully on `control.stop()` or JVM shutdown.
@@ -34,7 +30,7 @@ object IngestDaemon {
   def run(spark: SparkSession, feeds: Seq[String], fetchPage: String => String,
       downloadDir: String, lakeRoot: String, historyRoot: String,
       intervalMillis: Long = 60000L, maxTicks: Long = Long.MaxValue,
-      control: DaemonControl = new DaemonControl,
+      control: graft.DaemonControl = new graft.DaemonControl,
       installShutdownHook: Boolean = true,
       onTick: (String, TickResult) => Unit = (_, _) => ()): Seq[TickResult] = {
     // runGuarded: the shutdown hook requests stop, then HOLDS the JVM

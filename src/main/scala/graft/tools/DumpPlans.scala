@@ -14,14 +14,8 @@ object DumpPlans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else defaults
     val spark = graft.GraftSession.local(8)
-    // SPARK_GRAFT_CONF="k=v;k=v": session-conf overrides for before/after
-    // plan dumps (same contract as ProbeQuery)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ =>
-      }
-    })
+    // SPARK_GRAFT_CONF overrides for before/after plan dumps
+    ProbeQuery.applyConfOverrides(spark)
     names.foreach { n =>
       println(s"\n===PLAN=== $n")
       graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -23,9 +23,9 @@ object EwmaProbe {
     val n = args.lift(0).map(_.toLong).getOrElse(500000000L)
     val which = args.lift(1).getOrElse("both")
     val chunkRows = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = graft.GraftSession.defaultCores
     val spark = graft.GraftSession.local(cpus)
-    val stage = ProbeQuery.attachStageLog(spark)
+    val stage = StageLog.attach(spark)
     val rt = Runtime.getRuntime
 
     // 5 groups, per-group ts strictly increasing, value a cheap
@@ -42,10 +42,9 @@ object EwmaProbe {
         graft.Bench.force(body)
         val s = (System.nanoTime() - t0) / 1e9
         val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+        stage.dump(s"ewma:$label", i)
         System.err.println(f"[probe] ewma:$label run $i: $s%7.3f s  heapMB=$heapMb%5d")
-        stage.foreach(_.dump(i))
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        graft.GraftSession.releaseCaches(spark)
       }
     }
     if (which == "faithful" || which == "both")
@@ -55,7 +54,7 @@ object EwmaProbe {
       runOne("segmented", graft.operators.Ewma.withEwmaSegmented(
         stream, "region", Seq("ts"), "value", alpha = 0.2, outCol = "ewma",
         chunkCol = col("ts") / chunkRows))
-    stage.foreach(_.detach(spark))
+    stage.detach()
     println(s"[probe] ewma done n=$n (cpus=$cpus)")
     spark.stop()
   }

@@ -24,8 +24,7 @@ object FallbackScale {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(1280000L)
     val chain = args.lift(1).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     def timed[T](f: => T): (T, Double) = {

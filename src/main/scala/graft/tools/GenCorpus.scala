@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic synthetic corpus generator for scale-curve evidence
   * BEYOND the driver fixture (PLANS.md: sf0.1 holds 5,000 documents /
   * 2,000 embeddings — every r10 curve's honest caveat was "still fixture
@@ -83,15 +81,7 @@ object GenCorpus {
     val outDir = args(0)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(100000L)
     val nVecs = args.lift(2).map(_.toLong).getOrElse(20000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(spark)
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     spark.range(nDocs).map { i =>
       val text = finalText(i)

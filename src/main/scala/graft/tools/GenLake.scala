@@ -82,15 +82,7 @@ object GenLake {
     val nDocs = args.lift(2).map(_.toLong).getOrElse(100000L)
     val nVecs = args.lift(3).map(_.toLong).getOrElse(20000L)
     val srcDir = args.lift(4).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(spark)
+    val spark = graft.GraftSession.local()
     writeLake(spark, outDir, m, nDocs, nVecs, srcDir)
     val counts = graft.Tables.all.map(n =>
       s"$n=${spark.read.parquet(s"$outDir/$n.parquet").count()}").mkString(" ")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic MEDIA lake generator — the multimodal sibling
@@ -33,19 +32,12 @@ object GenMedia {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val nPer = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(spark)
+    val cpus = graft.GraftSession.defaultCores
+    val spark = graft.GraftSession.local(cpus)
 
     val n = 3L * nPer
     // one slice per core x4 so the codec-encode work stays balanced
-    val ids = spark.range(0L, n, 1L, cpus.toInt * 4)
+    val ids = spark.range(0L, n, 1L, cpus * 4)
       .select(col("id").as("doc_id"))
     val m = col("doc_id") % 3
     val png = graft.multimodal.Multimodal.synthesizePngPattern(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Power-law skew corpus for the subset-key co-partition trade probe
   * (VERDICT r19 #3): [[graft.GraftSession.tune]] ships
   * `spark.sql.requireAllClusterKeysForCoPartition=false` session-wide so
@@ -22,15 +20,7 @@ object GenSkewCorpus {
     val outDir = args(0)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val skewPct = args.lift(2).map(_.toDouble).getOrElse(0.05)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(spark)
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     // normal docs average ~55 words (GenCorpus profile); the owner doc's
     // word count makes it skewPct of the total stream

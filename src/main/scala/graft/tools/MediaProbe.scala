@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   * probe measures decode + operator cost, not re-sinking the lake.
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_STAGE_METRICS=1 \
-  *     runMain graft.tools.MediaProbe <probe> <mediaDir> [n] */
+  *   SPARK_GRAFT_CPUS=32 runMain graft.tools.MediaProbe <probe> <mediaDir> [n] */
 object MediaProbe {
 
   private def media(spark: SparkSession, dir: String): DataFrame =
@@ -81,21 +80,21 @@ object MediaProbe {
       sys.error(s"usage: MediaProbe <probe> <mediaDir> [n] — probes: ${probes.keys.toSeq.sorted.mkString(", ")}"))
     val dir = args.lift(1).getOrElse("/tmp/graft_media")
     val n = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = graft.GraftSession.defaultCores
     val spark = graft.GraftSession.local(cpus)
     val fn = probes.getOrElse(name,
       sys.error(s"unknown probe '$name' — keys: ${probes.keys.toSeq.sorted.mkString(", ")}"))
-    val stage = ProbeQuery.attachStageLog(spark)
+    val stage = StageLog.attach(spark)
     val rt = Runtime.getRuntime
     (1 to n).foreach { i =>
       val t0 = System.nanoTime()
       graft.Bench.force(fn(spark, dir))
       val s = (System.nanoTime() - t0) / 1e9
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+      stage.dump(s"media:$name", i)
       System.err.println(f"[probe] media:$name run $i: $s%7.3f s  heapMB=$heapMb%5d")
-      stage.foreach(_.dump(i))
     }
-    stage.foreach(_.detach(spark))
+    stage.detach()
     println(f"[probe] media:$name done (cpus=$cpus)")
     spark.stop()
   }

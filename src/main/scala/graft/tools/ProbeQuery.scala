@@ -1,6 +1,9 @@
 package graft.tools
 
-/** Time ONE registry query N times in a fresh session — the
+import graft.{Bench, GraftSession, SparkEntry}
+import org.apache.spark.sql.SparkSession
+
+/** Time registry queries N times each in one fresh session — the
   * single-query adjudication probe the full `graft.Bench` sweep can't
   * give (round 14: j02's lake-20 warms degraded 28→59 s across samples
   * at local[32] while its cold matched the prior round exactly; this
@@ -10,149 +13,69 @@ package graft.tools
   *
   * Usage:
   *   SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g \
-  *     sbt "runMain graft.tools.ProbeQuery j02_inner_composite /tmp/graft_lake20 4"
+  *     sbt "runMain graft.tools.ProbeQuery j02_inner_composite[,query...] /tmp/graft_lake20 4"
   *
-  * Prints per-run wall seconds plus used-heap after each run (the creep
-  * signature: monotonically rising times WITH rising retained heap =
-  * allocation outrunning GC in an undersized heap; flat times = healthy).
-  * Matches Bench's execution shape exactly: full-column noop-sink force
-  * per run (`Bench.force` — count() would let Catalyst prune windows,
-  * generates and final sorts; see PLANS.md round 14), cache +
-  * persistent-RDD sweep only AFTER the last run. */
+  * Each run builds a fresh frame, plans it (`executedPlan`) and forces it
+  * with `Bench.force`, the bench's full-column noop sink. The run line
+  * gives the seconds Bench would time (frame construction plus the
+  * force, which plans its own write; the extra plan pass is left out),
+  * the plan ms (construction, analysis, optimization and physical
+  * planning — AQE re-planning during execution is not in it), the jobs,
+  * stages and tasks the run dispatched, and the used heap after it (the
+  * creep signature: monotonically rising times WITH rising retained heap
+  * = allocation outrunning GC in an undersized heap; flat times =
+  * healthy). [[StageLog]] prints the run's top stages above it. Caches
+  * are swept only AFTER a query's last run, as in Bench.
+  *
+  * `SPARK_GRAFT_CONF="k=v;k=v"` sets session confs for A/B probes
+  * without recompiling (`spark.sql.shuffle.partitions=N` for partition-
+  * sizing experiments: round 15's ta_quality_report at 10M docs OOMs
+  * 8g/32-wide and passes with more, smaller partitions). */
 object ProbeQuery {
 
-  /** SPARK_GRAFT_STAGE_METRICS=1: per-stage breakdown of a beyond-
-    * fixture run — which stage owns the wall clock, how much spilled,
-    * how wide it ran. Listener callbacks are post-hoc (stage-completed
-    * events), so the measured runs are not perturbed. Shared by every
-    * probe main ([[ProbeQuery]], [[MediaProbe]], [[TrainProbe]]…). */
-  final class StageLog private[ProbeQuery] (
-      buf: java.util.concurrent.ConcurrentLinkedQueue[
-        (Int, String, Long, Long, Long, Long, Long, Int)],
-      taskStats: java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)],
-      l: org.apache.spark.scheduler.SparkListener) {
-    // stage-completed events arrive on the async listener bus, so a
-    // just-finished run's tail events may still be in flight when the
-    // driver thread reads the buffer (dropped, or attributed to the
-    // NEXT run). No public waitUntilEmpty — poll until the buffer size
-    // is stable for two consecutive 100 ms ticks, bounded at 2 s.
-    def drainBus(): Unit = {
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 2 && waited < 2000) {
-        Thread.sleep(100); waited += 100
-        val n = buf.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
-    /** Print the run's top-12-by-wall stages + total spill, then reset.
-      * Each line carries the stage's STRAGGLER RATIO (max task runtime /
-      * mean task runtime, from onTaskEnd events) — the skew signal a
-      * per-stage aggregate alone can't show: a 32-task stage whose wall
-      * equals one task's runtime is a partition-skew stage even when its
-      * totals look healthy. */
-    def dump(run: Int): Unit = {
-      drainBus()
-      val stages = scala.jdk.CollectionConverters.IteratorHasAsScala(
-        buf.iterator()).asScala.toSeq.sortBy(-_._3)
-      val mb = 1024.0 * 1024.0
-      stages.take(12).foreach { case (id, nm, wall, cpu, spill, sr, sw, nt) =>
-        val skew = Option(taskStats.get(id)).collect {
-          case (mx, sum, n) if n > 1 && sum > 0 =>
-            f" skew=${mx.toDouble * n / sum}%4.1fx"
-        }.getOrElse("")
-        System.err.println(f"[probe-stage] run $run stage=$id%-4d wall=${wall / 1000.0}%7.1fs " +
-          f"cpu=${cpu / 1000.0}%8.1fs spill=${spill / mb}%9.1fMB " +
-          f"shufR=${sr / mb}%9.1fMB shufW=${sw / mb}%9.1fMB tasks=$nt%-4d$skew $nm")
-      }
-      val totSpill = stages.map(_._5).sum / mb
-      System.err.println(f"[probe-stage] run $run stages=${stages.size} " +
-        f"total_spill=${totSpill}%.1fMB (top 12 by wall above)")
-      buf.clear()
-      taskStats.clear()
-    }
-    def detach(spark: org.apache.spark.sql.SparkSession): Unit =
-      spark.sparkContext.removeSparkListener(l)
-  }
-
-  /** Attach the stage-metrics listener when SPARK_GRAFT_STAGE_METRICS=1
-    * (None otherwise — probes run unobserved by default). */
-  def attachStageLog(spark: org.apache.spark.sql.SparkSession): Option[StageLog] =
-    sys.env.get("SPARK_GRAFT_STAGE_METRICS").filter(_ == "1").map { _ =>
-      val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-        (Int, String, Long, Long, Long, Long, Long, Int)]()
-      // per-stage (max task runtime, sum task runtime, n tasks) for the
-      // straggler ratio — merged lock-free per task-end event
-      val taskStats = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val tm = si.taskMetrics
-          if (tm != null) buf.add((si.stageId,
-            si.name.takeWhile(_ != '\n').take(80),
-            si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
-            tm.executorRunTime,
-            tm.memoryBytesSpilled + tm.diskBytesSpilled,
-            tm.shuffleReadMetrics.totalBytesRead,
-            tm.shuffleWriteMetrics.bytesWritten,
-            si.numTasks))
-        }
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val tm = e.taskMetrics
-          if (tm != null) {
-            val rt = tm.executorRunTime
-            taskStats.merge(e.stageId, (rt, rt, 1),
-              (a, b) => (math.max(a._1, b._1), a._2 + b._2, a._3 + b._3))
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      new StageLog(buf, taskStats, l)
-    }
-
-  def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse(sys.error("usage: ProbeQuery <query> [sfDir] [n]"))
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val n = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.local(cpus)
-    // partition-sizing experiments (SPARK_GRAFT_SHUFFLE_PARTITIONS):
-    // GraftSession.local sizes shuffle partitions = cores, which at
-    // beyond-fixture volumes can put a whole corpus shard's sort/agg
-    // state on one core's slice of the heap — a cluster sizes
-    // partitions independently of cores, and this knob probes that
-    // regime on the bench host (round 15: ta_quality_report at 10M
-    // docs OOMs 8g/32-wide, passes with more, smaller partitions)
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p.toInt))
-    // SPARK_GRAFT_CONF="k=v;k=v": arbitrary session-conf overrides for
-    // A/B probes (r20: objectHashAggregate fallback-threshold studies)
-    // without recompiling — probe-side only, never the library default.
+  /** Apply the `SPARK_GRAFT_CONF` overrides to `spark` — probe-side
+    * only, never the library default. */
+  def applyConfOverrides(spark: SparkSession): Unit =
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
         case _ =>
       }
     })
-    val fn = graft.SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query '$name' — keys: ${graft.SparkEntry.queries.keys.toSeq.sorted.take(10).mkString(", ")}…"))
-    val stageLog = attachStageLog(spark)
+
+  def main(args: Array[String]): Unit = {
+    val names = args.headOption.map(_.split(',').toSeq)
+      .getOrElse(sys.error("usage: ProbeQuery <query[,query...]> [sfDir] [n]"))
+    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val n = args.lift(2).map(_.toInt).getOrElse(4)
+    val fns = names.map(q => q -> SparkEntry.queries.getOrElse(q, sys.error(
+      s"unknown query '$q' — keys: ${SparkEntry.queries.keys.toSeq.sorted.take(10).mkString(", ")}…")))
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
+    applyConfOverrides(spark)
+    val stageLog = StageLog.attach(spark)
     val rt = Runtime.getRuntime
-    val times = (1 to n).map { i =>
-      val t0 = System.nanoTime()
-      graft.Bench.force(fn(spark, sfDir))
-      val s = (System.nanoTime() - t0) / 1e9
-      val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-      System.err.println(f"[probe] $name run $i: $s%7.3f s  heapMB=$heapMb%5d")
-      stageLog.foreach(_.dump(i))
-      s
+    fns.foreach { case (name, fn) =>
+      val times = (1 to n).map { i =>
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        Bench.force(df)
+        val s = (t1 - t0 + System.nanoTime() - t2) / 1e9
+        val planMs = (t2 - t0) / 1e6
+        val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+        val (jobs, stages, tasks) = stageLog.dump(name, i)
+        System.err.println(f"[probe] $name run $i: $s%7.3f s  plan=$planMs%.0fms " +
+          f"jobs=$jobs stages=$stages tasks=$tasks heapMB=$heapMb%5d")
+        s
+      }
+      GraftSession.releaseCaches(spark)
+      println(f"[probe] $name ${times.map(t => f"$t%.3f").mkString("/")} s " +
+        f"(cpus=$cpus heap=${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")})")
     }
-    stageLog.foreach(_.detach(spark))
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    println(f"[probe] $name ${times.map(t => f"$t%.3f").mkString("/")} s " +
-      f"(cpus=$cpus heap=${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")})")
+    stageLog.detach()
     spark.stop()
   }
 }

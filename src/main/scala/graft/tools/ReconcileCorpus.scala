@@ -101,8 +101,7 @@ object ReconcileCorpus {
     val n = args.lift(0).map(_.toInt).getOrElse(100)
     val workDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft_reconcile_corpus").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.local(cpus.toInt)
+    val spark = graft.GraftSession.local()
     val t0 = System.nanoTime()
     val rep = run(spark, workDir, n).orderBy("stage", "table")
     rep.show(100, truncate = false)

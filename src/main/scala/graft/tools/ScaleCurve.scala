@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One cold sample of one query for the scale-curve evidence table
   * (PLANS.md): a fresh JVM runs `SPARK_GRAFT_ONLY` against
   * `SPARK_GRAFT_SF_DIR` once and prints `query sf input_rows seconds`.
@@ -12,15 +10,8 @@ object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env("SPARK_GRAFT_SF_DIR")
     val name = sys.env("SPARK_GRAFT_ONLY")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.attach(spark)
     // input volume: rows of the table family the query reads
     val table = if (name.startsWith("ann_") || name.contains("semantic")
         || name.contains("embed")) "embeddings"

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftops.PlanApi
 import graft.{GraftSession, SparkEntry}
 
 /** Long-lived-session soak: run the ENTIRE declared query set several
@@ -138,11 +139,8 @@ object Soak {
       novel: Long)
 
   /** Cumulative executor CPU across completed stages. Per-tick deltas of
-    * this counter give each tick's CPU cost; stage-completed events are
-    * delivered async, so up to ~one tick of CPU can slide into the next
-    * tick's delta — harmless for the 100-tick window medians this feeds.
-    * CPU exists so the fresh/aged window compare can be read NET of host
-    * load (r18: corpus 1.37× / sub 0.62× wall windows were host regime,
+    * this counter give each tick's CPU cost. CPU exists so the fresh/aged
+    * window compare can be read NET of host load (r18: corpus 1.37× / sub 0.62× wall windows were host regime,
     * not engine state — per-window CPU makes that adjudication data
     * instead of argument). The GATE stays on wall (engineFlat unchanged):
     * wall regression is the user-visible symptom the soak polices. */
@@ -155,33 +153,16 @@ object Soak {
     }
   }
 
-  /** Poll the tally counter until it is stable for two consecutive
-    * 60 ms ticks (bounded at 1 s): stage-completed events are delivered
-    * async on the listener bus, so the counter read at a tick boundary
-    * can miss in-flight events of work that already finished. Same
-    * stable-size idea as ProbeQuery.drainBus, applied to the cumulative
-    * counter itself (CpuTally has no buffer to watch). Runs OUTSIDE the
-    * wall-clock measurement, so tick latency is unaffected. */
-  private def drainCpu(tally: CpuTally): Unit = {
-    var last = -1L; var stable = 0; var waited = 0
-    while (stable < 2 && waited < 1000) {
-      Thread.sleep(60); waited += 60
-      val n = tally.nanos.get()
-      if (n == last) stable += 1 else { stable = 0; last = n }
-    }
-  }
-
   /** Run `tick` for rel = 0 until ticks, recording wall + CPU per tick;
     * shared instrumentation shell of the three ingest loops. `afterTick`
     * runs between ticks (the compaction-cadence boundary work) with the
     * latency series so far; its CPU is excluded from tick deltas, the
-    * same exclusion the wall series applies. The counter is DRAINED
-    * (stable-poll, [[drainCpu]]) before each boundary read — both after
-    * the tick and after `afterTick` — so in-flight tick stages land in
-    * their own tick's delta and compaction stages are actually excluded
-    * rather than bleeding into the next tick (r19 advice: without the
-    * drains the exclusion was claimed, not delivered). Wall is measured
-    * before any drain, so the latency series carries no drain cost. */
+    * same exclusion the wall series applies. The listener bus is drained
+    * ([[PlanApi.drainListenerBus]]) before each boundary read — both
+    * after the tick and after `afterTick` — so every stage of a tick lands
+    * in its own tick's delta and compaction stages are excluded rather
+    * than bleeding into the next tick. Wall is measured before any drain,
+    * so the latency series carries no drain cost. */
   private def instrumentedTicks(spark: SparkSession, ticks: Int)(
       tick: Int => Unit)(
       afterTick: (Int, Seq[Double]) => Unit): (Seq[Double], Seq[Double]) = {
@@ -195,11 +176,11 @@ object Soak {
         val t0 = System.nanoTime()
         tick(rel)
         lat += (System.nanoTime() - t0) / 1e9
-        drainCpu(tally) // fold this tick's in-flight stages into ITS delta
+        PlanApi.drainListenerBus(spark.sparkContext) // this tick's stages into ITS delta
         val now = tally.nanos.get()
         cpu += (now - prev) / 1e9
         afterTick(rel, lat.toSeq)
-        drainCpu(tally) // boundary work (compactions) fully excluded
+        PlanApi.drainListenerBus(spark.sparkContext) // boundary work fully excluded
         prev = tally.nanos.get()
       }
       (lat.toSeq, cpu.toSeq)
@@ -364,19 +345,6 @@ object Soak {
     median(lat.slice(w, 2 * w))
   }
 
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.attach(s)
-    s
-  }
-
   /** Spawn `--component` in a FRESH child JVM and parse its window.
     * The child gets the same module-opens the build gives every forked
     * JVM (build.sbt `jdk17AddOpens` — Spark 4 on JDK 17 needs them when
@@ -435,7 +403,7 @@ object Soak {
     val base = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory(s"graft_soak_comp_$kind").toString)
     val offset = args.lift(3).map(_.toLong).getOrElse(0L)
-    val spark = buildSession()
+    val spark = GraftSession.local()
     val r = kind match {
       case "corpus" => runCorpusLoop(spark, base, ticks, offset, s"soak-$kind")
       case "sem"    => runSemLoop(spark, base, ticks, offset, s"soak-$kind")
@@ -458,7 +426,7 @@ object Soak {
     val corpusTicks = args.lift(2).map(_.toInt).getOrElse(500)
     val semTicks = args.lift(3).map(_.toInt).getOrElse(300)
     val subTicks = args.lift(4).map(_.toInt).getOrElse(300)
-    val spark = buildSession()
+    val spark = GraftSession.local()
     val rt = Runtime.getRuntime
     val totals = (1 to passes).map { pass =>
       var worst = ("", 0.0)
@@ -470,8 +438,7 @@ object Soak {
         graft.Bench.force(fn(spark, sfDir))
         val dt = (System.nanoTime() - q0) / 1e9
         if (dt > worst._2) worst = (name, dt)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        GraftSession.releaseCaches(spark)
       }
       val total = (System.nanoTime() - t0) / 1e9
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)

@@ -23,9 +23,9 @@ object TrainProbe {
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val nlist = args.lift(2).map(_.toInt).getOrElse(16)
     val n = args.lift(3).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local()
     val emb = graft.Tables(spark, sfDir, "embeddings")
+    val stage = StageLog.attach(spark)
     val rt = Runtime.getRuntime
     (1 to n).foreach { i =>
       val t0 = System.nanoTime()
@@ -35,11 +35,13 @@ object TrainProbe {
       graft.Bench.force(out)
       val s = (System.nanoTime() - t0) / 1e9
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+      stage.dump(s"train:iters=$iters", i)
       System.err.println(f"[train-probe] iters=$iters nlist=$nlist run $i: $s%8.3f s heapMB=$heapMb%5d")
       // ivfTopK persists its normalized corpus per call — release between
       // runs so run 2 measures a warm ENGINE, not an accumulating cache
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      graft.GraftSession.releaseCaches(spark)
     }
+    stage.detach()
     spark.stop()
   }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils, SparkSession => CSparkSession}
 
-/** Bridge into the `private[sql]` plan constructor so custom logical
-  * plans (graft.plans.AsOfJoin) can surface as DataFrames. Lives under
+/** Bridge into Spark's `private[sql]` / `private[spark]` API: the plan
+  * constructor so custom logical plans (graft.plans.AsOfJoin) can surface
+  * as DataFrames, and the listener bus drain. Lives under
   * `org.apache.spark.sql` for access; contains no logic. */
 object PlanApi {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -34,6 +35,12 @@ object PlanApi {
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until every listener event posted so far has reached every
+    * listener. Events travel on an async bus, so a count read right after
+    * an action can miss its tail; `listenerBus` is `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Test access to the private[sql] extension builders. */
   def plannerStrategiesOf(e: org.apache.spark.sql.SparkSessionExtensions,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.PlanApi
 
 class DedupSpec extends SparkSpec {
 
@@ -608,6 +609,8 @@ class DedupSpec extends SparkSpec {
         jobs.incrementAndGet(); ()
       }
     }
+    // an earlier test's late events must not reach the fresh listener
+    PlanApi.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
       val mh = Dedup.minhashNearDupPairs(docs(), "doc_id", "text", minJaccard = 0.5)
@@ -615,9 +618,9 @@ class DedupSpec extends SparkSpec {
       val em = Dedup.embeddingNearDupPairs(
         docs().select(col("doc_id"), array(lit(1.0), lit(0.5)).as("v")),
         "doc_id", "v", dim = 2)
-      // listener events are async — give any construction-time job time
-      // to surface before asserting none did
-      Thread.sleep(1500)
+      // listener events are async: deliver any construction-time job
+      // start before asserting none happened
+      PlanApi.drainListenerBus(sc)
       assert(jobs.get() === 0,
         "plan construction launched Spark jobs — the operators are no longer lazy")
       // and the frames still work when actually consumed

@@ -2,8 +2,8 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.plans.Compactor
-import org.apache.spark.SpecAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftops.PlanApi
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -38,9 +38,9 @@ class LakeFooterSchemaSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
     }
-    SpecAccess.drain(sc) // earlier jobs' events must not reach the listener
+    PlanApi.drainListenerBus(sc) // earlier jobs' events must not reach the listener
     sc.addSparkListener(listener)
-    try { body; SpecAccess.drain(sc) } finally sc.removeSparkListener(listener)
+    try { body; PlanApi.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
     seen.asScala.toSeq
   }
 

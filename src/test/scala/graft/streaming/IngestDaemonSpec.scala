@@ -84,7 +84,7 @@ class IngestDaemonSpec extends SparkSpec {
         val links = published.map(n => s"""<a href="$n">$n</a>""").mkString("\n")
         s"<html>$links</html>"
       }
-      val control = new IngestDaemon.DaemonControl
+      val control = new graft.DaemonControl
       var ticks = 0
       val results = IngestDaemon.run(spark, Seq(base), page,
         dl, lake, hist, intervalMillis = 50L, maxTicks = 3,
@@ -105,7 +105,7 @@ class IngestDaemonSpec extends SparkSpec {
         control = control, installShutdownHook = false)
       assert(none.isEmpty)
       // and stop() from another thread wakes a long inter-tick sleep fast
-      val c2 = new IngestDaemon.DaemonControl
+      val c2 = new graft.DaemonControl
       val t0 = System.nanoTime()
       val stopper = new Thread(() => { Thread.sleep(100); c2.stop() })
       stopper.start()

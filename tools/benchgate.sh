@@ -2,9 +2,8 @@
 # Bench regression GATE, two modes:
 #
 # 1) Re-run mode (default): re-run graft.Bench at the committed
-#    artifact's own config (sf dir, cpus, force mode — read from the
-#    artifact, so the compare is never force- or parallelism-
-#    incomparable) and benchdiff the fresh run against it. Exit 0 = no
+#    artifact's own config (sf dir and cpus — read from the artifact,
+#    so the compare is never parallelism-incomparable) and benchdiff the fresh run against it. Exit 0 = no
 #    regression; nonzero = a query regressed beyond threshold (or
 #    broke), with benchdiff's report naming it. This turns "a regressed
 #    query resurfaces as a bench mystery next round" into a one-command
@@ -22,10 +21,8 @@
 #    direction, printing the solo-probe adjudication command per
 #    flagged query. Round 15 shipped two same-HEAD sf0.1 artifacts 26%
 #    apart with three >2x per-query divergences and no adjudication;
-#    this mode makes that pair un-acceptable by construction. (Bench
-#    itself also stamps a "divergences" list into every artifact it
-#    writes over an existing same-config one — this mode is the
-#    offline check for artifact pairs that never met on disk.)
+#    this mode makes that pair un-acceptable by construction; it is
+#    the one divergence check (Bench does not compare artifacts).
 #
 #      tools/benchgate.sh --accept NEW.json [COMMITTED.json]
 #        COMMITTED.json: default bench_full.json
@@ -43,14 +40,13 @@ fi
 ART=${1:-bench_full.json}
 REPS=${2:-1}
 # one field per line: a path with spaces survives (r15 advice), unlike
-# the old whitespace-split `read -r SF CPUS FORCE <<< "$CFG"`
-{ IFS= read -r SF; IFS= read -r CPUS; IFS= read -r FORCE; } < <(
+# a whitespace-split `read -r SF CPUS <<< "$CFG"`
+{ IFS= read -r SF; IFS= read -r CPUS; } < <(
 python3 - "$ART" << 'EOF'
 import json, sys
 d = json.load(open(sys.argv[1]))
 print(d.get("sf", "/root/testdata/sf0.1"))
 print(d.get("cpus", "32"))
-print(d.get("force", "noop"))
 EOF
 )
 OUT=$(mktemp /tmp/graft_benchgate.XXXXXX.json)
@@ -58,14 +54,13 @@ LOG=$(mktemp /tmp/graft_benchgate.XXXXXX.log)
 # clean both on exit; the Bench-failure path below re-arms the trap to
 # RETAIN the log (that's the one case its contents matter — ADVICE r16)
 trap 'rm -f "$OUT" "$LOG"' EXIT
-echo "[benchgate] re-running Bench at sf=$SF cpus=$CPUS force=$FORCE reps=$REPS (log: $LOG)"
+echo "[benchgate] re-running Bench at sf=$SF cpus=$CPUS reps=$REPS (log: $LOG)"
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
-  SPARK_GRAFT_FORCE="$FORCE" SPARK_GRAFT_BENCH_REPS="$REPS" \
-  SPARK_GRAFT_BENCH_OUT="$OUT" \
+  SPARK_GRAFT_BENCH_REPS="$REPS" SPARK_GRAFT_BENCH_OUT="$OUT" \
   sbt -batch "runMain graft.Bench" > "$LOG" 2>&1 \
   || { trap 'rm -f "$OUT"' EXIT; echo "[benchgate] Bench run FAILED — tail of $LOG (retained):" >&2; tail -30 "$LOG" >&2; exit 1; }
 # retain the log through benchdiff too: a regression verdict is exactly
-# when the Bench stderr ([bench] divergence lines, [explode-width]
+# when the Bench stderr (per-query [bench] lines, [explode-width]
 # regime evidence) is needed for adjudication (ADVICE r17)
 trap 'rm -f "$OUT"' EXIT
 if python3 tools/benchdiff.py "$ART" "$OUT"; then

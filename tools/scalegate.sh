@@ -7,8 +7,9 @@
 #   tools/scalegate.sh name ...   # subset by manifest name
 #
 # Each manifest line runs in a fresh JVM (plain java — sbt locks and
-# breaks Soak-style children; see tools/scalecurve.sh) at 8 g / 32 cpus
-# with stage metrics on; logs land in scalegate_logs/<name>.log. A line
+# breaks Soak-style children; see tools/scalecurve.sh) at 8 g / 32 cpus;
+# every probe prints its per-run stage breakdown (tools/StageLog.scala),
+# and logs land in scalegate_logs/<name>.log. A line
 # FAILS when its rc/pattern expectation breaks or its cold run exceeds
 # the (generous, ~2x quiet-host) envelope. Corpora are bootstrapped on
 # first use:
@@ -58,13 +59,13 @@ while IFS='|' read -r name tool corpus args expect maxcold; do
   log="scalegate_logs/$name.log"
   start=$(date +%s)
   case "$tool" in
-    probe) SPARK_GRAFT_CPUS=32 SPARK_GRAFT_STAGE_METRICS=1 \
+    probe) SPARK_GRAFT_CPUS=32 \
       timeout 7200 $JAVA graft.tools.ProbeQuery $args "$dir" 2 > "$log" 2>&1 ;;
-    media) SPARK_GRAFT_CPUS=32 SPARK_GRAFT_STAGE_METRICS=1 \
+    media) SPARK_GRAFT_CPUS=32 \
       timeout 7200 $JAVA graft.tools.MediaProbe $args "$dir" 2 > "$log" 2>&1 ;;
-    train) SPARK_GRAFT_CPUS=32 SPARK_GRAFT_STAGE_METRICS=1 \
+    train) SPARK_GRAFT_CPUS=32 \
       timeout 7200 $JAVA graft.tools.TrainProbe $args > "$log" 2>&1 ;;
-    ewma)  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_STAGE_METRICS=1 \
+    ewma)  SPARK_GRAFT_CPUS=32 \
       timeout 7200 $JAVA graft.tools.EwmaProbe $args > "$log" 2>&1 ;;
     *) echo "[scalegate] $name: unknown tool '$tool'" >&2; fail=$((fail+1)); failed="$failed $name"; continue ;;
   esac
