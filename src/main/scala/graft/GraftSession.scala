@@ -216,20 +216,29 @@ object GraftSession {
 
   /** Local session for specs, tools and the mains: `cores` local threads
     * and as many shuffle partitions. Every session the engine builds for
-    * itself comes from here. */
+    * itself comes from here; a live session is handed back as it is. */
   def local(cores: Int = defaultCores, tz: String = "UTC"): SparkSession = {
-    val s = tune(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores.toString)
-        .config("spark.sql.session.timeZone", tz)
-        // static conf: managed-table writes (bucketing tests) land in tmp
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", tz)
+      .config("spark.ui.enabled", "false")
+    // static conf, read only when a session is built: managed-table
+    // writes (bucketing tests) land in this JVM's one warehouse dir
+    val live = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .exists(!_.sparkContext.isStopped)
+    if (!live) b.config("spark.sql.warehouse.dir", warehouseDir)
+    val s = tune(b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     attach(s)
+  }
+
+  /** One temp warehouse dir per JVM, made when [[local]] first builds a
+    * session and deleted when the JVM exits. */
+  private lazy val warehouseDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.toString
   }
 
   /** Drop every block a query left behind, at both layers: catalog caches

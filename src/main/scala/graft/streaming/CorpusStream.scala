@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.operators.Dedup
 
 /** Streaming corpus ingestion with near-dup gating — the per-arrival
@@ -33,31 +32,10 @@ import graft.operators.Dedup
   * corpus on compaction cadence instead — the same split the reference
   * uses between its ingest loop and its compactor.
   *
-  * == Delivery: exactly-once at batch granularity ==
-  *
-  * foreachBatch is at-least-once, and the tick writes TWO tables (three
-  * with `statsDir`, all under the same protocol) — so a
-  * naive append pair leaves a crashed-and-replayed batch half-committed
-  * (docs in the corpus invisible to the index, or re-appended twice).
-  * [[ingestBatch]] instead commits idempotently on the foreachBatch
-  * `batchId`:
-  *
-  *  - every batch's files publish under deterministic batch-prefixed
-  *    names (`batch<id>-part-…`), staged in a hidden `_tmp` dir first;
-  *  - a replay of a FULLY committed batch (its marker file under
-  *    `<corpusDir>/_graft_commits/` exists) is skipped outright;
-  *  - a replay of a PARTIALLY published batch first deletes that batch's
-  *    files from BOTH tables (rolling the tables back to the pre-batch
-  *    state — critical: without the rollback, the batch's own orphaned
-  *    index rows would flag its docs as dups and the docs would be lost),
-  *    then recomputes and republishes; the dedup pipeline is
-  *    deterministic, so the republish is byte-equivalent;
-  *  - the commit marker is a single atomic file create, written last.
-  *
-  * Remaining window (documented, not hidden): a concurrent reader
-  * between the two publishes can see a doc in the corpus whose signature
-  * is not yet in the index — bounded by one tick and healed by the
-  * commit; the writer side is single-daemon by contract.
+  * Delivery is exactly-once at batch granularity via the shared
+  * [[BatchCommit.tick]] (batch-prefixed publishes, rollback of a
+  * partial publish before the index probe, atomic marker under
+  * `<corpusDir>/_graft_commits/`); the argument is on [[BatchCommit]].
   */
 object CorpusStream {
 
@@ -68,22 +46,13 @@ object CorpusStream {
       minAgree: Double = 0.8,
       statsDir: Option[String] = None,
       statsDepth: Int = 4, statsWidth: Int = 512,
-      statsHllP: Int = 12): StreamingQuery = {
-    // explicit Unit-typed function pins the Scala overload of
-    // foreachBatch (the Java VoidFunction2 alternative makes an inline
-    // lambda ambiguous)
-    val tick: (DataFrame, Long) => Unit = (batch, batchId) => {
+      statsHllP: Int = 12): StreamingQuery =
+    BatchCommit.start(docs, checkpointDir) { (batch, batchId) =>
       ingestBatch(spark, batch, idCol, textCol, corpusDir, sigDir,
-        shingleLen, numHashes, bands, minAgree, batchId = Some(batchId),
+        shingleLen, numHashes, bands, minAgree, batchId = batchId,
         statsDir = statsDir, statsDepth = statsDepth, statsWidth = statsWidth,
         statsHllP = statsHllP)
-      ()
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(tick)
-      .start()
-  }
 
   /** Fold the accumulated per-batch partial sketches into the
     * whole-corpus count-min sketch — the read side of streaming
@@ -156,16 +125,9 @@ object CorpusStream {
           lit(math.pow(2.0, x)) / col("denom").cast("double"))
   }
 
-  // commit-protocol primitives live in [[BatchCommit]] (shared with the
-  // embedding-gated [[SemanticCorpusStream]])
-  import BatchCommit.{commitMarker, publish, rollback}
-
   /** One tick of the ingest loop (factored out so batch jobs and tests
-    * can drive it directly). Returns the number of novel docs kept.
-    *
-    * `batchId = Some(id)` (what [[start]] always passes) turns on the
-    * idempotent-commit protocol documented on the object; `None` is the
-    * plain-append path for ad-hoc batch use, with no replay protection.
+    * can drive it directly), committed exactly once on `batchId` by
+    * [[BatchCommit.tick]]. Returns the number of novel docs kept.
     *
     * Per-tick cost and hygiene: the batch is shingled and minhashed
     * exactly ONCE (`batchSig` feeds the index probe, the verify pass AND
@@ -179,99 +141,68 @@ object CorpusStream {
   def ingestBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, corpusDir: String, sigDir: String,
       shingleLen: Int, numHashes: Int, bands: Int,
-      minAgree: Double, batchId: Option[Long] = None,
+      minAgree: Double, batchId: Long,
       statsDir: Option[String] = None,
       statsDepth: Int = 4, statsWidth: Int = 512,
       statsHllP: Int = 12): Long = {
     if (batch.isEmpty) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    // this FS serves only the commit marker, which lives under corpusDir;
-    // rollback/publish resolve a FileSystem per target dir
-    val fs = new Path(corpusDir).getFileSystem(conf)
-    batchId.foreach { bid =>
-      if (fs.exists(commitMarker(corpusDir, bid))) return 0L // committed replay
-      // partial-publish rollback BEFORE the index probe: the batch's own
-      // orphaned signature rows would otherwise gate its docs out
-      rollback(conf, sigDir, bid)
-      rollback(conf, corpusDir, bid)
-      statsDir.foreach { sd =>
-        rollback(conf, s"$sd/cm", bid)
-        rollback(conf, s"$sd/hll", bid)
-      }
-    }
-    // null-text docs carry no content identity: keep one row per id
-    // (never collapse distinct docs on a shared null hash) and skip the
-    // signature machinery — they pass to the corpus for review but never
-    // enter the index
-    val deduped = Dedup.exactDedup(batch.filter(col(textCol).isNotNull), idCol, textCol)
-      .unionByName(batch.filter(col(textCol).isNull).dropDuplicates(idCol))
-    val (batchSig0, posts) = Dedup.minhashSignatureWithPosts(
-      deduped, idCol, textCol, shingleLen, numHashes)
-    val batchSig = batchSig0.persist()
-    val index = try Some(spark.read.parquet(sigDir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val novel = (index match {
-      case Some(sig) =>
-        val dupIds = Dedup.incrementalNearDupFromSig(batchSig, sig, idCol,
-            numHashes, bands, minAgree)
-          .select(col("batch_id").as(idCol)).distinct()
-        deduped.join(dupIds, Seq(idCol), "left_anti")
-      case None => deduped
-    // cache: novel feeds the corpus append, the signature append and
-    // the count; without it the index probe would run three times
-    }).persist()
-    try {
-      val n = novel.count()
-      if (n > 0) {
-        val novelSig = batchSig.join(novel.select(col(idCol)), Seq(idCol), "left_semi")
-        // streaming statistics maintenance: each tick appends the NOVEL
-        // docs' partial count-min sketch AND HLL register partial (both
-        // fixed-grid, corpus-size-independent) under the same batch-
-        // prefixed commit protocol — readers fold partials
-        // ([[readTokenStats]]/[[readTokenCardinality]]) and never rescan
-        // the corpus. HLL merge is idempotent max, so even a re-published
-        // partial could never inflate the cardinality.
-        val batchStats = statsDir.map { sd =>
-          val toks = novel.select(explode(split(
-            graft.operators.TextAnalysis.normalize(col(textCol)), " ")).as("tok"))
-            .filter(length(col("tok")) > 0)
-          (sd,
-            graft.operators.TextSketches.countMinSketch(novel, textCol,
-              statsDepth, statsWidth),
+    val statsDirs = statsDir.toSeq.flatMap(sd => Seq(s"$sd/cm", s"$sd/hll"))
+    BatchCommit.tick(spark.sparkContext.hadoopConfiguration, corpusDir,
+        batchId, Seq(sigDir, corpusDir) ++ statsDirs) { publish =>
+      // null-text docs carry no content identity: keep one row per id
+      // (never collapse distinct docs on a shared null hash) and skip the
+      // signature machinery — they pass to the corpus for review but never
+      // enter the index
+      val deduped = Dedup.exactDedup(batch.filter(col(textCol).isNotNull), idCol, textCol)
+        .unionByName(batch.filter(col(textCol).isNull).dropDuplicates(idCol))
+      val (batchSig0, posts) = Dedup.minhashSignatureWithPosts(
+        deduped, idCol, textCol, shingleLen, numHashes)
+      val batchSig = batchSig0.persist()
+      val index = try Some(spark.read.parquet(sigDir))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      val novel = (index match {
+        case Some(sig) =>
+          val dupIds = Dedup.incrementalNearDupFromSig(batchSig, sig, idCol,
+              numHashes, bands, minAgree)
+            .select(col("batch_id").as(idCol)).distinct()
+          deduped.join(dupIds, Seq(idCol), "left_anti")
+        case None => deduped
+      // cache: novel feeds the corpus append, the signature append and
+      // the count; without it the index probe would run three times
+      }).persist()
+      try {
+        val n = novel.count()
+        if (n > 0) {
+          publish(novel, corpusDir)
+          publish(batchSig.join(novel.select(col(idCol)), Seq(idCol), "left_semi"),
+            sigDir)
+          // streaming statistics maintenance: each tick appends the NOVEL
+          // docs' partial count-min sketch AND HLL register partial (both
+          // fixed-grid, corpus-size-independent) under the same batch-
+          // prefixed commit protocol — readers fold partials
+          // ([[readTokenStats]]/[[readTokenCardinality]]) and never rescan
+          // the corpus. HLL merge is idempotent max, so even a re-published
+          // partial could never inflate the cardinality.
+          statsDir.foreach { sd =>
+            val toks = novel.select(explode(split(
+              graft.operators.TextAnalysis.normalize(col(textCol)), " ")).as("tok"))
+              .filter(length(col("tok")) > 0)
+            publish(graft.operators.TextSketches.countMinSketch(novel, textCol,
+              statsDepth, statsWidth), s"$sd/cm")
             // stamp the partial with its p: readTokenCardinality refuses
             // to max-merge partials written at different statsHllP
-            graft.operators.TextSketches.hllRegisters(toks, col("tok"), statsHllP)
-              .withColumn("p", lit(statsHllP)))
+            publish(graft.operators.TextSketches.hllRegisters(toks, col("tok"), statsHllP)
+              .withColumn("p", lit(statsHllP)), s"$sd/hll")
+          }
         }
-        batchId match {
-          case Some(bid) =>
-            publish(conf, novel, corpusDir, bid)
-            publish(conf, novelSig, sigDir, bid)
-            batchStats.foreach { case (sd, cm, hll) =>
-              publish(conf, cm, s"$sd/cm", bid)
-              publish(conf, hll, s"$sd/hll", bid)
-            }
-          case None =>
-            novel.write.mode("append").parquet(corpusDir)
-            novelSig.write.mode("append").parquet(sigDir)
-            batchStats.foreach { case (sd, cm, hll) =>
-              cm.write.mode("append").parquet(s"$sd/cm")
-              hll.write.mode("append").parquet(s"$sd/hll")
-            }
-        }
+        n
+      } finally {
+        // release exactly this tick's persists; co-resident session caches
+        // are untouched
+        novel.unpersist(blocking = false)
+        batchSig.unpersist(blocking = false)
+        posts.unpersist(blocking = false)
       }
-      batchId.foreach { bid =>
-        val marker = commitMarker(corpusDir, bid)
-        fs.mkdirs(marker.getParent)
-        fs.createNewFile(marker) // atomic create = the commit point
-      }
-      n
-    } finally {
-      // release exactly this tick's persists; co-resident session caches
-      // are untouched
-      novel.unpersist(blocking = false)
-      batchSig.unpersist(blocking = false)
-      posts.unpersist(blocking = false)
     }
   }
 }

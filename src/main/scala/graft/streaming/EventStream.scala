@@ -73,11 +73,22 @@ object EventStream {
     * batch volume must fit an executor, which gap sessionization data
     * does by construction at sane trigger intervals. */
   def streamingSessionize(events: Dataset[Ev], gapSeconds: Long,
-      idleTimeout: Option[String] = None): Dataset[SessOut] = {
-    import events.sparkSession.implicits._
-    val timeoutConf =
+      idleTimeout: Option[String] = None): Dataset[SessOut] =
+    sessionFold(events, gapSeconds,
       if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
+      else GroupStateTimeout.NoTimeout()) { (state, _) =>
+      idleTimeout.foreach(state.setTimeoutDuration)
+    }
+
+  /** The per-key gap fold of [[streamingSessionize]] and
+    * [[streamingSessionizeEventTime]]: a timed-out key drops its state;
+    * otherwise the key's rows fold in (ts, event_id) order against the
+    * stored (last event µs, session counter), the state is updated, and
+    * `expire` arms the state's timeout from the new last event time. */
+  private def sessionFold(events: Dataset[Ev], gapSeconds: Long,
+      timeoutConf: GroupStateTimeout)(
+      expire: (GroupState[SessState], Long) => Unit): Dataset[SessOut] = {
+    import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessState, SessOut](
@@ -98,14 +109,19 @@ object EventStream {
               val tsMicros = micros(r.ts)
               if (lastTs == Long.MinValue || tsMicros - lastTs > gapSeconds * 1000000L)
                 n += 1
-              // max (same guard as the event-time form): a cross-batch
-              // out-of-order row joins the open session without rewinding
-              // the session clock; identity for in-order input
+              // max, never assignment: an accepted late or cross-batch
+              // out-of-order row (older than the state's latest event)
+              // joins the open session (negative delta above) without
+              // REWINDING the session clock — otherwise a subsequent event
+              // within gap of the true latest would be misnumbered into a
+              // spurious new session, and an event-time timeout would
+              // shrink so state could expire before trueLast + gap;
+              // identity for in-order input
               lastTs = math.max(lastTs, tsMicros)
               SessOut(uid, r.event_id, r.ts, n)
             }
             state.update(SessState(lastTs, n))
-            idleTimeout.foreach(state.setTimeoutDuration)
+            expire(state, lastTs)
             out.iterator
           }
       }
@@ -133,44 +149,13 @@ object EventStream {
     * by PRIOR batches never reach the fold (StreamingSpec asserts both
     * sides). */
   def streamingSessionizeEventTime(events: Dataset[Ev], gapSeconds: Long,
-      lateness: String): Dataset[SessOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var (lastTs, n) = state.getOption
-              .map(s => (s.lastTsMicros, s.sessionN)).getOrElse((Long.MinValue, 0L))
-            def micros(t: java.sql.Timestamp): Long =
-              Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-            val out = rows.toSeq.sortBy(r => (micros(r.ts), r.event_id)).map { r =>
-              val tsMicros = micros(r.ts)
-              if (lastTs == Long.MinValue || tsMicros - lastTs > gapSeconds * 1000000L)
-                n += 1
-              // max, never assignment: an accepted late row (>= watermark
-              // but older than the state's latest event) joins the open
-              // session (negative delta above) without REWINDING the
-              // session clock — otherwise a subsequent event within gap of
-              // the true latest would be misnumbered into a spurious new
-              // session, and the event-time timeout below would shrink so
-              // state could expire before trueLast + gap
-              lastTs = math.max(lastTs, tsMicros)
-              SessOut(uid, r.event_id, r.ts, n)
-            }
-            state.update(SessState(lastTs, n))
-            // expire once the watermark proves the gap elapsed — event-time
-            // state bound; ms precision is what the timeout API offers
-            state.setTimeoutTimestamp(lastTs / 1000L + gapSeconds * 1000L)
-            out.iterator
-          }
-      }
-  }
+      lateness: String): Dataset[SessOut] =
+    sessionFold(events.withWatermark("ts", lateness), gapSeconds,
+      GroupStateTimeout.EventTimeTimeout()) { (state, lastTs) =>
+      // expire once the watermark proves the gap elapsed — event-time
+      // state bound; ms precision is what the timeout API offers
+      state.setTimeoutTimestamp(lastTs / 1000L + gapSeconds * 1000L)
+    }
 
   final case class BufEv(micros: Long, eventId: Long)
   final case class SessBufState(pending: Seq[BufEv], lastTsMicros: Long, sessionN: Long)

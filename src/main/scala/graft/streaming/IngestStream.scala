@@ -23,33 +23,34 @@ object IngestStream {
       historyRoot: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val history = HistoryTable.processed(spark, historyRoot)
-    val files = spark.readStream
+    val files = landingFiles(spark, landingDir, "*.{csv,CSV,zip,ZIP}")
+      .select(col("path"), col("length"))
+    BatchCommit.start(files, checkpoint, trigger) { (batch, batchId) =>
+      val fresh = history.filterNew(batch, "path")
+        .select("path", "length").collect()
+      if (fresh.nonEmpty) {
+        val paths = fresh.map(_.getString(0)).toIndexedSeq
+        NemCsv.splitToLake(spark, paths, lakeRoot)
+        val now = new java.sql.Timestamp(System.currentTimeMillis())
+        import spark.implicits._
+        history.add(
+          fresh.toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
+            .toDF("filename", "size_bytes")
+            .withColumn("processed_at", lit(now))
+            .withColumn("batch_id", lit(batchId)))
+      }
+    }
+  }
+
+  /** Files landing in `dir` whose names match `glob`, as a `binaryFile`
+    * stream — the discovery source of this loop and [[MediaStream]]. */
+  private[streaming] def landingFiles(spark: SparkSession, dir: String,
+      glob: String): DataFrame =
+    spark.readStream
       .format("binaryFile")
       // streaming sources need an explicit schema; this is binaryFile's
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
-      .option("pathGlobFilter", "*.{csv,CSV,zip,ZIP}")
-      .load(landingDir)
-      .select(col("path"), col("length"))
-    files.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = history.filterNew(batch, "path")
-          .select("path", "length").collect()
-        if (fresh.nonEmpty) {
-          val paths = fresh.map(_.getString(0)).toIndexedSeq
-          NemCsv.splitToLake(spark, paths, lakeRoot)
-          val now = new java.sql.Timestamp(System.currentTimeMillis())
-          import spark.implicits._
-          history.add(
-            fresh.toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
-              .toDF("filename", "size_bytes")
-              .withColumn("processed_at", lit(now))
-              .withColumn("batch_id", lit(batchId)))
-        }
-        ()
-      }
-      .start()
-  }
+      .option("pathGlobFilter", glob)
+      .load(dir)
 }

@@ -25,7 +25,7 @@ import graft.multimodal.Multimodal
   *    idempotent: committed replays no-op on the marker, partial
   *    publishes roll back before the deterministic republish — a crash
   *    between the parquet append and the checkpoint commit cannot
-  *    duplicate lake rows (same argument as [[CorpusStream]]).
+  *    duplicate lake rows.
   *
   * `AvailableNow` drains the backlog and stops; production cadence is a
   * ProcessingTime trigger, same contract as the reference's daemon. */
@@ -47,36 +47,30 @@ object MediaStream {
   private def partDir(lakeDir: String, modality: String) =
     s"$lakeDir/modality=$modality"
 
-  /** One routed, committed batch — the [[BatchCommit]] tick. Routed rows
-    * publish per modality partition under batch-prefixed names; the
-    * marker under `lakeDir/_graft_commits` is the commit point. Returns
-    * rows ingested (0 for a committed replay). Deterministic given
-    * (batch, batchId), which is what makes the republish byte-safe. */
-  def ingestBatch(batch: DataFrame, lakeDir: String, batchId: Long): Long = {
-    import BatchCommit.{commitMarker, publish, rollback}
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(lakeDir).getFileSystem(conf)
-    if (fs.exists(commitMarker(lakeDir, batchId))) return 0L // committed replay
-    Modalities.foreach(m => rollback(conf, partDir(lakeDir, m), batchId))
-    val routed = Multimodal.routeModality(batch, "content")
-      .withColumn("digest", md5(col("content")))
-      .select("path", "length", "modality", "width", "height",
-        "n_frames", "sample_rate", "n_samples", "digest")
-      .persist()
-    try {
-      val n = routed.count()
-      val present = routed.select("modality").distinct().collect().map(_.getString(0))
-      present.foreach { m =>
-        publish(conf, routed.filter(col("modality") === m).drop("modality"),
-          partDir(lakeDir, m), batchId)
-      }
-      val marker = commitMarker(lakeDir, batchId)
-      fs.mkdirs(marker.getParent)
-      fs.createNewFile(marker) // atomic create = the commit point
-      n
-    } finally routed.unpersist(blocking = false) // this tick's cache only
-  }
+  /** One routed, committed batch — a [[BatchCommit.tick]] that rolls
+    * back every modality partition. Routed rows publish per modality
+    * partition under batch-prefixed names; the marker under
+    * `lakeDir/_graft_commits` is the commit point. Returns rows ingested
+    * (0 for a committed replay). Deterministic given (batch, batchId),
+    * which is what makes the republish byte-safe. */
+  def ingestBatch(batch: DataFrame, lakeDir: String, batchId: Long): Long =
+    BatchCommit.tick(batch.sparkSession.sparkContext.hadoopConfiguration,
+        lakeDir, batchId, Modalities.map(partDir(lakeDir, _))) { publish =>
+      val routed = Multimodal.routeModality(batch, "content")
+        .withColumn("digest", md5(col("content")))
+        .select("path", "length", "modality", "width", "height",
+          "n_frames", "sample_rate", "n_samples", "digest")
+        .persist()
+      try {
+        val n = routed.count()
+        val present = routed.select("modality").distinct().collect().map(_.getString(0))
+        present.foreach { m =>
+          publish(routed.filter(col("modality") === m).drop("modality"),
+            partDir(lakeDir, m))
+        }
+        n
+      } finally routed.unpersist(blocking = false) // this tick's cache only
+    }
 
   /** NOTE on `maxBytes`: the length predicate pushes into the binaryFile
     * scan, so oversize content is never read — but the source still
@@ -88,22 +82,10 @@ object MediaStream {
       checkpoint: String, glob: String = DefaultGlob,
       maxBytes: Long = 256L * 1024 * 1024,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .format("binaryFile")
-      // streaming sources need an explicit schema; this is binaryFile's
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
-      .option("pathGlobFilter", glob)
-      .load(landingDir)
-      .filter(col("length") <= maxBytes)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, lakeDir, batchId)
-        ()
-      }
-      .start()
+    BatchCommit.start(
+      IngestStream.landingFiles(spark, landingDir, glob)
+        .filter(col("length") <= maxBytes),
+      checkpoint, trigger)((batch, batchId) => ingestBatch(batch, lakeDir, batchId))
 
   /** The skip set [[start]]'s `maxBytes` guard excludes, from listing
     * metadata only (no content read): (path, length) of every landing

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.hadoop.fs.Path
 import graft.operators.Dedup
 
 /** Streaming corpus ingestion gated by SEMANTIC near-duplication — the
@@ -27,34 +26,23 @@ import graft.operators.Dedup
   * the same null-never-matches rule as the text loops.
   *
   * Delivery is exactly-once at batch granularity via the shared
-  * [[BatchCommit]] protocol (batch-prefixed publishes, partial-publish
-  * rollback, atomic marker — see [[CorpusStream]]'s object doc for the
-  * full argument; the index-orphan hazard is identical: a replayed
-  * batch's own index rows would gate its docs out without the
-  * rollback-first order). */
+  * [[BatchCommit.tick]] (argument on [[BatchCommit]]); it rolls back
+  * the cell index and the corpus before the probe, because a replayed
+  * batch's own index rows would otherwise gate its docs out. */
 object SemanticCorpusStream {
 
   def start(spark: SparkSession, docs: DataFrame, idCol: String,
       vecCol: String, corpusDir: String, idxDir: String,
       checkpointDir: String, centroids: Seq[Array[Double]],
-      minCosine: Double, nprobe: Int = 2): StreamingQuery = {
-    val tick: (DataFrame, Long) => Unit = (batch, batchId) => {
+      minCosine: Double, nprobe: Int = 2): StreamingQuery =
+    BatchCommit.start(docs, checkpointDir) { (batch, batchId) =>
       ingestBatch(spark, batch, idCol, vecCol, corpusDir, idxDir,
-        centroids, minCosine, nprobe, batchId = Some(batchId))
-      ()
+        centroids, minCosine, nprobe, batchId = batchId)
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(tick)
-      .start()
-  }
-
-  import BatchCommit.{commitMarker, publish, rollback}
 
   /** One tick of the semantic ingest loop (factored out so batch jobs
-    * and tests drive it directly). Returns the number of novel docs
-    * kept. `batchId = Some(id)` enables the idempotent-commit protocol;
-    * `None` is the plain-append path.
+    * and tests drive it directly), committed exactly once on `batchId`
+    * by [[BatchCommit.tick]]. Returns the number of novel docs kept.
     *
     * Hygiene mirrors [[CorpusStream.ingestBatch]]: the tick persists
     * only the novel frame (it feeds the corpus append, the index append
@@ -62,49 +50,31 @@ object SemanticCorpusStream {
   def ingestBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, corpusDir: String, idxDir: String,
       centroids: Seq[Array[Double]], minCosine: Double,
-      nprobe: Int = 2, batchId: Option[Long] = None): Long = {
+      nprobe: Int = 2, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(corpusDir).getFileSystem(conf)
-    batchId.foreach { bid =>
-      if (fs.exists(commitMarker(corpusDir, bid))) return 0L // committed replay
-      // rollback BEFORE the index probe — the batch's own orphaned index
-      // rows would otherwise gate its docs out
-      rollback(conf, idxDir, bid)
-      rollback(conf, corpusDir, bid)
-    }
-    val deduped = batch.dropDuplicates(idCol)
-    val withVec = deduped.filter(col(vecCol).isNotNull)
-    val index = try Some(spark.read.parquet(idxDir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val novel = (index match {
-      case Some(idx) =>
-        val dupIds = Dedup.incrementalSemanticDedup(withVec, idx,
-            idCol, vecCol, centroids, minCosine, nprobe)
-          .select(col("batch_id").as(idCol)).distinct()
-        deduped.join(dupIds, Seq(idCol), "left_anti")
-      case None => deduped
-    }).persist()
-    try {
-      val n = novel.count()
-      if (n > 0) {
-        val novelIdx = Dedup.semanticIndex(
-          novel.filter(col(vecCol).isNotNull), idCol, vecCol, centroids)
-        batchId match {
-          case Some(bid) =>
-            publish(conf, novel, corpusDir, bid)
-            publish(conf, novelIdx, idxDir, bid)
-          case None =>
-            novel.write.mode("append").parquet(corpusDir)
-            novelIdx.write.mode("append").parquet(idxDir)
+    BatchCommit.tick(spark.sparkContext.hadoopConfiguration, corpusDir,
+        batchId, Seq(idxDir, corpusDir)) { publish =>
+      val deduped = batch.dropDuplicates(idCol)
+      val withVec = deduped.filter(col(vecCol).isNotNull)
+      val index = try Some(spark.read.parquet(idxDir))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      val novel = (index match {
+        case Some(idx) =>
+          val dupIds = Dedup.incrementalSemanticDedup(withVec, idx,
+              idCol, vecCol, centroids, minCosine, nprobe)
+            .select(col("batch_id").as(idCol)).distinct()
+          deduped.join(dupIds, Seq(idCol), "left_anti")
+        case None => deduped
+      }).persist()
+      try {
+        val n = novel.count()
+        if (n > 0) {
+          publish(novel, corpusDir)
+          publish(Dedup.semanticIndex(
+            novel.filter(col(vecCol).isNotNull), idCol, vecCol, centroids), idxDir)
         }
-      }
-      batchId.foreach { bid =>
-        val marker = commitMarker(corpusDir, bid)
-        fs.mkdirs(marker.getParent)
-        fs.createNewFile(marker) // atomic create = the commit point
-      }
-      n
-    } finally novel.unpersist(blocking = false)
+        n
+      } finally novel.unpersist(blocking = false)
+    }
   }
 }

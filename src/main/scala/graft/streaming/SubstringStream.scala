@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.hadoop.fs.Path
 import graft.operators.Dedup
 
 /** Streaming corpus ingestion gated by EXACT SUBSTRING dedup — the
@@ -39,33 +38,23 @@ import graft.operators.Dedup
   * under any replay/overlap pattern — compactions stay plain rewrites.
   *
   * Delivery is exactly-once at batch granularity via the shared
-  * [[BatchCommit]] protocol (batch-prefixed publishes, partial-publish
-  * rollback, atomic marker). The index-orphan hazard is identical to
-  * the sibling loops: a replayed batch's own index rows would strip
-  * its docs to nothing without the rollback-first order. */
+  * [[BatchCommit.tick]] (argument on [[BatchCommit]]); it rolls back
+  * the key index and the corpus before the probe, because a replayed
+  * batch's own index rows would otherwise strip its docs to nothing. */
 object SubstringStream {
 
   def start(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, corpusDir: String, idxDir: String,
-      checkpointDir: String, windowWords: Int = 20): StreamingQuery = {
-    val tick: (DataFrame, Long) => Unit = (batch, batchId) => {
+      checkpointDir: String, windowWords: Int = 20): StreamingQuery =
+    BatchCommit.start(docs, checkpointDir) { (batch, batchId) =>
       ingestBatch(spark, batch, idCol, textCol, corpusDir, idxDir,
-        windowWords, batchId = Some(batchId))
-      ()
+        windowWords, batchId = batchId)
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(tick)
-      .start()
-  }
-
-  import BatchCommit.{commitMarker, publish, rollback}
 
   /** One tick of the substring ingest loop (factored out so batch jobs
-    * and tests drive it directly). Returns the number of docs kept
-    * (cleaned survivors + null-text pass-throughs). `batchId =
-    * Some(id)` enables the idempotent-commit protocol; `None` is the
-    * plain-append path.
+    * and tests drive it directly), committed exactly once on `batchId`
+    * by [[BatchCommit.tick]]. Returns the number of docs kept (cleaned
+    * survivors + null-text pass-throughs).
     *
     * Hygiene mirrors the sibling loops: the tick persists exactly one
     * doc-bounded frame — the kept frame (feeds the corpus append, the
@@ -76,82 +65,65 @@ object SubstringStream {
     * widening threshold. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, corpusDir: String, idxDir: String,
-      windowWords: Int = 20, batchId: Option[Long] = None): Long = {
+      windowWords: Int = 20, batchId: Long): Long = {
     if (batch.isEmpty) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(corpusDir).getFileSystem(conf)
-    batchId.foreach { bid =>
-      if (fs.exists(commitMarker(corpusDir, bid))) return 0L // committed replay
-      // rollback BEFORE the index probe — the batch's own orphaned keys
-      // would otherwise strip its docs to nothing
-      rollback(conf, idxDir, bid)
-      rollback(conf, corpusDir, bid)
-    }
-    val deduped = batch.dropDuplicates(idCol)
-    val withText = deduped.filter(col(textCol).isNotNull)
-    val nullText = deduped.filter(col(textCol).isNull)
-      .select(col(idCol), col(textCol).cast("string").as(textCol))
-    val index = (try Some(spark.read.parquet(idxDir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None })
-      .getOrElse { // first batch: probe an empty key frame, same path
-        import spark.implicits._
-        Seq.empty[String].toDF("wkey")
-      }
-    // ONE regime decision per tick: the probe below and the key-append
-    // joins in the publish block must agree on broadcast-vs-shuffle, so
-    // the width is derived once here (from the text batch) and threaded
-    // into both — deciding each independently could straddle the
-    // threshold within a single tick (result-identical, but two regimes
-    // in one tick complicates adjudication of its plan).
-    val tickWidth = graft.GraftSession.explodeWidth(withText, expansion = 16.0)
-    val cleaned = Dedup.incrementalSubstringDedup(
-      withText, index, idCol, textCol, windowWords, tickWidth)
-    // survivors keep their normalized uncovered reassembly; a fully
-    // covered doc (n_kept = 0) is a replay and drops whole. Every
-    // withText doc has a probe row — empty/whitespace text normalizes
-    // to one empty token (n_kept = 1, clean_text = ""), so token-less
-    // docs survive here; there is no silent-drop path to guard.
-    val kept = cleaned.filter(col("n_kept") > 0)
-      .select(col("id").as(idCol), col("clean_text").as(textCol))
-      .unionByName(nullText)
-      .persist()
-    try {
-      val n = kept.count()
-      if (n > 0) {
-        val keptKeys = Dedup.windowFingerprints(
-          kept.filter(col(textCol).isNotNull), idCol, textCol, windowWords,
-          tickWidth)
-        // novel keys only: probe-shaped anti (batch keys broadcast into
-        // one index scan; hits re-broadcast) keeps the index DISTINCT
-        // without ever shuffling it. Regime split is the tick-level
-        // decision above, shared with the probe: a corpus-sized
-        // backfill batch driven through this entry point would
-        // otherwise collect its whole key set to the driver
-        // (maxResultSize) — beyond fixture, degrade both joins to
-        // shuffle joins (the index shuffles once on wkey). Ingest-sized
-        // batches keep the two broadcasts; fixture plans byte-identical.
-        val maybeBcast: DataFrame => DataFrame =
-          if (tickWidth.isEmpty) broadcast else identity
-        val hitKeys = index.select(col("wkey"))
-          .join(maybeBcast(keptKeys), Seq("wkey"), "left_semi").distinct()
-        val novelKeys = keptKeys.join(maybeBcast(hitKeys), Seq("wkey"), "left_anti")
-        batchId match {
-          case Some(bid) =>
-            publish(conf, kept, corpusDir, bid)
-            publish(conf, novelKeys, idxDir, bid)
-          case None =>
-            kept.write.mode("append").parquet(corpusDir)
-            novelKeys.write.mode("append").parquet(idxDir)
+    BatchCommit.tick(spark.sparkContext.hadoopConfiguration, corpusDir,
+        batchId, Seq(idxDir, corpusDir)) { publish =>
+      val deduped = batch.dropDuplicates(idCol)
+      val withText = deduped.filter(col(textCol).isNotNull)
+      val nullText = deduped.filter(col(textCol).isNull)
+        .select(col(idCol), col(textCol).cast("string").as(textCol))
+      val index = (try Some(spark.read.parquet(idxDir))
+        catch { case _: org.apache.spark.sql.AnalysisException => None })
+        .getOrElse { // first batch: probe an empty key frame, same path
+          import spark.implicits._
+          Seq.empty[String].toDF("wkey")
         }
+      // ONE regime decision per tick: the probe below and the key-append
+      // joins in the publish block must agree on broadcast-vs-shuffle, so
+      // the width is derived once here (from the text batch) and threaded
+      // into both — deciding each independently could straddle the
+      // threshold within a single tick (result-identical, but two regimes
+      // in one tick complicates adjudication of its plan).
+      val tickWidth = graft.GraftSession.explodeWidth(withText, expansion = 16.0)
+      val cleaned = Dedup.incrementalSubstringDedup(
+        withText, index, idCol, textCol, windowWords, tickWidth)
+      // survivors keep their normalized uncovered reassembly; a fully
+      // covered doc (n_kept = 0) is a replay and drops whole. Every
+      // withText doc has a probe row — empty/whitespace text normalizes
+      // to one empty token (n_kept = 1, clean_text = ""), so token-less
+      // docs survive here; there is no silent-drop path to guard.
+      val kept = cleaned.filter(col("n_kept") > 0)
+        .select(col("id").as(idCol), col("clean_text").as(textCol))
+        .unionByName(nullText)
+        .persist()
+      try {
+        val n = kept.count()
+        if (n > 0) {
+          val keptKeys = Dedup.windowFingerprints(
+            kept.filter(col(textCol).isNotNull), idCol, textCol, windowWords,
+            tickWidth)
+          // novel keys only: probe-shaped anti (batch keys broadcast into
+          // one index scan; hits re-broadcast) keeps the index DISTINCT
+          // without ever shuffling it. Regime split is the tick-level
+          // decision above, shared with the probe: a corpus-sized
+          // backfill batch driven through this entry point would
+          // otherwise collect its whole key set to the driver
+          // (maxResultSize) — beyond fixture, degrade both joins to
+          // shuffle joins (the index shuffles once on wkey). Ingest-sized
+          // batches keep the two broadcasts; fixture plans byte-identical.
+          val maybeBcast: DataFrame => DataFrame =
+            if (tickWidth.isEmpty) broadcast else identity
+          val hitKeys = index.select(col("wkey"))
+            .join(maybeBcast(keptKeys), Seq("wkey"), "left_semi").distinct()
+          val novelKeys = keptKeys.join(maybeBcast(hitKeys), Seq("wkey"), "left_anti")
+          publish(kept, corpusDir)
+          publish(novelKeys, idxDir)
+        }
+        n
+      } finally {
+        kept.unpersist(blocking = false)
       }
-      batchId.foreach { bid =>
-        val marker = commitMarker(corpusDir, bid)
-        fs.mkdirs(marker.getParent)
-        fs.createNewFile(marker) // atomic create = the commit point
-      }
-      n
-    } finally {
-      kept.unpersist(blocking = false)
     }
   }
 }

@@ -154,7 +154,7 @@ object Soak {
   }
 
   /** Run `tick` for rel = 0 until ticks, recording wall + CPU per tick;
-    * shared instrumentation shell of the three ingest loops. `afterTick`
+    * the instrumentation shell of [[runLoop]]. `afterTick`
     * runs between ticks (the compaction-cadence boundary work) with the
     * latency series so far; its CPU is excluded from tick deltas, the
     * same exclusion the wall series applies. The listener bus is drained
@@ -187,97 +187,100 @@ object Soak {
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
-  /** MinHash-corpus ingest loop against dirs under `base`, `ticks`
-    * ticks starting at logical tick `offset` (batch ids, doc ids and
-    * planted text all shift with the offset, so a probe loop over an
-    * AGED base never replays a committed batch id and its docs are
-    * novel to the existing index). Compaction cadence is loop-relative.
-    * 8 docs per tick: 6 novel + 2 exact replays of the previous tick's
-    * docs, so the index probe gates something every tick. */
-  private[tools] def runCorpusLoop(spark: SparkSession, base: String,
-      ticks: Int, offset: Long, label: String): LoopResult = {
-    import spark.implicits._
-    val rt = Runtime.getRuntime
-    val corpusDir = s"$base/corpus"
-    val sigDir = s"$base/sig"
-    // stats maintenance ON: the soak must prove the per-tick partial-
-    // sketch append doesn't bend the flat-latency/flat-heap curves
-    val statsDir = s"$base/stats"
-    var heapEarly = 0L
-    var heapLate = 0L
-    var novel = 0L
-    val (lat, cpu) = instrumentedTicks(spark, ticks) { rel =>
-      val t = offset + rel
-      val docs = (0 until 8).map { i =>
-        val id = t * 8L + i
-        val txt = if (i >= 6 && t > 0) soakText(t - 1L, i - 6) else soakText(t, i)
-        (id, txt)
-      }.toDF("doc_id", "text")
-      novel += graft.streaming.CorpusStream.ingestBatch(spark, docs, "doc_id", "text",
-        corpusDir, sigDir, shingleLen = 3, numHashes = 16, bands = 4,
-        minAgree = 0.8, batchId = Some(t),
-        statsDir = Some(statsDir), statsDepth = 4, statsWidth = 64)
-    } { (rel, latSoFar) =>
-      if ((rel + 1) % 100 == 0) {
-        compactDir(spark, sigDir)
-        // stats partials compact on the same cadence, one sublayout at
-        // a time (cm: add-mergeable counts, hll: max-mergeable
-        // registers — both fold-preserving under a plain rewrite);
-        // without it the per-tick dir LISTING grows one file per batch
-        // (same filesystem artifact the sig compaction exists for)
-        compactDir(spark, s"$statsDir/cm")
-        compactDir(spark, s"$statsDir/hll")
-        System.gc()
-        val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-        if (rel + 1 == 100) heapEarly = heapMb
-        heapLate = heapMb
-        val last100 = latSoFar.takeRight(100)
-        println(f"[$label] ticks ${rel + 1}/$ticks median=${median(last100)}%.2fs max=${last100.max}%.2fs heapMB=$heapMb rdds=${spark.sparkContext.getPersistentRDDs.size}")
-      }
+  /** 8 docs for logical tick `t`: 6 novel + 2 exact replays, under
+    * fresh ids, of tick t−1's first two docs, so the index probe gates
+    * something every tick. The first tick's 2 "replays" reference tick
+    * t−1, absent from a fresh index AND from an aged index grown at a
+    * different offset, so every loop admits 8 + (ticks−1)·6 novel docs
+    * at ANY offset unless its index loses or duplicates rows. */
+  private def plantedDocs[A](t: Long)(gen: (Long, Int) => A): Seq[(Long, A)] =
+    (0 until 8).map { i =>
+      (t * 8L + i, if (i >= 6 && t > 0) gen(t - 1L, i - 6) else gen(t, i))
     }
-    // the accumulated partials must still fold to one fixed-grid sketch
-    // and a readable cardinality row
-    val statCells = graft.streaming.CorpusStream.readTokenStats(spark, statsDir).count()
-    val card = graft.streaming.CorpusStream.readTokenCardinality(spark, statsDir)
-      .collect().head
-    println(s"[$label] folded stats cells=$statCells (grid 4x64) " +
-      f"distinct_est=${card.getAs[Double]("est_raw")}%.0f")
-    LoopResult(lat, cpu, heapEarly, heapLate, novel)
+
+  /** One ingest loop of the soak over dirs under `base`: its tick (the
+    * novel docs admitted at logical tick t), the dirs it compacts on the
+    * 100-tick cadence, and a report printed after the last tick. */
+  private final case class IngestKind(tick: Long => Long,
+      compacted: Seq[String], report: String => Unit = _ => ())
+
+  private def ingestKind(spark: SparkSession, kind: String,
+      base: String): IngestKind = {
+    import spark.implicits._
+    val corpusDir = s"$base/corpus"
+    kind match {
+      case "corpus" =>
+        // MinHash gate; stats maintenance ON: the soak must prove the
+        // per-tick partial-sketch append doesn't bend the flat-latency/
+        // flat-heap curves. Stats partials compact on the index cadence
+        // (cm: add-mergeable counts, hll: max-mergeable registers — both
+        // fold-preserving under a plain rewrite)
+        val sigDir = s"$base/sig"
+        val statsDir = s"$base/stats"
+        IngestKind(
+          t => graft.streaming.CorpusStream.ingestBatch(spark,
+            plantedDocs(t)(soakText).toDF("doc_id", "text"), "doc_id", "text",
+            corpusDir, sigDir, shingleLen = 3, numHashes = 16, bands = 4,
+            minAgree = 0.8, batchId = t,
+            statsDir = Some(statsDir), statsDepth = 4, statsWidth = 64),
+          Seq(sigDir, s"$statsDir/cm", s"$statsDir/hll"),
+          label => {
+            // the accumulated partials must still fold to one fixed-grid
+            // sketch and a readable cardinality row
+            val statCells = graft.streaming.CorpusStream.readTokenStats(spark, statsDir).count()
+            val card = graft.streaming.CorpusStream.readTokenCardinality(spark, statsDir)
+              .collect().head
+            println(s"[$label] folded stats cells=$statCells (grid 4x64) " +
+              f"distinct_est=${card.getAs[Double]("est_raw")}%.0f")
+          })
+      case "sem" =>
+        // semantic-cell gate: the 2 planted EXACT vector replays must be
+        // gated every tick (cosine 1 ≥ minCosine). 4 fixed unit-ish
+        // centroids: enough cells that the index probe prunes, few
+        // enough that every cell keeps filling for the whole run
+        val idxDir = s"$base/idx"
+        val centroids = (0 until 4).map(c => soakVec(-1L - c, 0)).toSeq
+        IngestKind(
+          t => graft.streaming.SemanticCorpusStream.ingestBatch(spark,
+            plantedDocs(t)(soakVec).toDF("doc_id", "embedding"), "doc_id",
+            "embedding", corpusDir, idxDir, centroids, minCosine = 0.95,
+            nprobe = 2, batchId = t),
+          Seq(idxDir))
+      case "sub" =>
+        // window-fingerprint gate: a full-text replay is passage-complete
+        // (every token covered by an indexed window), so SubstringStream
+        // must drop it whole every tick
+        val idxDir = s"$base/winidx"
+        IngestKind(
+          t => graft.streaming.SubstringStream.ingestBatch(spark,
+            plantedDocs(t)(soakText).toDF("doc_id", "text"), "doc_id", "text",
+            corpusDir, idxDir, windowWords = 10, batchId = t),
+          Seq(idxDir))
+      case other => sys.error(s"unknown component '$other' (corpus|sem|sub)")
+    }
   }
 
-  /** Semantic-cell ingest loop against dirs under `base` — same offset
-    * contract as [[runCorpusLoop]]. 8 docs per tick: 6 novel vectors +
-    * 2 EXACT vector replays of the previous tick's docs under fresh
-    * ids — the cell-index probe must gate those 2 out every tick
-    * (cosine 1 ≥ minCosine). Novel-count expectation holds at ANY
-    * offset: the first tick's 2 "replays" reference tick offset−1,
-    * absent from a fresh index AND from an aged index grown at a
-    * different offset, so expected = 8 + (ticks−1)·6 either way. */
-  private[tools] def runSemLoop(spark: SparkSession, base: String,
+  /** Run ingest loop `kind` (corpus|sem|sub) against dirs under `base`,
+    * `ticks` ticks starting at logical tick `offset` (batch ids, doc ids
+    * and planted docs all shift with the offset, so a probe loop over an
+    * AGED base never replays a committed batch id and its docs are novel
+    * to the existing index). Every 100 ticks (loop-relative) the kind's
+    * index dirs are compacted — modelling the ingest-loop/compactor split
+    * the reference runs; without it the per-tick index LISTING grows one
+    * file per batch, a filesystem artifact, not session state — then the
+    * heap is read after a GC and one `[label]` progress line printed. */
+  private[tools] def runLoop(spark: SparkSession, kind: String, base: String,
       ticks: Int, offset: Long, label: String): LoopResult = {
-    import spark.implicits._
+    val k = ingestKind(spark, kind, base)
     val rt = Runtime.getRuntime
-    val corpusDir = s"$base/corpus"
-    val idxDir = s"$base/idx"
-    // 4 fixed unit-ish centroids: enough cells that the index probe
-    // prunes, few enough that every cell keeps filling for the whole run
-    val centroids = (0 until 4).map(c => soakVec(-1L - c, 0)).toSeq
     var heapEarly = 0L
     var heapLate = 0L
     var novel = 0L
     val (lat, cpu) = instrumentedTicks(spark, ticks) { rel =>
-      val t = offset + rel
-      val docs = (0 until 8).map { i =>
-        val id = t * 8L + i
-        val vec = if (i >= 6 && t > 0) soakVec(t - 1L, i - 6) else soakVec(t, i)
-        (id, vec)
-      }.toDF("doc_id", "embedding")
-      novel += graft.streaming.SemanticCorpusStream.ingestBatch(
-        spark, docs, "doc_id", "embedding", corpusDir, idxDir,
-        centroids, minCosine = 0.95, nprobe = 2, batchId = Some(t))
+      novel += k.tick(offset + rel)
     } { (rel, latSoFar) =>
       if ((rel + 1) % 100 == 0) {
-        compactDir(spark, idxDir)
+        k.compacted.foreach(compactDir(spark, _))
         System.gc()
         val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
         if (rel + 1 == 100) heapEarly = heapMb
@@ -286,47 +289,7 @@ object Soak {
         println(f"[$label] ticks ${rel + 1}/$ticks median=${median(last100)}%.2fs max=${last100.max}%.2fs heapMB=$heapMb rdds=${spark.sparkContext.getPersistentRDDs.size}")
       }
     }
-    LoopResult(lat, cpu, heapEarly, heapLate, novel)
-  }
-
-  /** Substring-ingest loop against dirs under `base` — same offset
-    * contract as [[runCorpusLoop]]. 8 docs per tick: 6 novel + 2 EXACT
-    * full-text replays of the previous tick's docs under fresh ids.
-    * A full replay is passage-complete (every token covered by an
-    * indexed window), so [[graft.streaming.SubstringStream]] must drop
-    * it whole every tick — the novel-count expectation is the same
-    * 8 + (ticks−1)·6 as the sibling loops, and any window-key loss or
-    * duplication across ticks/compactions surfaces as count drift. */
-  private[tools] def runSubLoop(spark: SparkSession, base: String,
-      ticks: Int, offset: Long, label: String): LoopResult = {
-    import spark.implicits._
-    val rt = Runtime.getRuntime
-    val corpusDir = s"$base/corpus"
-    val idxDir = s"$base/winidx"
-    var heapEarly = 0L
-    var heapLate = 0L
-    var novel = 0L
-    val (lat, cpu) = instrumentedTicks(spark, ticks) { rel =>
-      val t = offset + rel
-      val docs = (0 until 8).map { i =>
-        val id = t * 8L + i
-        val txt = if (i >= 6 && t > 0) soakText(t - 1L, i - 6) else soakText(t, i)
-        (id, txt)
-      }.toDF("doc_id", "text")
-      novel += graft.streaming.SubstringStream.ingestBatch(spark, docs,
-        "doc_id", "text", corpusDir, idxDir, windowWords = 10,
-        batchId = Some(t))
-    } { (rel, latSoFar) =>
-      if ((rel + 1) % 100 == 0) {
-        compactDir(spark, idxDir)
-        System.gc()
-        val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-        if (rel + 1 == 100) heapEarly = heapMb
-        heapLate = heapMb
-        val last100 = latSoFar.takeRight(100)
-        println(f"[$label] ticks ${rel + 1}/$ticks median=${median(last100)}%.2fs max=${last100.max}%.2fs heapMB=$heapMb rdds=${spark.sparkContext.getPersistentRDDs.size}")
-      }
-    }
+    k.report(label)
     LoopResult(lat, cpu, heapEarly, heapLate, novel)
   }
 
@@ -404,12 +367,7 @@ object Soak {
       java.nio.file.Files.createTempDirectory(s"graft_soak_comp_$kind").toString)
     val offset = args.lift(3).map(_.toLong).getOrElse(0L)
     val spark = GraftSession.local()
-    val r = kind match {
-      case "corpus" => runCorpusLoop(spark, base, ticks, offset, s"soak-$kind")
-      case "sem"    => runSemLoop(spark, base, ticks, offset, s"soak-$kind")
-      case "sub"    => runSubLoop(spark, base, ticks, offset, s"soak-$kind")
-      case other    => sys.error(s"unknown component '$other' (corpus|sem|sub)")
-    }
+    val r = runLoop(spark, kind, base, ticks, offset, s"soak-$kind")
     println(f"[soak-window] kind=$kind ticks=${r.lat.size} " +
       f"window=${componentWindow(r.lat)}%.3f " +
       f"windowCpu=${componentWindow(r.cpu)}%.3f novel=${r.novel} " +
@@ -448,21 +406,21 @@ object Soak {
 
     // ---- streaming ingest soak (in the aged, shared JVM — deliberate:
     // this models a long-lived pipeline driver) ----
-    val corpusBase = java.nio.file.Files.createTempDirectory("graft_soak_corpus").toString
-    val corpusRes =
-      if (corpusTicks > 0)
-        Some(runCorpusLoop(spark, corpusBase, corpusTicks, 0L, "soak"))
-      else None
-    val semBase = java.nio.file.Files.createTempDirectory("graft_soak_sem").toString
-    val semRes =
-      if (semTicks > 0)
-        Some(runSemLoop(spark, semBase, semTicks, 0L, "soak-sem"))
-      else None
-    val subBase = java.nio.file.Files.createTempDirectory("graft_soak_sub").toString
-    val subRes =
-      if (subTicks > 0)
-        Some(runSubLoop(spark, subBase, subTicks, 0L, "soak-sub"))
-      else None
+    // (kind, ticks, progress label, exact novel count): the sem and sub
+    // loops gate the count — 8 docs at the first tick, then 6 per tick
+    // (the 2 planted replays gated by the index) — so any drift means
+    // the index lost or duplicated rows across ticks/compactions
+    val loops: Seq[(String, Int, String, Option[Long])] = Seq(
+      ("corpus", corpusTicks, "soak", None),
+      ("sem", semTicks, "soak-sem", Some(8L + (semTicks - 1).toLong * 6L)),
+      ("sub", subTicks, "soak-sub", Some(8L + (subTicks - 1).toLong * 6L)))
+    val ran = loops.map { case (kind, ticks, label, _) =>
+      if (ticks <= 0) None
+      else {
+        val base = java.nio.file.Files.createTempDirectory(s"graft_soak_$kind").toString
+        Some((base, runLoop(spark, kind, base, ticks, 0L, label)))
+      }
+    }
     spark.stop()
 
     // ---- fresh-JVM engine-state probes (r15 verdict #3) ----
@@ -481,9 +439,9 @@ object Soak {
           aged <- spawnComponentWindow(kind, 200, agedBase, 2000000L)
         } yield (fresh, aged)
       }
-    val corpusProbe = corpusRes.flatMap(_ => engineProbe("corpus", corpusBase, corpusTicks))
-    val semProbe = semRes.flatMap(_ => engineProbe("sem", semBase, semTicks))
-    val subProbe = subRes.flatMap(_ => engineProbe("sub", subBase, subTicks))
+    val probes = loops.zip(ran).map { case ((kind, ticks, _, _), r) =>
+      r.flatMap { case (base, _) => engineProbe(kind, base, ticks) }
+    }
 
     // pass 1 pays janino compilation for every generated stage; steady
     // state is pass 2+. Degradation = any later pass markedly worse than
@@ -538,23 +496,16 @@ object Soak {
               s" ${kind}_heapMB=${r.heapEarly}->${r.heapLate}")
       }
 
-    val (corpusOk, tickSummary) = loopVerdict("corpus", corpusRes, corpusProbe, None)
-    // semantic loop adds the exact novel-count check — 8 docs tick 0,
-    // then 6 novel per tick (2 planted replays gated by the index); any
-    // drift means the index lost or duplicated rows somewhere across
-    // ticks/compactions
-    val (semOk, semSummary) = loopVerdict("sem", semRes, semProbe,
-      semRes.map(r => 8L + (r.lat.size - 1).toLong * 6L))
-    // substring loop: same exact novel-count shape — 2 full-text
-    // replays per tick must strip to nothing against the window index
-    val (subOk, subSummary) = loopVerdict("sub", subRes, subProbe,
-      subRes.map(r => 8L + (r.lat.size - 1).toLong * 6L))
+    val verdicts = loops.lazyZip(ran).lazyZip(probes).map {
+      case ((kind, _, _, expectNovel), r, probe) =>
+        loopVerdict(kind, r.map(_._2), probe, expectNovel)
+    }
     val verdict =
-      if (queryOk && corpusOk && semOk && subOk) "SOAK PASS" else "SOAK FAIL"
+      if (queryOk && verdicts.forall(_._1)) "SOAK PASS" else "SOAK FAIL"
     val passSummary =
       if (totals.isEmpty) "passes=skipped"
       else s"passes=${totals.map(t => f"$t%.1f").mkString(",")}s"
-    println(s"$verdict: $passSummary $tickSummary $semSummary $subSummary")
+    println(s"$verdict: $passSummary ${verdicts.map(_._2).mkString(" ")}")
   }
 
   private[tools] def median(xs: Seq[Double]): Double = {

@@ -109,11 +109,11 @@ class StreamingSpec extends SparkSpec {
       (2L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
     val n1 = CorpusStream.ingestBatch(spark, batch, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(7L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 7L)
     assert(n1 === 2L)
     // at-least-once replay of the SAME batch id: must be a no-op
     val n2 = CorpusStream.ingestBatch(spark, batch, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(7L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 7L)
     assert(n2 === 0L)
     assert(spark.read.parquet(corpusDir).count() === 2L)
     assert(spark.read.parquet(sigDir).count() === 2L)
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")
     CorpusStream.ingestBatch(spark, b1, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(0L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 0L)
     // simulate a crash AFTER batch 1's sig publish but BEFORE its corpus
     // publish and commit marker: sig rows present, corpus rows and marker
     // absent — the worst window (the batch's own orphaned index rows
@@ -136,13 +136,13 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq((5L, "totally different prose concerning parquet files and engines"))
       .toDF("doc_id", "text")
     CorpusStream.ingestBatch(spark, b2, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(1L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 1L)
     new java.io.File(corpusDir).listFiles()
       .filter(_.getName.startsWith("batch1-")).foreach(_.delete())
     fs.delete(new org.apache.hadoop.fs.Path(s"$corpusDir/_graft_commits/batch-1"), false)
     // replay of the half-committed batch: doc 5 must land exactly once
     val n = CorpusStream.ingestBatch(spark, b2, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(1L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 1L)
     assert(n === 1L)
     val kept = spark.read.parquet(corpusDir).select("doc_id")
       .collect().map(_.getLong(0)).sorted
@@ -166,7 +166,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def tick(b: org.apache.spark.sql.DataFrame, bid: Long) =
       CorpusStream.ingestBatch(spark, b, "doc_id", "text",
-        corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(bid),
+        corpusDir, sigDir, 3, 32, 8, 0.5, batchId = bid,
         statsDir = Some(statsDir), statsDepth = 4, statsWidth = 64)
     assert(tick(b1, 0L) === 2L)
     assert(tick(b2, 1L) === 1L)
@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSpec {
     def tick(b: org.apache.spark.sql.DataFrame, bid: Long) =
       SemanticCorpusStream.ingestBatch(spark, b, "vec_id", "embedding",
         corpusDir, idxDir, cents, minCosine = 0.98, nprobe = 2,
-        batchId = Some(bid))
+        batchId = bid)
     val t1 = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
     assert(tick(t1, 0L) === 2L) // empty index: both novel
     // tick 2: 10 semantically repeats 1 (cos ≈ 1) → gated; 11 is new;
@@ -419,7 +419,7 @@ class StreamingSpec extends SparkSpec {
       (3L, None: Option[String])) // same-id null dup → one row
       .toDF("doc_id", "text")
     val n = CorpusStream.ingestBatch(spark, batch, "doc_id", "text",
-      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = Some(0L))
+      corpusDir, sigDir, 3, 32, 8, 0.5, batchId = 0L)
     assert(n === 3L)
     val kept = spark.read.parquet(corpusDir).select("doc_id")
       .collect().map(_.getLong(0)).sorted

@@ -21,7 +21,7 @@ class SubstringStreamSpec extends graft.SparkSpec {
     val idxDir = tmpDir("subidx")
     def tick(b: org.apache.spark.sql.DataFrame, bid: Long) =
       SubstringStream.ingestBatch(spark, b, "doc_id", "text",
-        corpusDir, idxDir, windowWords = 4, batchId = Some(bid))
+        corpusDir, idxDir, windowWords = 4, batchId = bid)
 
     val a = "a0 a1 a2 a3 a4 a5 a6 a7 a8 a9"
     val b = "b0 b1 b2 b3 b4 b5 b6 b7"
@@ -77,7 +77,7 @@ class SubstringStreamSpec extends graft.SparkSpec {
     val idxDir = tmpDir("subflip_i")
     def tick(b: org.apache.spark.sql.DataFrame, bid: Long) =
       SubstringStream.ingestBatch(spark, b, "doc_id", "text",
-        corpusDir, idxDir, windowWords = 4, batchId = Some(bid))
+        corpusDir, idxDir, windowWords = 4, batchId = bid)
     def forced[A](body: => A): A = {
       spark.conf.set("spark.graft.explode.targetBytes", "1024")
       try body finally spark.conf.unset("spark.graft.explode.targetBytes")
@@ -115,7 +115,7 @@ class SubstringStreamSpec extends graft.SparkSpec {
     // token-less docs (normalize to one empty token -> survivor branch,
     // clean_text = ""), and the null review row
     assert(SubstringStream.ingestBatch(spark, t1, "doc_id", "text",
-      corpusDir, idxDir, windowWords = 4, batchId = Some(0L)) === 4L)
+      corpusDir, idxDir, windowWords = 4, batchId = 0L) === 4L)
     val corpus = spark.read.parquet(corpusDir)
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(corpus.keySet === Set(1L, 2L, 3L, 4L))
@@ -135,7 +135,7 @@ class SubstringStreamSpec extends graft.SparkSpec {
     val idxDir = tmpDir("subcrash_i")
     val t1 = Seq((1L, "x0 x1 x2 x3 x4 x5")).toDF("doc_id", "text")
     assert(SubstringStream.ingestBatch(spark, t1, "doc_id", "text",
-      corpusDir, idxDir, windowWords = 4, batchId = Some(0L)) === 1L)
+      corpusDir, idxDir, windowWords = 4, batchId = 0L) === 1L)
     // simulate a crash that published batch 1's index keys but died
     // before the commit marker: orphaned keys for doc 5's text
     val orphan = Seq((5L, "y0 y1 y2 y3 y4")).toDF("doc_id", "text")
@@ -146,7 +146,7 @@ class SubstringStreamSpec extends graft.SparkSpec {
     // replay of batch 1: rollback-first must clear the orphans, or the
     // batch's own keys would strip doc 5 to nothing
     assert(SubstringStream.ingestBatch(spark, orphan, "doc_id", "text",
-      corpusDir, idxDir, windowWords = 4, batchId = Some(1L)) === 1L)
+      corpusDir, idxDir, windowWords = 4, batchId = 1L) === 1L)
     val texts = spark.read.parquet(corpusDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(texts(5L) === "y0 y1 y2 y3 y4")
