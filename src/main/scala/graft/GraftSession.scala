@@ -86,6 +86,15 @@ object GraftSession {
     .config("spark.ui.retainedStages", "100")
     .config("spark.ui.retainedTasks", "1000")
 
+  /** An optimizer size estimate that is KNOWN: positive and clear of
+    * the "unknown" sentinel — defaultSizeInBytes (Long.MaxValue unless
+    * tuned), which Catalyst propagates through unestimable subtrees;
+    * anything within 2^10 of it is propagation garbage. Every size-gated
+    * regime decision reads the estimate through this. */
+  def knownBytes(stats: org.apache.spark.sql.catalyst.plans.logical.Statistics)
+      : Option[BigInt] =
+    Some(stats.sizeInBytes).filter(b => b > 0 && b < (BigInt(Long.MaxValue) >> 10))
+
   /** Data-derived shuffle width for an explode-heavy subtree, or None
     * when the session width already bounds per-task state.
     *
@@ -120,7 +129,6 @@ object GraftSession {
   def explodeWidth(input: DataFrame, expansion: Double = 8.0,
       targetBytes: Long = 64L << 20, maxWidth: Int = 2048): Option[Int] = {
     val base = input.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
     // the conf is an ops escape hatch: a malformed value ('64m', a typo)
     // must not turn every operator entry into a NumberFormatException —
     // warn once per call site and fall back to the compiled default
@@ -132,10 +140,7 @@ object GraftSession {
           s"[explode-width] ignoring malformed spark.graft.explode.targetBytes='$v'")
         p
       }.filter(_ > 0).getOrElse(targetBytes)
-    // stats sentinel for "unknown" is defaultSizeInBytes (Long.MaxValue
-    // unless tuned); anything within 2^10 of it is propagation garbage
-    if (bytes <= 0 || bytes >= (BigInt(Long.MaxValue) >> 10)) None
-    else {
+    knownBytes(input.queryExecution.optimizedPlan.stats).flatMap { bytes =>
       // clamp BEFORE narrowing: derived can exceed Int range for large
       // inputs with a small target, and a wrapped .toInt would silently
       // disable widening exactly when it's most needed
@@ -183,9 +188,8 @@ object GraftSession {
       case _: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => true
       case _ => false
     }
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (!alreadySpread && bytes > 0 && bytes < (BigInt(Long.MaxValue) >> 10) &&
-        bytes < conf.filesMaxPartitionBytes)
+    if (!alreadySpread && knownBytes(df.queryExecution.optimizedPlan.stats)
+        .exists(_ < conf.filesMaxPartitionBytes))
       df.repartition(conf.numShufflePartitions)
     else df
   }

@@ -1,63 +1,59 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** BPE tokenizer train/encode as relational plans — classic one-merge-
-  * per-round training, the batched production trainer, and vocab-bounded
-  * encoding with a pre-trained merge table ([[BpeMerges]]). Split from
-  * [[TextAnalysis]] at the registry-hygiene threshold; zero behavior
-  * change. Everything runs on the word-frequency VOCABULARY posting
-  * table (one corpus scan, then vocabulary-bounded iterations), with
-  * gaps-and-islands rewrites instead of sequential folds — windows and
-  * codegen'd expressions only, no interpreted lambdas in the loop.
+/** BPE tokenizer train/encode — merge-table training (Sennrich et al.)
+  * and encoding with a pre-trained merge table ([[BpeMerges]]). Split
+  * from [[TextAnalysis]] at the registry-hygiene threshold. One corpus
+  * scan collapses the text to its word VOCABULARY; everything after it
+  * is bounded by the vocabulary, never the corpus.
+  *
+  * The greedy merge rule is ONE per-row function, [[applyPicks]]: the
+  * driver trainer, the distributed trainer's per-round rewrite and the
+  * encoder (per distinct word, [[encodeWord]]) all call it. The engine
+  * does the relational parts — adjacent-pair counts (codegen'd explode,
+  * map-side-combined groupBy, distributed TakeOrdered), the corpus-side
+  * join and the per-doc reassembly — and no plan grows with the merge
+  * count.
   */
 object Bpe {
 
-  /** Driver fast-path regime bound (r20): inputs whose optimizer size
-    * estimate is under this many bytes train/encode on the DRIVER over
-    * the collected vocabulary — the [[Dedup.connectedComponents]]
-    * `driverEdgeLimit` pattern applied to BPE. The motivation is
-    * measured, not stylistic: the distributed classic trainer is
-    * ~2·numMerges sequential bounded jobs (argmax + rewrite per merge),
-    * which at fixture/lake scale is ~0.1–0.15 s of scheduling per job
-    * against microseconds of actual work (ta_bpe_train: 2.0–2.8 s warm
-    * at sf0.1, almost all of it job dispatch; PlanCost r20). Under the
-    * bound the whole corpus text is ≤ 32 MB, so the VOCABULARY (≤ the
-    * text) collects safely and the identical greedy algorithm runs in
-    * one driver pass; beyond it the distributed loop below is unchanged
-    * (a 100 TB corpus never takes this branch). Result equality is
-    * pinned three ways: the DuckDB oracle derives every merge
-    * independently, BpeDriverRegimeSpec forces both branches onto the
-    * same input and asserts identical frames, and the driver argmax
-    * tie-break compares UTF-8 BYTES (Spark's UTF8String order), not
-    * UTF-16 chars. Override per session via
-    * `spark.graft.bpe.driverInputLimit` (bytes; 0 disables the fast
-    * path — how the spec forces the distributed branch at fixture). */
+  /** Driver regime bound for training (r20): inputs whose optimizer size
+    * estimate is under this many bytes train on the DRIVER over the
+    * collected vocabulary — the [[Dedup.connectedComponents]]
+    * `driverEdgeLimit` pattern. Measured, not stylistic: the distributed
+    * trainer is a few bounded jobs per round, ~0.1–0.15 s of scheduling
+    * each at fixture/lake scale against microseconds of work
+    * (ta_bpe_train: 2.0–2.8 s warm at sf0.1 distributed, 0.42 s on the
+    * driver). Under the bound the corpus text is ≤ 32 MB, so the
+    * vocabulary collects safely; beyond it the distributed round runs.
+    * Both regimes share [[trainRounds]], and BpeDriverRegimeSpec forces
+    * both onto the same inputs. Override per session via
+    * `spark.graft.bpe.driverInputLimit` (bytes; 0 forces the distributed
+    * round). */
   val DriverInputBytesLimit: Long = 32L << 20
 
-  private def driverInputLimit(spark: org.apache.spark.sql.SparkSession): Long =
+  private def driverInputLimit(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.bpe.driverInputLimit")
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(DriverInputBytesLimit)
 
   /** True when `df`'s optimizer estimate is a KNOWN size under the
     * driver-regime limit (unknown stats → distributed, never guess). */
-  private def driverRegime(df: org.apache.spark.sql.DataFrame): Boolean = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    bytes > 0 && bytes < (BigInt(Long.MaxValue) >> 10) &&
-      bytes < driverInputLimit(df.sparkSession)
-  }
+  private def driverRegime(df: DataFrame): Boolean =
+    graft.GraftSession.knownBytes(df.queryExecution.optimizedPlan.stats)
+      .exists(_ < driverInputLimit(df.sparkSession))
 
-  /** Post-collect guard for the driver regime (r21 ADVICE): [[driverRegime]]
+  /** Post-collect guard for the driver regime (r21): [[driverRegime]]
     * bounds the optimizer's BYTE ESTIMATE, which compression/propagation can
-    * underestimate, and the driver loops expand every vocab word into
+    * underestimate, and the driver loop expands every vocab word into
     * per-code-point String arrays and per-round pair HashMaps (~50× JVM
-    * overhead per text char) — so an adversarial high-distinct-vocab input
-    * near the limit could blow the driver heap on a lying estimate. After
-    * the (maxResultSize-bounded) collect, re-check the ACTUAL vocabulary
-    * UTF-8 bytes against the same byte limit and fall back to the
-    * distributed loop when exceeded. */
-  private[operators] def driverVocabFits(spark: org.apache.spark.sql.SparkSession,
+    * overhead per text char). After the (maxResultSize-bounded) collect,
+    * re-check the ACTUAL vocabulary UTF-8 bytes against the same limit
+    * and fall back to the distributed round when exceeded. */
+  private[operators] def driverVocabFits(spark: SparkSession,
       words: Iterator[String], what: String): Boolean = {
     val lim = driverInputLimit(spark)
     val bytes = words.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum
@@ -69,17 +65,27 @@ object Bpe {
   }
 
   /** Spark's string ordering is UTF8String — unsigned UTF-8 byte
-    * comparison. The driver loop must break count ties identically
+    * comparison. Driver-side ranking must break count ties identically
     * (UTF-16 `String.compareTo` differs for supplementary-plane text). */
   private[operators] val Utf8Ordering: Ordering[String] =
     (a: String, b: String) => java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  /** Candidate rank: count desc, then (l, r) in UTF-8 byte order — what
+    * a distributed `orderBy(cnt desc, sym, nxt)` yields. */
+  private val RankOrder: Ordering[(String, String, Long)] =
+    (a: (String, String, Long), b: (String, String, Long)) =>
+      if (a._3 != b._3) java.lang.Long.compare(b._3, a._3)
+      else {
+        val cl = Utf8Ordering.compare(a._1, b._1)
+        if (cl != 0) cl else Utf8Ordering.compare(a._2, b._2)
+      }
+
   /** Split to per-CODE-POINT symbols — `substr(i, 1)` semantics (Spark
     * counts code points, not UTF-16 units). */
   private def codePointSyms(wd: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val out = mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < wd.length) {
       val n = Character.charCount(wd.codePointAt(i))
@@ -89,15 +95,15 @@ object Bpe {
     out.toArray
   }
 
-  /** One greedy left-to-right merge pass over a symbol sequence for a
-    * SYMBOL-DISJOINT pick set — the sequential equivalent of the
-    * gaps-and-islands rewrite: consecutive starts only arise from a
-    * single l = r pick (disjointness forbids cross-pick adjacency), and
-    * advancing past a merged pair is exactly the even-offset rule. */
+  /** The merge rule: one greedy left-to-right pass over a symbol
+    * sequence for a SYMBOL-DISJOINT pick set — an adjacent pair in
+    * `picks` becomes its merged symbol and the scan resumes after it, so
+    * an l = r run merges at even offsets. A sequence shorter than 2
+    * symbols has no pair. */
   private def applyPicks(syms: Array[String],
       picks: Map[(String, String), String]): Array[String] = {
     if (syms.length < 2) return syms
-    val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
+    val out = new mutable.ArrayBuffer[String](syms.length)
     var i = 0
     while (i < syms.length) {
       if (i + 1 < syms.length && picks.contains((syms(i), syms(i + 1)))) {
@@ -109,8 +115,8 @@ object Bpe {
 
   /** Frequency-weighted adjacent-pair counts over the vocabulary. */
   private def pairCounts(vocab: Array[(Array[String], Long)])
-      : scala.collection.mutable.HashMap[(String, String), Long] = {
-    val m = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      : mutable.HashMap[(String, String), Long] = {
+    val m = mutable.HashMap.empty[(String, String), Long]
     vocab.foreach { case (s, f) =>
       var i = 0
       while (i + 1 < s.length) {
@@ -122,157 +128,120 @@ object Bpe {
     m
   }
 
-  /** Driver-side trainer — the SAME selection and rewrite rules as the
-    * distributed loops, run over a collected vocabulary. `batchSize = 1`
-    * degenerates to [[bpeTrain]]'s exact argmax (the top-ranked
-    * candidate is always conflict-free); larger sizes replicate
-    * [[bpeTrainBatched]]'s window-truncated conflict-free-prefix rule
-    * verbatim (including the 4·batchSize window truncation — a driver
-    * pass COULD scan every candidate, but then a round that conflicts
-    * away its whole window would pick merges the distributed branch
-    * would not). */
-  private[operators] def trainDriver(vocab0: Array[(String, Long)],
-      numMerges: Int, minPairCount: Long,
-      batchSize: Int): Seq[(Int, String, String, Long)] = {
-    val ord = Utf8Ordering
-    var vocab = vocab0.map { case (wd, f) => (codePointSyms(wd), f) }
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+  /** The batched selection rule over ranked candidates: a pair is PICKED
+    * iff no higher-ranked candidate (picked or not) shares a symbol with
+    * it, capped at `batchSize` — so `seen` accumulates the symbols of
+    * EVERY scanned pair, and picks are pairwise symbol-disjoint. */
+  private def conflictFreePrefix(ranked: Seq[(String, String, Long)],
+      batchSize: Int): Seq[(String, String, Long)] = {
+    val picks = mutable.ArrayBuffer.empty[(String, String, Long)]
+    val seen = mutable.Set.empty[String]
+    val it = ranked.iterator
+    while (picks.size < batchSize && it.hasNext) {
+      val p @ (l, r, _) = it.next()
+      if (!seen(l) && !seen(r)) picks += p
+      seen += l; seen += r
+    }
+    picks.toSeq
+  }
+
+  /** The training round both regimes share. `counts(window)` returns the
+    * round's candidate pairs (l, r, cnt) meeting `minPairCount` — in any
+    * order, at least its top `window`; the round ranks them
+    * ([[RankOrder]]), keeps the top 4·batchSize (a pick blocks ≤ 2
+    * symbols, so a deeper rank is picked only if every higher one
+    * conflicts among themselves), picks by [[conflictFreePrefix]], and
+    * hands the picks to `rewrite`. Stops when a round picks nothing; a
+    * round may overshoot `numMerges` by up to batchSize − 1 picks, and
+    * the table truncates to the first `numMerges`. */
+  private def trainRounds(numMerges: Int, batchSize: Int)(
+      counts: Int => Seq[(String, String, Long)],
+      rewrite: Map[(String, String), String] => Unit): Seq[(Int, String, String, Long)] = {
+    val window = 4 * batchSize
+    val merges = mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false
     while (merges.size < numMerges && !done) {
-      val ranked = pairCounts(vocab).toArray
-        .filter(_._2 >= minPairCount)
-        .sortWith { case (((l1, r1), c1), ((l2, r2), c2)) =>
-          if (c1 != c2) c1 > c2
-          else {
-            val cl = ord.compare(l1, l2)
-            if (cl != 0) cl < 0 else ord.compare(r1, r2) < 0
-          }
-        }
-      val cand = ranked.take(4 * batchSize)
-      val picks = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-      val seen = scala.collection.mutable.Set.empty[String]
-      val it = cand.iterator
-      while (picks.size < batchSize && it.hasNext) {
-        val ((l, r), c) = it.next()
-        if (!seen(l) && !seen(r)) picks += ((l, r, c))
-        seen += l; seen += r
-      }
+      val picks = conflictFreePrefix(counts(window).sorted(RankOrder).take(window), batchSize)
       if (picks.isEmpty) done = true
       else {
-        val base = merges.size
-        picks.zipWithIndex.foreach { case ((l, r, c), i) =>
-          merges += ((base + i, l, r, c))
-        }
-        val pickMap = picks.map { case (l, r, _) => (l, r) -> (l + r) }.toMap
-        vocab = vocab.map { case (s, f) => (applyPicks(s, pickMap), f) }
+        picks.foreach { case (l, r, c) => merges += ((merges.size, l, r, c)) }
+        // the last round's rewrite would feed no further ranking
+        if (merges.size < numMerges)
+          rewrite(picks.map { case (l, r, _) => (l, r) -> (l + r) }.toMap)
       }
     }
     merges.take(numMerges).toSeq
   }
 
-  /** Driver-side encoder — the merge cascade of [[bpeEncode]] applied
-    * per distinct word: one pass per merge, in rank order. */
-  private[operators] def encodeDriver(wd: String,
-      merges: Seq[(String, String)]): (Long, String) = {
-    var syms = codePointSyms(wd)
-    merges.foreach { case (l, r) =>
-      syms = applyPicks(syms, Map((l, r) -> (l + r)))
-    }
-    (syms.length.toLong, syms.mkString(" "))
+  /** Driver-regime trainer: [[trainRounds]] over a collected vocabulary. */
+  private[operators] def trainDriver(vocab0: Array[(String, Long)],
+      numMerges: Int, minPairCount: Long,
+      batchSize: Int): Seq[(Int, String, String, Long)] = {
+    var vocab = vocab0.map { case (wd, f) => (codePointSyms(wd), f) }
+    trainRounds(numMerges, batchSize)(
+      _ => pairCounts(vocab).iterator
+        .collect { case ((l, r), c) if c >= minPairCount => (l, r, c) }.toSeq,
+      picks => vocab = vocab.map { case (s, f) => (applyPicks(s, picks), f) })
   }
 
-  /** BPE tokenizer training — learn `numMerges` byte-pair merges from
-    * the corpus (Sennrich et al.): per iteration, count adjacent symbol
-    * pairs weighted by word frequency, take the max (count desc, then
-    * lexicographic — fully deterministic), and merge it greedily
-    * left-to-right in every word. Returns the learned merge table
-    * (it, lft, rgt, cnt) — the artifact a tokenizer ships.
-    *
-    * Everything is relational: the corpus collapses to a
-    * word-frequency vocabulary once (map-side-combined groupBy — the
-    * only pass over corpus rows); iterations run on the VOCAB posting
-    * table (word, freq, pos, sym), so per-iteration cost is bounded by
-    * vocabulary size, not corpus size. The greedy non-overlapping
-    * merge is the classic gaps-and-islands trick instead of a
-    * sequential fold: pair-start runs (only possible when lft = rgt)
-    * split into islands of consecutive positions, even offsets within
-    * an island merge, the position after a merge drops. No interpreted
-    * lambdas in the loop — windows and codegen'd expressions only.
-    *
-    * Driver loop bounds: one argmax collect per iteration (1 row) and
-    * an eager localCheckpoint to keep lineage flat (superseded
-    * generations released, same hygiene as connectedComponents). Stops
-    * early when no pair reaches `minPairCount`. */
-  def bpeTrain(df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int, minPairCount: Long = 1L): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vocab = df.select(explode(split(TextAnalysis.normalize(col(textCol)), " ")).as("wd"))
-      .filter(length(col("wd")) > 0)
-      .groupBy("wd").agg(count(lit(1)).as("freq"))
-    if (driverRegime(df)) {
-      // bounded-input fast path (see DriverInputBytesLimit): one vocab
-      // job instead of ~2·numMerges sequential argmax/rewrite jobs
-      val rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      if (driverVocabFits(spark, rows.iterator.map(_._1), "train")) {
-        System.err.println(s"[bpe] driver regime: ${rows.length} vocab words, " +
-          s"$numMerges merges on the driver (input under the byte limit)")
-        return trainDriver(rows, numMerges, minPairCount, batchSize = 1)
-          .toDF("it", "lft", "rgt", "cnt")
-      }
-    }
-    var posts = vocab.select(col("wd"), col("freq"),
-        posexplode(transform(sequence(lit(1), length(col("wd"))),
-          i => col("wd").substr(i, lit(1)))).as(Seq("pos", "sym")))
-      .localCheckpoint(true)
-    val wv = Window.partitionBy("wd").orderBy("pos")
-    val cum = wv.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+  /** The vocabulary as (wd, freq, syms) rows, `syms` the word's code
+    * points. */
+  private[operators] def symbolRows(vocab: DataFrame): DataFrame = {
+    val syms = udf((wd: String) => codePointSyms(wd))
+    vocab.select(col("wd"), col("freq"), syms(col("wd")).as("syms"))
+  }
+
+  /** One round's candidate pair counts over (wd, freq, syms) rows:
+    * adjacent pairs as a zip of the array with itself shifted by one
+    * (a 1-symbol word zips two empty slices — no pair), exploded and
+    * frequency-summed in a map-side-combined aggregate,
+    * `minPairCount`-filtered. The spec pins its physical plan. */
+  private[operators] def candidatePairs(rows: DataFrame,
+      minPairCount: Long): DataFrame = {
+    val n = size(col("syms")) - 1
+    rows.select(col("freq"),
+        explode(arrays_zip(slice(col("syms"), lit(1), n), slice(col("syms"), lit(2), n)))
+          .as("p"))
+      .groupBy(col("p").getField("0").as("sym"), col("p").getField("1").as("nxt"))
+      .agg(sum(col("freq")).as("cnt"))
+      .filter(col("cnt") >= minPairCount)
+  }
+
+  /** Distributed-regime trainer: [[trainRounds]] over (wd, freq, syms)
+    * rows. A round is one distributed selection — [[candidatePairs]]
+    * into a TakeOrdered top-window collect — and one narrow
+    * [[applyPicks]] map over the rows, eagerly localCheckpoint'd so the
+    * lineage stays one round deep (superseded generations released). */
+  private def trainDistributed(vocab: DataFrame, numMerges: Int,
+      minPairCount: Long, batchSize: Int): Seq[(Int, String, String, Long)] = {
     import org.apache.spark.sql.graftops.PlanApi
-    var it = 0
-    var done = false
-    while (it < numMerges && !done) {
-      val top = posts.withColumn("nxt", lead(col("sym"), 1).over(wv))
-        .filter(col("nxt").isNotNull)
-        .groupBy("sym", "nxt").agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(1)
-        .collect()
-      if (top.isEmpty || top.head.getLong(2) < minPairCount) done = true
-      else {
-        val (l, r, cnt) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((it, l, r, cnt))
-        val stepped = posts
-          .withColumn("start",
-            col("sym") === lit(l) && lead(col("sym"), 1).over(wv) === lit(r))
-          // starts-so-far → island id (constant within a consecutive run
-          // of pair-starts; runs longer than 1 only exist when l = r)
-          .withColumn("srn", count(when(col("start"), 1)).over(cum))
-          .withColumn("island", when(col("start"), col("pos") - col("srn")))
-          .withColumn("ifirst",
-            min(when(col("start"), col("pos")))
-              .over(Window.partitionBy("wd", "island")))
-          // greedy left-to-right: even offsets within the island merge
-          .withColumn("valid", col("start") && (col("pos") - col("ifirst")) % 2 === 0)
-          .withColumn("pvalid", lag(col("valid"), 1, false).over(wv))
-          .filter(!col("pvalid")) // the right half of a merged pair drops
-          .withColumn("sym", when(col("valid"), lit(l + r)).otherwise(col("sym")))
-          .withColumn("pos", row_number().over(wv) - 1)
-          .select("wd", "freq", "pos", "sym")
-          .localCheckpoint(true)
-        PlanApi.releaseCheckpointBlocks(posts)
-        posts = stepped
-        it += 1
-      }
-    }
-    PlanApi.releaseCheckpointBlocks(posts)
-    merges.toSeq.toDF("it", "lft", "rgt", "cnt")
+    var rows = symbolRows(vocab).localCheckpoint(true)
+    try trainRounds(numMerges, batchSize)(
+      window => candidatePairs(rows, minPairCount)
+        .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(window)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq,
+      picks => {
+        val merge = udf((syms: Seq[String]) => applyPicks(syms.toArray, picks))
+        val next = rows.withColumn("syms", merge(col("syms"))).localCheckpoint(true)
+        PlanApi.releaseCheckpointBlocks(rows)
+        rows = next
+      })
+    finally PlanApi.releaseCheckpointBlocks(rows)
   }
 
-  /** BATCHED BPE training — the job-count fix for [[bpeTrain]]'s one-
-    * merge-per-round driver loop (a real 32k-merge run is 32k sequential
-    * bounded jobs; this gets `batchSize` merges per round, so the same
-    * vocabulary trains in ~numMerges/batchSize rounds).
+  /** BPE training — learn `numMerges` merges, one per round: count
+    * adjacent symbol pairs weighted by word frequency, take the max
+    * (count desc, then UTF-8 byte order — fully deterministic), merge it
+    * greedily left-to-right in every word. Returns the merge table
+    * (it, lft, rgt, cnt). This is [[bpeTrainBatched]] with
+    * `batchSize = 1`, whose selection rule degenerates to that argmax.
+    * Stops early when no pair reaches `minPairCount`. */
+  def bpeTrain(df: DataFrame, textCol: String,
+      numMerges: Int, minPairCount: Long = 1L): DataFrame =
+    bpeTrainBatched(df, textCol, numMerges, batchSize = 1, minPairCount = minPairCount)
+
+  /** BATCHED BPE training — `batchSize` merges per round, so a real
+    * 32k-merge table trains in ~numMerges/batchSize rounds.
     *
     * Selection rule (deterministic, engine-portable): rank all pairs
     * meeting `minPairCount` by (count desc, pair asc); a pair is PICKED
@@ -281,194 +250,98 @@ object Bpe {
     * `batchSize` per round. Disjointness is what makes the batch sound:
     * merging (a,b) only perturbs counts of pairs touching a or b, so
     * every picked pair's count is exactly what sequential application of
-    * the batch would have seen, and ONE gaps-and-islands rewrite applies
-    * the whole batch (a position starts at most one picked pair;
-    * consecutive starts still only arise from a single l = r pair).
-    * With `batchSize = 1` the rule degenerates to [[bpeTrain]]'s exact
-    * argmax (asserted in spec). The variant trades classic BPE's
-    * "re-rank after every merge" for round-level ranking — merges
-    * CREATED by a round (count ≤ the creating pair's) wait for the next
-    * round's ranking; a documented algorithm difference, not an
+    * the batch would have seen, and ONE [[applyPicks]] pass applies the
+    * whole batch. The variant trades classic BPE's "re-rank after every
+    * merge" for round-level ranking — merges CREATED by a round wait for
+    * the next round's ranking; a documented algorithm difference, not an
     * approximation of the classic schedule.
     *
-    * Each round is ONE distributed selection — pair count (map-side-
-    * combined groupBy) → distributed TakeOrdered top-4·batchSize — then
-    * an O(window) driver-side dominance scan over the collected
-    * candidates (no rank window, no self-join: the r10 shape ranked the
-    * WHOLE pair-count table through a single-partition row_number
-    * window every round), plus one rewrite/checkpoint — all bounded by
-    * vocabulary, never corpus. A round may overshoot `numMerges` by up
-    * to batchSize−1 picks; the returned table truncates to `numMerges`
-    * (same first-numMerges contract the oracle unrolls). */
-  /** One training round's candidate pair counts — adjacent-symbol pairs
-    * over the posting table with their frequency-weighted counts,
-    * `minPairCount`-filtered. Factored out so the spec can assert the
-    * selection's physical plan (map-side-combined aggregate feeding a
-    * distributed TakeOrdered; no single-partition WindowExec). */
-  private[operators] def candidatePairs(posts: org.apache.spark.sql.DataFrame,
-      wv: org.apache.spark.sql.expressions.WindowSpec,
-      minPairCount: Long): org.apache.spark.sql.DataFrame =
-    posts.withColumn("nxt", lead(col("sym"), 1).over(wv))
-      .filter(col("nxt").isNotNull)
-      .groupBy("sym", "nxt").agg(sum(col("freq")).as("cnt"))
-      .filter(col("cnt") >= minPairCount)
-
-  def bpeTrainBatched(df: org.apache.spark.sql.DataFrame, textCol: String,
+    * The corpus collapses to a word-frequency vocabulary once
+    * (map-side-combined groupBy — the only pass over corpus rows); under
+    * [[DriverInputBytesLimit]] the rounds run on the driver, otherwise
+    * distributed over (wd, freq, syms) rows — see [[trainDistributed]].
+    * A round costs a bounded handful of jobs, never a plan that grows
+    * with the merge count. */
+  def bpeTrainBatched(df: DataFrame, textCol: String,
       numMerges: Int, batchSize: Int = 8,
-      minPairCount: Long = 1L): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      minPairCount: Long = 1L): DataFrame = {
     require(batchSize >= 1, s"batchSize=$batchSize must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
     val vocab = df.select(explode(split(TextAnalysis.normalize(col(textCol)), " ")).as("wd"))
       .filter(length(col("wd")) > 0)
       .groupBy("wd").agg(count(lit(1)).as("freq"))
-    if (driverRegime(df)) {
-      // bounded-input fast path — same rule set, one vocab job
-      val rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      if (driverVocabFits(spark, rows.iterator.map(_._1), "train-batched")) {
-        System.err.println(s"[bpe] driver regime (batched): ${rows.length} vocab " +
-          s"words, $numMerges merges x batch $batchSize on the driver")
-        return trainDriver(rows, numMerges, minPairCount, batchSize)
-          .toDF("it", "lft", "rgt", "cnt")
-      }
+    val collected =
+      if (!driverRegime(df)) None
+      else Some(vocab.collect().map(r => (r.getString(0), r.getLong(1))))
+        .filter(rows => driverVocabFits(spark, rows.iterator.map(_._1), "train"))
+    val merges = collected match {
+      case Some(rows) =>
+        System.err.println(s"[bpe] driver regime: ${rows.length} vocab words, " +
+          s"$numMerges merges x batch $batchSize on the driver")
+        trainDriver(rows, numMerges, minPairCount, batchSize)
+      case None => trainDistributed(vocab, numMerges, minPairCount, batchSize)
     }
-    var posts = vocab.select(col("wd"), col("freq"),
-        posexplode(transform(sequence(lit(1), length(col("wd"))),
-          i => col("wd").substr(i, lit(1)))).as(Seq("pos", "sym")))
-      .localCheckpoint(true)
-    val wv = Window.partitionBy("wd").orderBy("pos")
-    val cum = wv.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    import org.apache.spark.sql.graftops.PlanApi
+    merges.toDF("it", "lft", "rgt", "cnt")
+  }
+
+  /** A merge table as pair → its ranks (ascending; a pair may repeat). */
+  private def mergeRanks(merges: Seq[(String, String)]): Map[(String, String), Array[Int]] =
+    merges.zipWithIndex.groupMap(_._1)(_._2).map { case (p, rs) => p -> rs.toArray }
+
+  /** One word's encoding under a merge table: "apply merge k once, as
+    * one [[applyPicks]] pass, for k in rank order", computed by jumping
+    * straight to the next-ranked merge that has an adjacent pair in the
+    * word — the merges in between find nothing to rewrite. Each jump
+    * merges ≥ 1 pair, so an n-symbol word costs < n passes whatever the
+    * table size. Returns (symbol count, space-joined symbols). */
+  private def encodeWord(wd: String,
+      ranks: Map[(String, String), Array[Int]]): (Long, String) = {
+    var syms = codePointSyms(wd)
+    var last = -1
     var done = false
-    while (merges.size < numMerges && !done) {
-      // candidate window is bounded (a pick blocks ≤ 2 symbols, so rank >
-      // 2·batchSize+1 can be picked only if every higher rank conflicts
-      // among themselves — 4·batchSize is a safe, small window), and the
-      // top-window cut is a DISTRIBUTED TakeOrdered: the whole pair-count
-      // table never funnels through a single-partition rank window (the
-      // r10 shape did, one task per round). The dominance scan over the
-      // ≤ 4·batchSize survivors is O(window) driver work — replacing the
-      // rank-window + self-join pair entirely.
-      val window = 4 * batchSize
-      val cand = candidatePairs(posts, wv, minPairCount)
-        .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(window)
-        .collect()
-        // TakeOrderedAndProject returns sorted rows; re-sort on the driver
-        // anyway so correctness never leans on a physical-plan detail.
-        // The re-sort MUST use Utf8Ordering (UTF-8 bytes — UTF8String's
-        // order, what the distributed orderBy used), not Scala's String
-        // tuple ordering (UTF-16 code units): the two diverge for
-        // supplementary-plane symbols (surrogate units 0xD800+ sort below
-        // BMP chars ≥ U+E000 in UTF-16, above ALL BMP in UTF-8), so a
-        // UTF-16 re-sort could flip tied-count picks vs trainDriver's.
-        .sortWith { (a, b) =>
-          val c1 = a.getLong(2); val c2 = b.getLong(2)
-          if (c1 != c2) c1 > c2
-          else {
-            val cl = Utf8Ordering.compare(a.getString(0), b.getString(0))
-            if (cl != 0) cl < 0
-            else Utf8Ordering.compare(a.getString(1), b.getString(1)) < 0
-          }
+    while (!done) {
+      var best = Int.MaxValue
+      var pair: (String, String) = null
+      var i = 0
+      while (i + 1 < syms.length) {
+        val p = (syms(i), syms(i + 1))
+        ranks.get(p).flatMap(_.find(_ > last)).foreach { k =>
+          if (k < best) { best = k; pair = p }
         }
-      // conflict-free-prefix rule, verbatim from the scaladoc: a pair is
-      // picked iff NO higher-ranked candidate (picked or not) shares a
-      // symbol with it — so `seen` accumulates the symbols of EVERY
-      // scanned pair, not just the picked ones
-      val picks = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-      val seen = scala.collection.mutable.Set.empty[String]
-      val candIt = cand.iterator
-      while (picks.size < batchSize && candIt.hasNext) {
-        val r = candIt.next()
-        val (l, rt, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
-        if (!seen(l) && !seen(rt)) picks += ((l, rt, cnt))
-        seen += l; seen += rt
+        i += 1
       }
-      if (picks.isEmpty) done = true
+      if (pair == null) done = true
       else {
-        val base = merges.size
-        picks.zipWithIndex.foreach { case ((l, rt, cnt), i) =>
-          merges += ((base + i, l, rt, cnt))
-        }
-        val pickDf = picks.map { case (l, rt, _) => (l, rt) }
-          .toSeq.toDF("ml_sym", "mr_sym")
-        val stepped = posts
-          .withColumn("nxt", lead(col("sym"), 1).over(wv))
-          .join(broadcast(pickDf),
-            col("sym") === col("ml_sym") && col("nxt") === col("mr_sym"), "left")
-          .withColumn("start", col("ml_sym").isNotNull)
-          .withColumn("srn", count(when(col("start"), 1)).over(cum))
-          .withColumn("island", when(col("start"), col("pos") - col("srn")))
-          .withColumn("ifirst",
-            min(when(col("start"), col("pos")))
-              .over(Window.partitionBy("wd", "island")))
-          .withColumn("valid", col("start") && (col("pos") - col("ifirst")) % 2 === 0)
-          .withColumn("pvalid", lag(col("valid"), 1, false).over(wv))
-          .filter(!col("pvalid"))
-          .withColumn("sym",
-            when(col("valid"), concat(col("ml_sym"), col("mr_sym")))
-              .otherwise(col("sym")))
-          .withColumn("pos", row_number().over(wv) - 1)
-          .select("wd", "freq", "pos", "sym")
-          .localCheckpoint(true)
-        PlanApi.releaseCheckpointBlocks(posts)
-        posts = stepped
+        syms = applyPicks(syms, Map(pair -> (pair._1 + pair._2)))
+        last = best
       }
     }
-    PlanApi.releaseCheckpointBlocks(posts)
-    merges.toSeq.take(numMerges).toDF("it", "lft", "rgt", "cnt")
+    (syms.length.toLong, syms.mkString(" "))
   }
 
   /** BPE ENCODING with a pre-trained merge table ([[BpeMerges]] shape) —
     * the other half of the tokenizer: every word splits to characters
-    * and each merge applies once, in rank order, as the same greedy
-    * gaps-and-islands rewrite [[bpeTrain]] uses. This is the
-    * single-pass rank-order variant (subword-nmt's loop re-scans for
-    * the best REMAINING pair, which later merges can re-create; one
-    * pass per merge is deterministic, plan-static, and what a
-    * streaming-friendly encoder wants — documented difference, not an
-    * accident). Returns (id, n_syms, enc): the subword count and the
-    * space-joined symbol sequence.
+    * and each merge applies once, in rank order, as one greedy
+    * left-to-right pass. This is the single-pass rank-order variant
+    * (subword-nmt's loop re-scans for the best REMAINING pair, which
+    * later merges can re-create; one pass per merge is deterministic and
+    * what a streaming-friendly encoder wants — documented difference,
+    * not an accident). Returns (id, n_syms, enc): the subword count and
+    * the space-joined symbol sequence.
     *
-    * Scale shape — the decisive trick: encoding is a function of the
-    * WORD alone, so the whole merge cascade runs on the DISTINCT
-    * vocabulary (bounded — millions of rows against a corpus of
-    * trillions), and the encoded-word table broadcasts back onto the
-    * corpus word stream. All `merges.size` rewrite stages are windows
-    * over `wd`, stacked on ONE vocab-sized Exchange; merges that
-    * chain the same symbol (`l == r`) pay the gaps-and-islands pass,
-    * every other merge short-circuits to `valid = start` (consecutive
-    * starts are impossible when `l != r`). The corpus pays one word
-    * explode, one broadcast join, one per-doc reassembly groupBy.
-    *
-    * `broadcastVocab` caveat: the default broadcasts the encoded-word
-    * table, which is right while the DISTINCT vocabulary fits an
-    * executor (a natural-language vocab does — Heaps' law keeps it in
-    * the millions even at web scale). Corpora whose "words" don't
-    * deduplicate (code identifiers, URLs, noisy OCR) can outgrow a
-    * broadcast: pass `broadcastVocab = false` and the join degrades
-    * gracefully to a shuffle hash join on `wd` — the corpus word stream
-    * shuffles once, still no cartesian anywhere.
-    *
-    * Plan-depth bound (`checkpointEvery`): a real tokenizer ships ~32k
-    * merges, and each merge is another window stage stacked on the same
-    * plan — unchecked, that's a 32k-stage Catalyst plan that dies in
-    * analysis/janino long before data cost matters. Every
-    * `checkpointEvery` stages the vocab posting table is eagerly
-    * localCheckpoint'd (vocab-bounded rows, the same generation-release
-    * hygiene [[bpeTrain]] uses), so the LONGEST plan Catalyst ever sees
-    * is `checkpointEvery` stages regardless of merge count; superseded
-    * checkpoint generations are released inside the loop, and the final
-    * generation lives until the returned frame is consumed. */
-  def bpeEncode(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String,
-      merges: Seq[(String, String)],
-      broadcastVocab: Boolean = true,
-      checkpointEvery: Int = 64): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery must be >= 1")
-    import org.apache.spark.sql.graftops.PlanApi
+    * Scale shape: encoding is a function of the WORD alone, so
+    * [[encodeWord]] runs once per DISTINCT word, in the same stage as the
+    * distinct — one stage for any merge count, the merge table shipped
+    * once per task, the vocabulary never on the driver. The encoded
+    * vocabulary joins back onto the corpus word stream without a hint:
+    * the planner (autoBroadcastJoinThreshold plus AQE runtime sizes)
+    * broadcasts a small vocabulary and shuffle-joins one that
+    * outgrows a broadcast (code identifiers, URLs, noisy OCR). The
+    * corpus pays one word explode, that join and one per-doc
+    * reassembly groupBy. */
+  def bpeEncode(df: DataFrame, idCol: String, textCol: String,
+      merges: Seq[(String, String)]): DataFrame = {
     // Widened regime (r20, measured at 10M docs / 8 g): the per-doc
     // reassembly's partial collect_list ran on the 32 SCAN partitions —
     // each task buffering ~300k docs' (wpos, enc) arrays — and spilled
@@ -487,14 +360,11 @@ object Bpe {
       case Some(w) => df.repartition(w, col(idCol))
       case None    => df
     }
-    // Persisted (r21, measured): the word stream feeds the vocabulary
-    // side (driver collect, or the distinct the distributed cascade
-    // runs on) AND the per-doc reassembly join in encodeTail — both
-    // re-ran the normalize-regex + explode per reference. In the driver
-    // regime the collect populates the cache during construction and the
-    // tail reads it (sequential, race-free). Storage level splits by the
-    // width regime like shinglePosts: the widened stream is corpus-sized
-    // and heap-caching it would starve the reassembly's aggs.
+    // Persisted (r21, measured): the word stream feeds both the distinct
+    // vocabulary and the per-doc reassembly join, and each re-ran the
+    // normalize-regex + explode per reference. Storage level splits by
+    // the width regime like shinglePosts: the widened stream is
+    // corpus-sized and heap-caching it would starve the reassembly's aggs.
     val words = src
       .select(col(idCol).as("id"),
         posexplode(split(TextAnalysis.normalize(col(textCol)), " ")).as(Seq("wpos", "wd")))
@@ -502,80 +372,12 @@ object Bpe {
       .persist(if (width.isDefined)
         org.apache.spark.storage.StorageLevel.DISK_ONLY
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (driverRegime(df)) {
-      // bounded-input fast path (see DriverInputBytesLimit): the merge
-      // cascade is a function of the DISTINCT word alone, so under the
-      // byte bound the vocabulary collects in one job and the cascade
-      // runs on the driver — replacing |merges| window passes (plus
-      // their plan/codegen cost) with the identical greedy rewrites.
-      // The corpus-side tail (broadcast join + per-doc reassembly) is
-      // the same plan either way.
-      val spark = df.sparkSession
-      val vocabWords = words.select("wd").distinct().collect().map(_.getString(0))
-      if (driverVocabFits(spark, vocabWords.iterator, "encode")) {
-        System.err.println(s"[bpe] driver regime (encode): ${vocabWords.length} " +
-          s"vocab words x ${merges.size} merges on the driver")
-        import spark.implicits._
-        val encVocab = vocabWords.toSeq
-          .map { wd => val (n, e) = encodeDriver(wd, merges); (wd, n, e) }
-          .toDF("wd", "n", "e")
-        return encodeTail(words, encVocab, broadcastVocab)
-      }
-    }
-    var posts = words.select("wd").distinct()
-      .select(col("wd"),
-        posexplode(transform(sequence(lit(1), length(col("wd"))),
-          i => col("wd").substr(i, lit(1)))).as(Seq("pos", "sym")))
-    val wv = Window.partitionBy("wd").orderBy("pos")
-    val cum = wv.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var stage = 0
-    var prevCkpt: Option[org.apache.spark.sql.DataFrame] = None
-    for ((l, r) <- merges) {
-      val started = posts.withColumn("start",
-        col("sym") === lit(l) && lead(col("sym"), 1).over(wv) === lit(r))
-      val validated =
-        if (l != r) started.withColumn("valid", col("start"))
-        else started
-          .withColumn("srn", count(when(col("start"), 1)).over(cum))
-          .withColumn("island", when(col("start"), col("pos") - col("srn")))
-          .withColumn("ifirst", min(when(col("start"), col("pos")))
-            .over(Window.partitionBy("wd", "island")))
-          .withColumn("valid",
-            col("start") && (col("pos") - col("ifirst")) % 2 === 0)
-      posts = validated
-        .withColumn("pvalid", lag(col("valid"), 1, false).over(wv))
-        .filter(!col("pvalid"))
-        .withColumn("sym", when(col("valid"), lit(l + r)).otherwise(col("sym")))
-        .withColumn("pos", row_number().over(wv) - 1)
-        .select("wd", "pos", "sym")
-      stage += 1
-      if (stage % checkpointEvery == 0) {
-        val ck = posts.localCheckpoint(true)
-        prevCkpt.foreach(PlanApi.releaseCheckpointBlocks)
-        prevCkpt = Some(ck)
-        posts = ck
-      }
-    }
-    val encVocab = posts.groupBy("wd")
-      .agg(count(lit(1)).as("n"),
-        concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("pos"), col("sym")))),
-          s => s.getField("sym"))).as("e"))
-    encodeTail(words, encVocab, broadcastVocab)
-  }
-
-  /** The corpus side of [[bpeEncode]] — shared by the driver-regime and
-    * distributed cascades: attach each word's encoding, reassemble per
-    * doc. `encVocab` must be (wd, n, e). */
-  private def encodeTail(words: org.apache.spark.sql.DataFrame,
-      encVocab: org.apache.spark.sql.DataFrame,
-      broadcastVocab: Boolean): org.apache.spark.sql.DataFrame = {
-    val joined =
-      if (broadcastVocab) words.join(broadcast(encVocab), Seq("wd"))
-      // SHUFFLE_HASH, not sort-merge: the vocab side is the smaller one
-      // by construction and per-word rows need no order
-      else words.join(encVocab.hint("shuffle_hash"), Seq("wd"))
-    joined
+    val ranks = mergeRanks(merges)
+    import df.sparkSession.implicits._
+    val encVocab = words.select("wd").distinct().as[String]
+      .mapPartitions(_.map { wd => val (n, e) = encodeWord(wd, ranks); (wd, n, e) })
+      .toDF("wd", "n", "e")
+    words.join(encVocab, Seq("wd"))
       .groupBy("id")
       .agg(sum(col("n")).as("n_syms"),
         concat_ws(" ", transform(

@@ -732,7 +732,7 @@ object Dedup {
     * cell, so a (batch, corpus) pair verifies at most once even with
     * nprobe > 1 — no distinct needed.
     *
-    * `broadcastBatch` caveat (same trade as `bpeEncode`'s vocab knob):
+    * `broadcastBatch` caveat:
     * the probe broadcast carries batch×nprobe rows WITH full vectors —
     * right for the per-tick arrivals this operator exists for, wrong for
     * a million-doc backfill. Pass `broadcastBatch = false` there and the

@@ -110,12 +110,8 @@ object SmallSortSinglePartition extends Rule[LogicalPlan] {
       .getOrElse(DefaultMaxBytes)
   }
 
-  private def small(child: LogicalPlan, lim: Long): Boolean = {
-    val bytes = child.stats.sizeInBytes
-    // stats sentinel for "unknown" is defaultSizeInBytes-derived garbage
-    // near Long.MaxValue — same guard as GraftSession.explodeWidth
-    bytes > 0 && bytes < (BigInt(Long.MaxValue) >> 10) && bytes < lim
-  }
+  private def small(child: LogicalPlan, lim: Long): Boolean =
+    graft.GraftSession.knownBytes(child.stats).exists(_ < lim)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val lim = threshold()

@@ -208,10 +208,10 @@ private[queries] object QueryShared {
 
   /** The `ta_bpe_train` oracle: `k` unrolled BPE iterations, each a CTE
     * block that counts adjacent symbol pairs, takes the deterministic
-    * argmax, and applies the greedy left-to-right merge via the same
-    * gaps-and-islands formulation the Spark operator uses ([[
-    * graft.operators.Bpe.bpeTrain]]) — the oracle DERIVES
-    * every merge, no learned state is embedded. */
+    * argmax, and applies the greedy left-to-right merge of the Spark
+    * operator ([[graft.operators.Bpe.bpeTrain]]) as a gaps-and-islands
+    * window rewrite — the oracle DERIVES every merge, no learned state
+    * is embedded. */
   def bpeOracle(k: Int): String = {
     val head =
       """WITH d AS (SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t FROM documents),

@@ -275,8 +275,8 @@ private[queries] object SketchQueries {
 
 
     // BPE encoding with the pre-trained merge table (constants, the
-    // production artifact shape): every merge stage rides ONE Exchange
-    // as stacked windows; word boundaries partition merges apart.
+    // production artifact shape): the merges run per distinct word in
+    // one operator, and the encoded vocabulary joins back per doc.
     Q("ta_bpe_encode",
       (s, d) => graft.operators.Bpe.bpeEncode(
         T(s, d, "documents"), "doc_id", "text",

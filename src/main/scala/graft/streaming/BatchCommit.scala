@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -71,6 +71,28 @@ private[streaming] object BatchCommit {
       .trigger(trigger)
       .foreachBatch(each)
       .start()
+
+  /** The published rows of `dir`, or None when it holds no visible
+    * `.parquet` file — missing, never published to, or emptied by a
+    * rollback. Staging dirs (`_tmp_batch_*`) and other `_`/`.` names are
+    * invisible. The files read under their first footer's schema
+    * ([[graft.sources.ParquetMeta.sparkSchema]], as
+    * [[graft.sources.HistoryTable]] reads), so a tick's index probe runs
+    * no inference job and a first tick raises and logs nothing. */
+  def readPublished(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.exists(d)) Seq.empty
+      else fs.listStatus(d).map(_.getPath).filter { p =>
+        val n = p.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.toString).toSeq
+    files.headOption.map { first =>
+      spark.read.schema(graft.sources.ParquetMeta.sparkSchema(spark, first.toString))
+        .parquet(files.map(_.toString): _*)
+    }
+  }
 
   /** Delete any published files of `batchId` from `dir` (partial-publish
     * rollback) — batch-prefixed names make them identifiable. Resolves

@@ -158,9 +158,7 @@ object CorpusStream {
       val (batchSig0, posts) = Dedup.minhashSignatureWithPosts(
         deduped, idCol, textCol, shingleLen, numHashes)
       val batchSig = batchSig0.persist()
-      val index = try Some(spark.read.parquet(sigDir))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      val novel = (index match {
+      val novel = (BatchCommit.readPublished(spark, sigDir) match {
         case Some(sig) =>
           val dupIds = Dedup.incrementalNearDupFromSig(batchSig, sig, idCol,
               numHashes, bands, minAgree)

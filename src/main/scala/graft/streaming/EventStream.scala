@@ -66,7 +66,9 @@ object EventStream {
     * expiry only ever forgets the session COUNTER (an event after a
     * ≥-gap silence starts a new session regardless) — a returning key
     * then restarts numbering at 1 instead of continuing, the standard
-    * monitoring trade for a bounded state store.
+    * monitoring trade for a bounded state store. Such a query does not
+    * terminate under `Trigger.AvailableNow`: the registered timeout
+    * keeps it planning no-data timeout batches, so stop it explicitly.
     *
     * Memory note: each key's rows within one micro-batch are buffered and
     * sorted in memory before folding (`rows.toSeq.sortBy`) — per-key
@@ -262,7 +264,8 @@ object EventStream {
     * evict keys idle that long in PROCESSING time; a key arriving after
     * eviction re-seeds from 0.0, the documented cold-start convention —
     * i.e. expiry forgets smoothing history, exactly what an EWMA of a
-    * long-silent series should do. */
+    * long-silent series should do. As with [[streamingSessionize]], such
+    * a query does not terminate under `Trigger.AvailableNow`. */
   def streamingEwma(points: Dataset[Point], alpha: Double,
       idleTimeout: Option[String] = None): Dataset[EwmaOut] = {
     import points.sparkSession.implicits._

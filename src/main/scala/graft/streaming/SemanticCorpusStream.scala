@@ -56,9 +56,7 @@ object SemanticCorpusStream {
         batchId, Seq(idxDir, corpusDir)) { publish =>
       val deduped = batch.dropDuplicates(idCol)
       val withVec = deduped.filter(col(vecCol).isNotNull)
-      val index = try Some(spark.read.parquet(idxDir))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      val novel = (index match {
+      val novel = (BatchCommit.readPublished(spark, idxDir) match {
         case Some(idx) =>
           val dupIds = Dedup.incrementalSemanticDedup(withVec, idx,
               idCol, vecCol, centroids, minCosine, nprobe)

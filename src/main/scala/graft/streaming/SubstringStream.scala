@@ -73,12 +73,11 @@ object SubstringStream {
       val withText = deduped.filter(col(textCol).isNotNull)
       val nullText = deduped.filter(col(textCol).isNull)
         .select(col(idCol), col(textCol).cast("string").as(textCol))
-      val index = (try Some(spark.read.parquet(idxDir))
-        catch { case _: org.apache.spark.sql.AnalysisException => None })
-        .getOrElse { // first batch: probe an empty key frame, same path
-          import spark.implicits._
-          Seq.empty[String].toDF("wkey")
-        }
+      // first batch: probe an empty key frame, same path
+      val index = BatchCommit.readPublished(spark, idxDir).getOrElse {
+        import spark.implicits._
+        Seq.empty[String].toDF("wkey")
+      }
       // ONE regime decision per tick: the probe below and the key-append
       // joins in the publish block must agree on broadcast-vs-shuffle, so
       // the width is derived once here (from the text batch) and threaded

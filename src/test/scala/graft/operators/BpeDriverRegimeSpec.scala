@@ -2,17 +2,17 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Regime-equivalence gate for the r20 BPE driver fast path: under the
-  * input-byte bound the trainers/encoder run their greedy loops on the
-  * driver over the collected vocabulary; this spec runs BOTH branches
-  * on the same corpus (the distributed one forced via
-  * `spark.graft.bpe.driverInputLimit=0`) and asserts identical frames —
-  * merge tables row-for-row, encodings doc-for-doc. The corpus is built
-  * to exercise the rules that could drift between implementations:
-  * l = r runs (islands/even-offset greediness), count ties (UTF-8
-  * tie-break), merges whose output symbol feeds later pairs, multi-pick
-  * batches with conflicting candidates, and short/empty/whitespace
-  * docs. */
+/** Regime-equivalence gate for the r20 BPE driver regime: under the
+  * input-byte bound the trainers run their rounds on the driver over the
+  * collected vocabulary; this spec runs BOTH regimes on the same corpus
+  * (the distributed one forced via `spark.graft.bpe.driverInputLimit=0`)
+  * and asserts identical merge tables, row for row. The encoder has one
+  * regime; its output on the same corpus is pinned literally. The
+  * corpus is built to exercise the rules that could drift between
+  * implementations: l = r runs (even-offset greediness), count ties
+  * (UTF-8 tie-break), merges whose output symbol feeds later pairs,
+  * multi-pick batches with conflicting candidates, and
+  * short/empty/whitespace docs. */
 class BpeDriverRegimeSpec extends SparkSpec {
 
   private val LimitKey = "spark.graft.bpe.driverInputLimit"
@@ -55,14 +55,27 @@ class BpeDriverRegimeSpec extends SparkSpec {
     assert(driver === dist)
   }
 
-  test("bpeEncode: driver regime ≡ distributed cascade") {
+  test("bpeEncode: pinned encodings on the regime corpus") {
     val merges = Seq(("a", "a"), ("t", "h"), ("th", "e"), ("aa", "aa"), ("x", "y"))
-    val driver = encRows(Bpe.bpeEncode(corpus, "doc_id", "text", merges))
-    val dist = forced(encRows(Bpe.bpeEncode(corpus, "doc_id", "text", merges)))
-    assert(driver === dist)
-    // and the driver branch actually ran: a doc's encoding reflects the
-    // merges (sanity that we didn't compare two identical code paths)
-    assert(driver.exists(_._3.contains("the")))
+    // the output both encode regimes (driver loop, per-merge window
+    // cascade) produced before the per-word encoder replaced them; the
+    // whitespace-only doc 3 has no word and no row
+    assert(encRows(Bpe.bpeEncode(corpus, "doc_id", "text", merges)) === Seq(
+      (0L, 13L, "aa a aaaa a b a b a b a b c aa"),
+      (1L, 12L, "the c a t the c a t the h a t"),
+      (2L, 9L, "aa aa aa b b b b c c"),
+      (4L, 8L, "xy xy xy x y xy x y"),
+      (5L, 9L, "the the the aa a b b b the")))
+  }
+
+  test("bpeEncode: a merge ranked before its input symbol exists never applies") {
+    import spark.implicits._
+    // merges run once each in table order: (ab, c) comes first, when "ab"
+    // does not exist yet, so "abc" ends as "ab c" — a lowest-rank-pair-
+    // first loop would go on to merge (ab, c) into "abc"
+    val doc = Seq((0L, "abc")).toDF("doc_id", "text")
+    assert(encRows(Bpe.bpeEncode(doc, "doc_id", "text", Seq(("ab", "c"), ("a", "b"))))
+      === Seq((0L, 2L, "ab c")))
   }
 
   test("driver trainer breaks count ties in UTF-8 byte order") {

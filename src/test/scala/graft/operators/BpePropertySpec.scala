@@ -3,17 +3,17 @@ package graft.operators
 import graft.SparkSpec
 import org.scalacheck.Gen
 
-/** Property evidence for the batched BPE trainer's core algebraic claim:
-  * with `batchSize = 1` the conflict-free-prefix selection degenerates
-  * to the classic per-merge argmax, so [[Bpe.bpeTrainBatched]]
-  * must reproduce [[Bpe.bpeTrain]] EXACTLY — merge pairs,
-  * order, and counts — on arbitrary corpora, not just the hand-built
-  * fixtures. Deterministic seeds over raw scalacheck Gen (same rolled
-  * forAll as NemCsvPropertySpec — the scalatestplus bridge isn't in the
-  * offline cache); each case runs both trainers through Spark, so the
-  * case count is small and the corpora tiny by design — the point is
-  * adversarial SHAPE coverage (repeated-symbol runs, count ties, merged
-  * symbols recombining), which a 3-letter alphabet forces constantly. */
+/** Property evidence for the BPE trainers on arbitrary corpora, not just
+  * the hand-built fixtures: the driver and distributed regimes run the
+  * same round ([[Bpe.bpeTrainBatched]]) and must agree EXACTLY — merge
+  * pairs, order and counts — and one round's picks must match an
+  * independent reimplementation of the selection rule. Deterministic
+  * seeds over raw scalacheck Gen (same rolled forAll as
+  * NemCsvPropertySpec — the scalatestplus bridge isn't in the offline
+  * cache); each case runs the trainers through Spark, so the case count
+  * is small and the corpora tiny by design — the point is adversarial
+  * SHAPE coverage (repeated-symbol runs, count ties, merged symbols
+  * recombining), which a 3-letter alphabet forces constantly. */
 class BpePropertySpec extends SparkSpec {
 
   private def forAll[A](gen: Gen[A], cases: Int)(check: A => Unit): Unit =
@@ -32,22 +32,23 @@ class BpePropertySpec extends SparkSpec {
     Gen.choose(2, 8).flatMap(n => Gen.listOfN(n,
       Gen.choose(1, 6).flatMap(w => Gen.listOfN(w, wordGen).map(_.mkString(" ")))))
 
-  test("bpeTrainBatched(batchSize = 1) ≡ bpeTrain on random corpora") {
+  test("bpeTrainBatched: distributed ≡ driver on random corpora") {
     import spark.implicits._
-    // force the DISTRIBUTED loops: these tiny corpora would otherwise
-    // take the r20 driver fast path on both sides, and this property
-    // exists to pin the distributed selection/rewrite rules against
-    // each other (driver ≡ distributed is BpeDriverRegimeSpec's job)
-    spark.conf.set("spark.graft.bpe.driverInputLimit", "0")
-    try forAll(corpusGen, cases = 6) { docs =>
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1).toSeq
+    forAll(corpusGen, cases = 6) { docs =>
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-      def rows(out: org.apache.spark.sql.DataFrame) =
-        out.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-          .sortBy(_._1).toSeq
-      val classic = rows(Bpe.bpeTrain(df, "text", numMerges = 4))
-      val batched = rows(Bpe.bpeTrainBatched(df, "text", numMerges = 4, batchSize = 1))
-      assert(batched === classic)
-    } finally spark.conf.unset("spark.graft.bpe.driverInputLimit")
+      for (batchSize <- Seq(1, 3)) {
+        // these tiny corpora take the driver regime by default; a 0-byte
+        // limit forces the distributed round on the same input
+        val driver = rows(Bpe.bpeTrainBatched(df, "text", numMerges = 4, batchSize = batchSize))
+        spark.conf.set("spark.graft.bpe.driverInputLimit", "0")
+        val dist = try rows(Bpe.bpeTrainBatched(df, "text", numMerges = 4, batchSize = batchSize))
+          finally spark.conf.unset("spark.graft.bpe.driverInputLimit")
+        assert(dist === driver, s"batchSize=$batchSize")
+      }
+    }
   }
 
   /** Independent driver-side reimplementation of ONE round of the

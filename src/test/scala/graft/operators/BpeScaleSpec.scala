@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
   * shipped tokenizer carries ~32k merges, so both halves must survive a
   * merge TABLE three orders of magnitude past the fixture's 8 — the
   * trainer without funneling pair counts through a single task per
-  * round, the encoder without stacking one Catalyst window stage per
-  * merge into an unanalyzable plan. The 1,024-merge scale here is the
-  * smallest that would have broken both r10 shapes (the encoder's
-  * unchecked cascade and the trainer's global rank window are
-  * merge-count-linear, not data-linear — no corpus size hides them).
+  * round, the encoder without a plan that grows with the merge count.
+  * The 1,024-merge scale here is the smallest that would have broken
+  * both r10 shapes (a per-merge window cascade and a global rank window
+  * are merge-count-linear, not data-linear — no corpus size hides them).
   */
 class BpeScaleSpec extends SparkSpec {
 
@@ -66,62 +65,46 @@ class BpeScaleSpec extends SparkSpec {
 
   test("bpeTrainBatched round selection: distributed TakeOrdered, no partition-free WindowExec") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val docs = Seq((1L, "banana banana banana"), (2L, "bandana bandana"))
       .toDF("doc_id", "text")
     val vocab = docs.select(explode(split(TextAnalysis.normalize(col("text")), " ")).as("wd"))
       .filter(length(col("wd")) > 0)
       .groupBy("wd").agg(count(lit(1)).as("freq"))
-    val posts = vocab.select(col("wd"), col("freq"),
-      posexplode(transform(sequence(lit(1), length(col("wd"))),
-        i => col("wd").substr(i, lit(1)))).as(Seq("pos", "sym")))
-    val wv = Window.partitionBy("wd").orderBy("pos")
-    val sel = Bpe.candidatePairs(posts, wv, 1L)
+    val sel = Bpe.candidatePairs(Bpe.symbolRows(vocab), 1L)
       .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(8)
-    sel.collect()
+    val got = sel.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    // 3×banana + 2×bandana: the frequency-weighted adjacent pairs
+    assert(got === Seq(("a", "n", 10L), ("n", "a", 8L), ("b", "a", 5L),
+      ("d", "a", 2L), ("n", "d", 2L)))
     val plan = sel.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    // the top-window cut must be the distributed TakeOrdered operator,
-    // not a global sort or a single-partition rank window
+    // pair counts combine map-side (partial aggregate) and the top-window
+    // cut is the distributed TakeOrdered operator, not a global sort
+    assert(plan.contains("partial_sum"), plan)
     assert(plan.contains("TakeOrderedAndProject"), plan)
-    val windowLines = plan.linesIterator.filter(_.contains("Window [")).toSeq
-    // exactly one Window — the wd-partitioned lead() — and it carries a
-    // partition spec (the r10 selection added a second, partition-FREE
-    // row_number window that moved every pair count to one task)
-    assert(windowLines.size === 1, plan)
-    assert(windowLines.forall(_.contains(", [wd#")), plan)
+    // adjacency comes from the symbol array itself: no window at all (the
+    // r10 selection's partition-free row_number window moved every pair
+    // count to one task)
+    assert(!plan.contains("Window"), plan)
   }
 
   test("bpeEncode: a 1,024-merge table encodes with bounded plan depth") {
     import spark.implicits._
     // three real merges chain "abcd" into one token; the other 1,021
-    // never occur adjacently in the vocab, so each is an identity stage —
-    // the output must be exactly the three-merge encoding, while the
-    // cascade still BUILDS all 1,024 stages (identity stages cost plan
-    // depth, which is the failure mode under test)
+    // never occur adjacently in the vocab — the output must be exactly
+    // the three-merge encoding, whatever the table size
     val filler = disjointWords(511).map(w => (w(0).toString, w(1).toString))
     val merges = Seq(("a", "b"), ("ab", "c"), ("abc", "d")) ++ filler ++
       filler.map { case (l, r) => (r, l) } // 3 + 511 + 511 = 1025 ≥ 1024
     val docs = Seq((1L, "abcd e"), (2L, "abcd abcd")).toDF("doc_id", "text")
-    // force the DISTRIBUTED cascade — the checkpointEvery plan-depth
-    // bound under test only exists there (see the batched test above).
-    // checkpointEvery=32 (not the 64 default): the MECHANISM under test
-    // is identical, and the 64-stage tail's task-serialization recursion
-    // sits close enough to a cold-JIT thread stack that the test flaked
-    // once with StackOverflowError during serialization (r20) — the
-    // bound assertion below still uses the stage interval passed here
-    spark.conf.set("spark.graft.bpe.driverInputLimit", "0")
-    val out = try Bpe.bpeEncode(docs, "doc_id", "text", merges, checkpointEvery = 32)
-      finally spark.conf.unset("spark.graft.bpe.driverInputLimit")
+    val out = Bpe.bpeEncode(docs, "doc_id", "text", merges)
     val got = out.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
     assert(got(1L) === ((2L, "abcd e")))
     assert(got(2L) === ((2L, "abcd abcd")))
-    // the returned plan hangs off the LAST checkpoint generation: at most
-    // checkpointEvery(=64) window stages of lineage, never 1,024 — count
-    // the logical Window nodes to pin the bound
+    // the merges run per word inside one operator: the plan does not
+    // grow with the table — no Window stage at all
     val windowNodes = out.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.size
-    assert(windowNodes <= 6 * 32,
-      s"$windowNodes Window stages in the final plan — checkpoint cascade not bounding depth")
+    assert(windowNodes === 0, s"$windowNodes Window stages in the encode plan")
   }
 }

@@ -152,6 +152,45 @@ class StreamingSpec extends SparkSpec {
     assert(sigIds === Array(1L, 5L))
   }
 
+  test("index probe: an empty or missing index dir admits every doc, logs no WARN") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("warn-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      // SparkStringUtils' plan-truncation notice prints once per JVM,
+      // whichever test first plans a wide frame — not about the probe
+      override def append(e: LogEvent): Unit =
+        if (!e.getLoggerName.endsWith("SparkStringUtils"))
+          warns.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    capture.start()
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    val batch = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight nine ten")).toDF("doc_id", "text")
+    def tick(sigDir: String) = CorpusStream.ingestBatch(spark, batch, "doc_id", "text",
+      tmpDir("corpus_noidx"), sigDir, 3, 32, 8, 0.5, batchId = 0L)
+    val (existing, missing) = try {
+      // an existing dir with no visible parquet file: a rolled-back first
+      // publish leaves exactly this (plus a hidden staging dir)
+      val empty = tmpDir("sigidx_empty")
+      Files.createDirectory(Paths.get(empty, "_tmp_batch_0"))
+      (tick(empty), tick(tmpDir("sigidx_parent") + "/sig"))
+    } finally {
+      root.removeAppender("warn-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(existing === 2L)
+    assert(missing === 2L)
+    assert(warns.isEmpty, warns.toArray.mkString("\n"))
+  }
+
   test("CorpusStream stats maintenance: folded partials equal the corpus sketch; replay-safe") {
     import spark.implicits._
     val corpusDir = tmpDir("corpus_stats")
@@ -497,6 +536,22 @@ class StreamingSpec extends SparkSpec {
     assert(stream(0) === a * 12.5)
   }
 
+  /** Wait until the memory sink `table` holds `n` rows, then stop `q`; fail
+    * after 60 s. An `idleTimeout` query never terminates under
+    * AvailableNow (it keeps planning no-data timeout batches), so it is
+    * stopped once its one data batch has landed. */
+  private def awaitSinkRows(q: org.apache.spark.sql.streaming.StreamingQuery,
+      table: String, n: Long): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    try {
+      while (spark.table(table).count() < n) {
+        q.exception.foreach(e => fail(s"query $table failed", e))
+        if (System.nanoTime() > deadline) fail(s"$table did not reach $n rows in 60 s")
+        Thread.sleep(50)
+      }
+    } finally q.stop()
+  }
+
   test("EventStream.streamingEwma: idleTimeout in-engine single batch keeps values; state registered") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -514,10 +569,9 @@ class StreamingSpec extends SparkSpec {
       .writeStream
       .format("memory").queryName("sewma_to").outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000L)
+    awaitSinkRows(q, "sewma_to", 2)
     val out = spark.sql("SELECT ewma FROM sewma_to ORDER BY ts")
       .collect().map(_.getDouble(0))
-    q.stop()
     assert(out.toSeq === Seq(5.0, 0.5 * 5.0 + 0.5 * 20.0))
   }
 
@@ -569,10 +623,9 @@ class StreamingSpec extends SparkSpec {
         idleTimeout = Some("1 hour")).writeStream
       .format("memory").queryName("sess_to").outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000L)
+    awaitSinkRows(q, "sess_to", 2)
     val out = spark.sql("SELECT event_id, session_n FROM sess_to ORDER BY event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    q.stop()
     assert(out.toSeq === Seq((1L, 1L), (2L, 2L)))
   }
 
