@@ -7,7 +7,7 @@ import graft.sources.{HistoryTable, ParquetMeta}
 
 /** Partition compactor: merge the many small per-ingest parquet files of
   * each `<table>/date=D/` partition into compacted output, with
-  * schema evolution, atomic publication and anti-join bookkeeping —
+  * schema evolution, atomic publication and history bookkeeping —
   * the reference's compactor binary
   * (/root/reference/src/bin/compactor.rs:33-111,584-792).
   *
@@ -179,15 +179,14 @@ object Compactor {
   }
 
   /** One compaction sweep: for every partition containing files not yet in
-    * the `compacted` history, rewrite and record. The anti-join is the
-    * idempotency gate (compactor.rs:597-641).
+    * the `compacted` history, rewrite and record. The history gate is the
+    * idempotency check (compactor.rs:597-641).
     *
-    * Spark jobs: the gate's one collect of the fresh `(table, partition,
-    * path)` rows (plus the broadcast of the history's keys), one rewrite
-    * per dirty partition ([[compactPartition]]) and one history append.
-    * On the driver: the partition listings, the dirty-partition and
-    * fresh-path sets (both derived from the one collect), and every
-    * footer read. */
+    * Spark jobs: one rewrite per dirty partition ([[compactPartition]]),
+    * nothing else. On the driver: the partition listings, the history
+    * gate of the candidate paths and the history add
+    * ([[HistoryTable.filterNew]], [[HistoryTable.add]]), the
+    * dirty-partition set and every footer read. */
   def runOnce(spark: SparkSession, lakeRoot: String, history: HistoryTable,
       targetFileBytes: Long = Long.MaxValue): Seq[Stat] = {
     import spark.implicits._
@@ -202,9 +201,8 @@ object Compactor {
         .filter(x => x.getName.endsWith(".parquet") && !isCompactedName(x.getName))
         .map(x => (t, p, s"$t/$p/${x.getName}"))
     }
-    if (candidates.isEmpty) return Seq.empty
-    val cands = candidates.toDF("table", "partition", "path")
-    val fresh = history.filterNew(cands, "path").as[(String, String, String)].collect()
+    val freshSet = history.filterNew(candidates.map(_._3)).toSet
+    val fresh = candidates.filter(c => freshSet.contains(c._3))
     val dirty = fresh.map { case (t, p, _) => (t, p) }.distinct
     val freshPaths = fresh.map(_._3)
     // fan the per-partition rewrites out concurrently (the reference's

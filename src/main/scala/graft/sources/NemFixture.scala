@@ -67,7 +67,7 @@ object NemFixture {
   /** Split → lake, then drop a second heterogeneous file (string-typed MW,
     * extra column) into one partition and run a compaction sweep twice:
     * first sweep must merge+widen, second must be a no-op (history
-    * anti-join). Returns per-table (rows, files_after, second_sweep_work). */
+    * gate). Returns per-table (rows, files_after, second_sweep_work). */
   def compactRoundtrip(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import graft.plans.Compactor

@@ -76,7 +76,7 @@ private[streaming] object BatchCommit {
     * `.parquet` file — missing, never published to, or emptied by a
     * rollback. Staging dirs (`_tmp_batch_*`) and other `_`/`.` names are
     * invisible. The files read under their first footer's schema
-    * ([[graft.sources.ParquetMeta.sparkSchema]], as
+    * ([[graft.sources.ParquetMeta.sparkSchema]], as the Spark fallback of
     * [[graft.sources.HistoryTable]] reads), so a tick's index probe runs
     * no inference job and a first tick raises and logs nothing. */
   def readPublished(spark: SparkSession, dir: String): Option[DataFrame] = {

@@ -7,14 +7,16 @@ import graft.sources.{Fetch, HistoryTable, NemCsv}
   * (/root/reference/src/main.rs:39-74) as one composable pass:
   *
   *   feed page → scrape zip links (S1) → skip already-downloaded
-  *   (history anti-join semantics) → download with retries (S3) →
-  *   split to the parquet lake (S4-S6, S10) → record history.
+  *   (a set difference against the history's keys) → download with
+  *   retries (S3) → split to the parquet lake (S4-S6, S10) → record
+  *   history.
   *
   * `runOnce` processes one feed tick (the reference cycles feeds
   * round-robin at 60 s — compose with [[Fetch.RoundRobin]] and a driver
-  * loop or `Trigger.ProcessingTime`); everything downstream of the
-  * driver-side fetch runs distributed. Idempotent: re-running against the
-  * same feed downloads and processes nothing new.
+  * loop or `Trigger.ProcessingTime`). The split is the tick's only Spark
+  * work: the fetch, both history gates and both history adds run on the
+  * driver ([[HistoryTable]]). Idempotent: re-running against the same
+  * feed downloads and processes nothing new.
   */
 object IngestDaemon {
 
@@ -67,9 +69,7 @@ object IngestDaemon {
     val links = Fetch.scrapeZipLinks(feedHtml, feedUrl)
       .map(u => (u, u.split('/').last))
     // idempotency gate on the filename key (main.rs:177-179)
-    val freshNames = downloadedHist
-      .filterNew(links.map(_._2).toDF("candidate"), "candidate")
-      .as[String].collect().toSet
+    val freshNames = downloadedHist.filterNew(links.map(_._2)).toSet
     // one URL per filename: two links resolving to the same basename
     // (mirror paths, relative vs absolute) would otherwise race on the
     // same .tmp file in the concurrent download pool
@@ -104,9 +104,7 @@ object IngestDaemon {
     val landed = Option(new java.io.File(downloadDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.endsWith(".tmp"))
       .map(_.getAbsolutePath).toSeq
-    val toProcess = processedHist
-      .filterNew(landed.toDF("candidate"), "candidate")
-      .as[String].collect().toSeq
+    val toProcess = processedHist.filterNew(landed)
     val tables =
       if (toProcess.isEmpty) 0L
       else {

@@ -11,9 +11,10 @@ import graft.sources.{HistoryTable, NemCsv}
   *
   * Files dropped into `landingDir` are discovered by the file source
   * (which replaces the reference's mpsc channels + worker pools — Spark's
-  * scheduler provides the parallelism), each micro-batch is filtered
-  * against the `processed` history (idempotent re-processing skip,
-  * main.rs:248-250) and split into the parquet lake. `AvailableNow`
+  * scheduler provides the parallelism), each micro-batch's `(path,
+  * length)` rows are collected, gated on the driver against the
+  * `processed` history (idempotent re-processing skip, main.rs:248-250)
+  * and split into the parquet lake. `AvailableNow`
   * drains the backlog and stops — the 60 s daemon cadence is
   * `Trigger.ProcessingTime("60 seconds")` in production.
   */
@@ -26,18 +27,16 @@ object IngestStream {
     val files = landingFiles(spark, landingDir, "*.{csv,CSV,zip,ZIP}")
       .select(col("path"), col("length"))
     BatchCommit.start(files, checkpoint, trigger) { (batch, batchId) =>
-      val fresh = history.filterNew(batch, "path")
-        .select("path", "length").collect()
+      val landed = batch.collect().toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
+      val freshPaths = history.filterNew(landed.map(_._1)).toSet
+      val fresh = landed.filter(f => freshPaths.contains(f._1))
       if (fresh.nonEmpty) {
-        val paths = fresh.map(_.getString(0)).toIndexedSeq
-        NemCsv.splitToLake(spark, paths, lakeRoot)
+        NemCsv.splitToLake(spark, fresh.map(_._1), lakeRoot)
         val now = new java.sql.Timestamp(System.currentTimeMillis())
         import spark.implicits._
-        history.add(
-          fresh.toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
-            .toDF("filename", "size_bytes")
-            .withColumn("processed_at", lit(now))
-            .withColumn("batch_id", lit(batchId)))
+        history.add(fresh.toDF("filename", "size_bytes")
+          .withColumn("processed_at", lit(now))
+          .withColumn("batch_id", lit(batchId)))
       }
     }
   }

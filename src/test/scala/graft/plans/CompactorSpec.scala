@@ -109,7 +109,7 @@ class CompactorSpec extends SparkSpec {
       .filter(_.toString.endsWith(".parquet")).toArray.map(_.toString)
     assert(histFiles.length === 1, s"expected vacuumed history, found ${histFiles.length} files")
     assert(histFiles.head.split('/').last.startsWith("consolidated-"))
-    assert(hist.keys().get.count() === 2) // keys survived consolidation
+    assert(hist.keys().size === 2) // keys survived consolidation
   }
 
   test("runOnce: anti-join bookkeeping makes the sweep idempotent; recompaction folds in new files") {

@@ -2,18 +2,17 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.plans.Compactor
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftops.PlanApi
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The lake's readers take schemas from parquet footers read on the driver
-  * instead of from Spark's schema inference, which runs one job per read.
-  * Pins that the footer schema is exactly what Spark infers, on every kind
-  * of file the lake holds, and the job counts that this buys: one rewrite
-  * job per compacted partition, one per history vacuum, and no inference
-  * job behind the history gate. */
+  * instead of from Spark's schema inference, which runs one job per read,
+  * and the histories read and write their files on the driver. Pins that
+  * the footer schema is exactly what Spark infers, on every kind of file
+  * the lake and the histories hold, and the job counts that this buys: one
+  * rewrite job per compacted partition, and none for a history gate, add
+  * or vacuum. */
 class LakeFooterSchemaSpec extends SparkSpec {
 
   /** Visible parquet files under `dir`, recursively, in path order. */
@@ -27,21 +26,6 @@ class LakeFooterSchemaSpec extends SparkSpec {
   private def assertInferred(paths: Seq[String]): Unit = {
     assert(paths.nonEmpty)
     paths.foreach(p => assert(ParquetMeta.sparkSchema(spark, p) === spark.read.parquet(p).schema, p))
-  }
-
-  /** The jobs `body` starts, each as its SQL execution id: None marks a
-    * job outside any query execution, such as Spark's schema inference. */
-  private def jobsOf(body: => Any): Seq[Option[String]] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-    }
-    PlanApi.drainListenerBus(sc) // earlier jobs' events must not reach the listener
-    sc.addSparkListener(listener)
-    try { body; PlanApi.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
   }
 
   /** A partition of `n` small files whose `mw` alternates string and
@@ -126,28 +110,101 @@ class LakeFooterSchemaSpec extends SparkSpec {
     assert(spark.read.parquet(part).count() === 6)
   }
 
-  test("job guard: a history vacuum runs exactly 1 job") {
+  test("job guard: a history vacuum below the bound runs no job") {
     import spark.implicits._
     val root = tmpDir("jobs-vacuum")
     val h = HistoryTable.processed(spark, root)
     Seq("a.zip", "b.zip", "c.zip").foreach(n => h.add(Seq((n, 1L)).toDF("filename", "rows")))
     val jobs = jobsOf(h.vacuum())
-    assert(jobs.size === 1, jobs)
-    assert(jobs.forall(_.isDefined), s"a job ran outside any query: $jobs")
+    assert(jobs.isEmpty, jobs)
     assert(h.files().size === 1)
+    assert(h.keys() === Set("a.zip", "b.zip", "c.zip"))
   }
 
   test("job guard: the history gate on a non-empty history runs no schema-inference job") {
     import spark.implicits._
     val h = HistoryTable.processed(spark, tmpDir("jobs-gate"))
     Seq("a.zip", "b.zip").foreach(n => h.add(Seq((n, 1L)).toDF("filename", "rows")))
-    var fresh = Array.empty[String]
+    var fresh = Seq.empty[String]
+    val jobs = jobsOf { fresh = h.filterNew(Seq("a.zip", "c.zip")) }
+    assert(fresh === Seq("c.zip"))
+    // a driver set difference: no job at all
+    assert(jobs.isEmpty, jobs)
+  }
+
+  test("job guard: a history add of driver rows runs no job") {
+    import spark.implicits._
+    val h = HistoryTable.downloaded(spark, tmpDir("jobs-add"))
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
     val jobs = jobsOf {
-      fresh = h.filterNew(Seq("a.zip", "c.zip").toDF("f"), "f").as[String].collect()
+      h.add(Seq(("a.zip", "http://feed/a.zip", 10L)).toDF("filename", "url", "size_bytes")
+        .withColumn("downloaded_at", org.apache.spark.sql.functions.lit(now)))
     }
-    assert(fresh === Array("c.zip"))
-    assert(jobs.forall(_.isDefined), s"a job ran outside any query: $jobs")
-    // the key broadcast and the anti-join's collect; no distinct shuffle
-    assert(jobs.size <= 2, jobs)
+    assert(jobs.isEmpty, jobs)
+    assert(h.keys() === Set("a.zip"))
+  }
+
+  test("job guard: a compaction sweep over N dirty partitions runs exactly N jobs") {
+    import spark.implicits._
+    val lake = tmpDir("jobs-sweep")
+    val hist = HistoryTable.compacted(spark, tmpDir("jobs-sweep-hist"))
+    val parts = (1 to 3).map(d => f"date=2025-06-0$d")
+    parts.foreach { p =>
+      (1 to 2).foreach(i => Seq((i.toDouble, s"$p/$i")).toDF("v", "id").coalesce(1)
+        .write.mode("append").parquet(s"$lake/T---SWEEP---1/$p"))
+    }
+    Compactor.runOnce(spark, lake, hist) // fills the history: the next sweep's gate reads it
+    Seq((9.0, "late")).toDF("v", "id").coalesce(1).write.mode("append").parquet(s"$lake/T---SWEEP---1/${parts(0)}")
+    Seq((9.0, "late")).toDF("v", "id").coalesce(1).write.mode("append").parquet(s"$lake/T---SWEEP---1/${parts(2)}")
+    var stats = Seq.empty[Compactor.Stat]
+    val jobs = jobsOf { stats = Compactor.runOnce(spark, lake, hist) }
+    assert(stats.map(_.partition).sorted === Seq(parts(0), parts(2)))
+    assert(jobs.size === 2, jobs)
+    assert(jobsOf(Compactor.runOnce(spark, lake, hist)).isEmpty) // nothing dirty: no job
+  }
+
+  test("mixed history: files written by Spark and on the driver gate, vacuum and read as one") {
+    import spark.implicits._
+    val root = tmpDir("mixed-hist")
+    val dir = s"$root/downloaded"
+    val h = HistoryTable.downloaded(spark, root)
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    def row(n: String) = Seq((n, 10L)).toDF("filename", "size_bytes")
+      .withColumn("downloaded_at", org.apache.spark.sql.functions.lit(now))
+    // Spark's way: appends by a Spark write and a Spark rewrite (every
+    // field optional)
+    Seq("a.zip", "b.zip").foreach(n => row(n).coalesce(1).write.mode("append").parquet(dir))
+    h.vacuum(bound = 0L)
+    row("c.zip").coalesce(1).write.mode("append").parquet(dir)
+    Seq("d.zip", "e.zip").foreach(n => h.add(row(n)))
+    val all = Set("a.zip", "b.zip", "c.zip", "d.zip", "e.zip")
+    def assertOneSchema(): Unit = {
+      val read = spark.read.parquet(dir)
+      parquetFiles(dir).foreach(f => assert(ParquetMeta.sparkSchema(spark, f) === read.schema, f))
+      assert(read.as[(String, Long, java.sql.Timestamp)].collect().map(_._1).toSet === all)
+    }
+    assert(parquetFiles(dir).size === 4)
+    assertOneSchema()
+    // a driver add writes the physical schema and Spark schema key of a Spark append
+    def footer(f: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      try {
+        val m = r.getFooter.getFileMetaData
+        (m.getSchema, m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally r.close()
+    }
+    val byKey = parquetFiles(dir).map(f => spark.read.parquet(f).as[(String, Long, java.sql.Timestamp)]
+      .collect().head._1 -> footer(f)).toMap
+    assert(byKey("d.zip") === byKey("c.zip"))
+    assert(byKey("d.zip")._1.toString.contains("required int96 downloaded_at"), byKey("d.zip"))
+    assert(h.filterNew(Seq("a.zip", "c.zip", "e.zip", "f.zip")) === Seq("f.zip"))
+    val jobs = jobsOf(h.vacuum())
+    assert(jobs.isEmpty, jobs)
+    assert(parquetFiles(dir).size === 1)
+    assertOneSchema()
+    val reopened = HistoryTable.downloaded(spark, root)
+    assert(reopened.keys() === all)
+    assert(reopened.filterNew(Seq("a.zip", "c.zip", "e.zip", "f.zip")) === Seq("f.zip"))
   }
 }
