@@ -133,8 +133,7 @@ object Compactor {
     val dir = s"$lakeRoot/$table/$partition"
     val f = fs(spark, dir)
     recover(f, dir)
-    val statuses = f.listStatus(new Path(dir))
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
+    val statuses = f.listStatus(new Path(dir)).filter(s => ParquetMeta.visible(s.getPath.getName))
     val inputs = statuses.filter(s => !isCompactedName(s.getPath.getName)).map(_.getPath)
     val existingCompacted = statuses.filter(s => isCompactedName(s.getPath.getName)).map(_.getPath)
     if (inputs.isEmpty) return None
@@ -171,10 +170,12 @@ object Compactor {
     hidden.foreach(h => f.rename(h, new Path(dir, promotedName(h.getName))))
     f.delete(new Path(dir, Manifest), false)
     f.delete(tmp, true)
-    f.listStatus(new Path(dir)).map(_.getPath)
-      .filter(p => p.getName.startsWith("_") ||
-        (p.getName.startsWith(".") && !p.getName.startsWith(NewPrefix) && p.getName != Manifest))
-      .foreach(p => f.delete(p, true))
+    // sweep markers and stray checksums, but never a hidden parquet file
+    // (or its checksum): that is another writer's staged output
+    f.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(n => (n.startsWith("_") || n.startsWith(".")) && !n.startsWith(NewPrefix) &&
+        n != Manifest && !n.contains(".parquet"))
+      .foreach(n => f.delete(new Path(dir, n), true))
     Some(Stat(table, partition, inputs.length, rows))
   }
 
@@ -198,7 +199,7 @@ object Compactor {
         // never candidates: generation names change on every rewrite, so
         // treating them as fresh ingest would re-dirty the partition on
         // every sweep forever
-        .filter(x => x.getName.endsWith(".parquet") && !isCompactedName(x.getName))
+        .filter(x => ParquetMeta.visible(x.getName) && !isCompactedName(x.getName))
         .map(x => (t, p, s"$t/$p/${x.getName}"))
     }
     val freshSet = history.filterNew(candidates.map(_._3)).toSet

@@ -5,18 +5,13 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, Type, Types}
 import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -49,14 +44,17 @@ final class HistoryTable(spark: SparkSession, dir: String, keyCol: String) {
   private[sources] def files(): Seq[FileStatus] = {
     val p = new Path(dir)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(s => visible(s.getPath.getName)).sortBy(_.getPath.toString).toSeq
+    else fs.listStatus(p).filter(s => ParquetMeta.visible(s.getPath.getName)).sortBy(_.getPath.toString).toSeq
   }
 
-  /** Exactly `inputs`, read under the first one's footer schema — the
-    * schema Spark infers for the directory, without its inference job. */
-  private def read(inputs: Seq[Path]): DataFrame =
-    spark.read.schema(ParquetMeta.sparkSchema(spark, inputs.head.toString))
-      .parquet(inputs.map(_.toString): _*)
+  /** Exactly `inputs`, read under the union of their footer schemas:
+    * each column once, typed as the first file that has it, in first-seen
+    * order, so a column only some files carry reads as null in the others.
+    * No inference job. */
+  private def read(inputs: Seq[Path]): DataFrame = {
+    val fields = inputs.flatMap(p => ParquetMeta.sparkSchema(spark, p.toString).fields)
+    spark.read.schema(StructType(fields.distinctBy(_.name))).parquet(inputs.map(_.toString): _*)
+  }
 
   /** Append one event file (like `add()` at table_history.rs:106-134 —
     * one file per event, vacuumed later), written on the driver with no
@@ -66,7 +64,7 @@ final class HistoryTable(spark: SparkSession, dir: String, keyCol: String) {
   def add(rows: DataFrame): Unit = rows.queryExecution.optimizedPlan match {
     case local: LocalRelation =>
       publish(new Path(dir, s"${UUID.randomUUID()}.parquet")) { tmp =>
-        writeRows(tmp, local.schema, local.data.iterator)
+        ParquetRowWriter(spark).write(tmp, local.schema, local.data.iterator)
         tmp
       }
     case plan => throw new IllegalArgumentException(
@@ -156,7 +154,7 @@ final class HistoryTable(spark: SparkSession, dir: String, keyCol: String) {
       publish(dst) { tmp =>
         val w = ExampleParquetWriter.builder(tmp).withConf(c).withType(schema)
           .withExtraMetaData((meta.asScala - ModelNameKey).asJava)
-          .withCompressionCodec(codec).build()
+          .withCompressionCodec(ParquetRowWriter.codec(spark)).build()
         try inputs.foreach(p => withRecords(c, p, identity)((_, _, records) => records.foreach(w.write)))
         finally w.close()
         tmp
@@ -183,22 +181,6 @@ final class HistoryTable(spark: SparkSession, dir: String, keyCol: String) {
 
   private def rename(from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
-
-  /** `rows` as one parquet file written exactly as a Spark write of
-    * `schema` writes it: Spark's `ParquetWriteSupport` under the
-    * session's parquet confs and compression codec. */
-  private def writeRows(file: Path, schema: StructType, rows: Iterator[InternalRow]): Unit = {
-    val c = new Configuration(conf)
-    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
-      .foreach(e => c.set(e.key, spark.conf.get(e.key)))
-    ParquetWriteSupport.setSchema(schema, c)
-    val w = new RowWriterBuilder(file).withConf(c).withCompressionCodec(codec).build()
-    try rows.foreach(w.write) finally w.close()
-  }
-
-  private def codec: CompressionCodecName = CompressionCodecName.valueOf(
-    new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)
 }
 
 object HistoryTable {
@@ -220,9 +202,6 @@ object HistoryTable {
   /** parquet-hadoop stamps its object-model name on every file it writes,
     * so a copied footer's value must not be passed back in. */
   private val ModelNameKey = "writer.model.name"
-
-  private def visible(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
 
   /** The schema every one of `schemas` copies into verbatim: their
     * common schema, or — when flat schemas differ only in which fields
@@ -259,13 +238,5 @@ object HistoryTable {
       }
       f(meta, reader.getRecordCount, records)
     } finally reader.close()
-  }
-
-  /** A parquet-hadoop writer of Spark's internal rows. */
-  private final class RowWriterBuilder(file: Path)
-      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
-    override protected def self(): RowWriterBuilder = this
-    override protected def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
-      new ParquetWriteSupport
   }
 }

@@ -1,9 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
+import org.apache.spark.input.PortableDataStream
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, BoundReference,
+  Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 import java.util.zip.ZipInputStream
 
 /** The NEM multi-table CSV wire format: record-type markers in column 0.
@@ -30,8 +42,10 @@ import java.util.zip.ZipInputStream
   * Scale design: one task per input file (files are independently
   * splittable units; state is per-file and strictly sequential within a
   * file). The splitter emits a narrow `(table, date, header, values)`
-  * stream; per-table frames are then column-ized and written
-  * `partitionBy(date)` — all downstream work is plain declarative Spark.
+  * record stream. [[splitToLake]] scans it twice, in two jobs whatever
+  * the table count: once for every table's type samples, once to type
+  * and write every table's records, as the reference writes each table
+  * batch of a file from one streaming pass (chunk.rs:347-414).
   */
 object NemCsv {
 
@@ -151,15 +165,21 @@ object NemCsv {
     * materialized). */
   def rawRecords(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val files = spark.sparkContext.binaryFiles(paths.mkString(","), paths.size.min(256))
-    files.flatMap { case (name, data) =>
-      if (name.toLowerCase.endsWith(".zip"))
-        zipRecords(name, new ZipInputStream(data.open()))
-      else {
-        val br = new BufferedReader(new InputStreamReader(data.open(), StandardCharsets.UTF_8))
-        scanLines(name, Iterator.continually(br.readLine()).takeWhile(_ != null))
-      }
-    }.toDF()
+    inputFiles(spark, paths).flatMap(records).toDF()
+  }
+
+  private def inputFiles(spark: SparkSession, paths: Seq[String]): RDD[(String, PortableDataStream)] =
+    spark.sparkContext.binaryFiles(paths.mkString(","), paths.size.min(256))
+
+  /** One input file's records, scanned lazily. */
+  private def records(file: (String, PortableDataStream)): Iterator[RawRecord] = {
+    val (name, data) = file
+    if (name.toLowerCase.endsWith(".zip"))
+      zipRecords(name, new ZipInputStream(data.open()))
+    else {
+      val br = new BufferedReader(new InputStreamReader(data.open(), StandardCharsets.UTF_8))
+      scanLines(name, Iterator.continually(br.readLine()).takeWhile(_ != null))
+    }
   }
 
   /** Fully streaming scan over a zip's csv entries: ZipInputStream is
@@ -184,10 +204,6 @@ object NemCsv {
       override def next(): RawRecord = { advance(); cur.next() }
     }
 
-  /** Distinct logical tables present in a raw record stream. */
-  def tablesIn(raw: DataFrame): Seq[String] =
-    raw.select("table").distinct().collect().map(_.getString(0)).toSeq
-
   private val TsPattern = java.util.regex.Pattern.compile(
     """\d{4}/\d{2}/\d{2} \d{2}:\d{2}:\d{2}""")
 
@@ -199,100 +215,210 @@ object NemCsv {
     * (chunk.rs:324); we cap at the first 1,000 records of each file. */
   val SampleRows = 1000
 
-  /** What column-izing one logical table needs: its row count, header
-    * and each column's first non-null sample (None: all null). */
-  private[sources] final case class TableMeta(table: String, rows: Long, header: Seq[String],
+  /** What column-izing one logical table needs: its header and each
+    * column's first non-null sample (None: all null). */
+  private[sources] final case class TableMeta(table: String, header: Seq[String],
       samples: Seq[Option[String]])
 
-  /** Every table's [[TableMeta]] from ONE aggregation over the raw stream,
-    * whatever the table count. Each record explodes to a position-0 row,
-    * which carries its header and is counted, and one row per non-empty
-    * value of its first [[SampleRows]] records (position = column + 1;
-    * empty string is null-equivalent pre-cast). Grouped by (table,
-    * position), `min` over (file, seq, …) structs picks the first header
-    * and the first value in file order — deterministic across partitions
-    * (a bare `first()` is not); (file, seq) is unique within a table, so
-    * the payload never decides. */
-  private[sources] def tableMeta(raw: DataFrame): Seq[TableMeta] = {
-    val byPos = raw
-      .select(col("table"), col("file"), col("seq"), col("header"),
-        posexplode(concat(array(lit("")),
-          when(col("seq") <= SampleRows, col("values")).otherwise(typedLit(Seq.empty[String]))))
-          .as(Seq("pos", "v")))
-      .filter(col("pos") === 0 || col("v") =!= "")
-      .groupBy("table", "pos")
-      .agg(count(lit(1)).as("n"), min(struct(col("file"), col("seq"),
-        when(col("pos") === 0, col("header")).as("header"),
-        when(col("pos") > 0, col("v")).as("v"))).as("s"))
-      .select(col("table"), col("pos"), col("n"), col("s.header"), col("s.v"))
-      .collect()
-      .groupBy(_.getString(0))
-    byPos.toSeq.sortBy(_._1).map { case (t, rs) =>
-      val record = rs.find(_.getInt(1) == 0).get
-      val header = record.getSeq[String](3)
-      val samples = rs.filter(_.getInt(1) > 0).map(r => (r.getInt(1) - 1) -> r.getString(4)).toMap
-      TableMeta(t, record.getLong(2), header, header.indices.map(samples.get))
+  /** A record's place in the stream: (file, seq), unique within a table. */
+  private type Key = (String, Long)
+
+  /** `a` precedes `b`: files in UTF-8 byte order (Spark's string order),
+    * then seq. */
+  private def before(a: Key, b: Key): Boolean =
+    if (a._1 == b._1) a._2 < b._2
+    else UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0
+
+  /** One table's [[TableMeta]] as far as some of its records show it: the
+    * header of the first record and, per column, the first non-empty
+    * value among records with seq <= [[SampleRows]] (empty string is
+    * null-equivalent pre-cast), each with the key it came from. "First" is
+    * the least (file, seq), so partials of disjoint records merge in any
+    * order to the same meta. */
+  private final class MetaPartial extends Serializable {
+    private var first: Key = null
+    private var header: Seq[String] = Nil
+    private val samples = scala.collection.mutable.HashMap.empty[Int, (Key, String)]
+
+    private def offerHeader(k: Key, h: Seq[String]): Unit =
+      if (first == null || before(k, first)) { first = k; header = h }
+    private def offerSample(i: Int, k: Key, v: String): Unit =
+      if (samples.get(i).forall(s => before(k, s._1))) samples(i) = (k, v)
+
+    def add(r: RawRecord): this.type = {
+      val k = (r.file, r.seq)
+      offerHeader(k, r.header)
+      if (r.seq <= SampleRows)
+        r.values.iterator.zipWithIndex.foreach { case (v, i) => if (v.nonEmpty) offerSample(i, k, v) }
+      this
     }
+
+    def merge(o: MetaPartial): this.type = {
+      offerHeader(o.first, o.header)
+      o.samples.foreach { case (i, (k, v)) => offerSample(i, k, v) }
+      this
+    }
+
+    def meta(table: String): TableMeta =
+      TableMeta(table, header, header.indices.map(i => samples.get(i).map(_._2)))
   }
 
-  /** Column-ize one logical table given its precomputed header and
-    * per-column first-non-null samples — no inference jobs of its own.
-    * All columns nullable; empty string → null before any cast. */
-  def tableFrameWith(raw: DataFrame, table: String, header: Seq[String],
-      samples: Seq[Option[String]]): DataFrame = {
-    val recs = raw.filter(col("table") === table)
-    val stringCols = header.zipWithIndex.map { case (h, i) =>
-      when(element_at(col("values"), i + 1) === "", lit(null))
-        .otherwise(element_at(col("values"), i + 1)).as(h)
-    }
-    val strs = recs.select((stringCols :+ col("date")): _*)
+  /** Each table's partial meta over `recs`. */
+  private def partials(recs: Iterator[RawRecord]): Map[String, MetaPartial] = {
+    val byTable = scala.collection.mutable.HashMap.empty[String, MetaPartial]
+    recs.foreach(r => byTable.getOrElseUpdate(r.table, new MetaPartial).add(r))
+    byTable.toMap
+  }
+
+  /** Every table's [[TableMeta]], in table order, from per-task partials. */
+  private def tableMeta(parts: Seq[Map[String, MetaPartial]]): Seq[TableMeta] =
+    parts.flatten.groupMapReduce(_._1)(_._2)(_ merge _).toSeq.sortBy(_._1).map { case (t, p) => p.meta(t) }
+
+  /** The reference's three column types. */
+  private val ColumnTypes = Seq[DataType](StringType, DoubleType, TimestampType)
+
+  /** A column's type from its sample: double or timestamp where the sample
+    * looks like one, else string (an all-null column stays string). */
+  private def columnType(sample: Option[String]): DataType = sample match {
+    case Some(x) if looksDouble(x) => DoubleType
+    case Some(x) if looksTimestamp(x) => TimestampType
+    case _ => StringType
+  }
+
+  /** A raw string column as one of [[ColumnTypes]]; empty string → null
+    * before any cast. */
+  private def typed(t: DataType, v: Column): Column = {
+    val s = when(v === "", lit(null)).otherwise(v)
     // try_cast/try_to_timestamp: a mixed-type value in an inferred column
     // nulls out (reference convert_numeric_column yields null,
     // chunk.rs:211-227) — under Spark 4 ANSI mode a plain cast would
     // instead fail the whole split job
-    val typed = header.zipWithIndex.map { case (h, i) =>
-      samples(i) match {
-        case None => col(h) // all-null column stays string
-        case Some(s) if looksDouble(s) => col(h).try_cast("double").as(h)
-        case Some(s) if looksTimestamp(s) =>
-          // wall time at fixed +10:00 (AEST, no DST) → UTC instant
-          to_utc_timestamp(try_to_timestamp(col(h), lit("yyyy/MM/dd HH:mm:ss")), "+10:00").as(h)
-        case Some(_) => col(h)
-      }
+    t match {
+      case DoubleType => s.try_cast("double")
+      // wall time at fixed +10:00 (AEST, no DST) → UTC instant
+      case TimestampType => to_utc_timestamp(try_to_timestamp(s, lit("yyyy/MM/dd HH:mm:ss")), "+10:00")
+      case _ => s
     }
-    strs.select((typed :+ col("date")): _*)
   }
 
   /** Column-ize one logical table from the raw stream and apply the
     * reference's 3-type inference (first non-null value in the first
-    * [[SampleRows]] records of each file decides, chunk.rs:69-141). */
+    * [[SampleRows]] records of each file decides, chunk.rs:69-141). One
+    * job collects the table's meta. */
   def tableFrame(raw: DataFrame, table: String): DataFrame = {
-    val m = tableMeta(raw.filter(col("table") === table)).head
-    tableFrameWith(raw, table, m.header, m.samples)
+    import raw.sparkSession.implicits._
+    val recs = raw.filter(col("table") === table)
+    val m = tableMeta(recs.as[RawRecord].rdd.mapPartitions(rs => Iterator(partials(rs))).collect().toSeq).head
+    val cols = m.header.zip(m.samples).zipWithIndex.map { case ((h, sample), i) =>
+      typed(columnType(sample), element_at(col("values"), i + 1)).as(h)
+    }
+    recs.select((cols :+ col("date")): _*)
+  }
+
+  /** Each table's typed columns as expressions over a row of its record's
+    * values, one string per column, and their schema: [[typed]] resolved
+    * once per column type over an empty one-column relation (no job), as
+    * the optimized select list Spark would run, then bound to each
+    * column's ordinal. */
+  private def typing(spark: SparkSession, meta: Seq[TableMeta]): Map[String, (Seq[Expression], StructType)] = {
+    val v = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(StructField("v", StringType))))
+    val byType = v.select(ColumnTypes.map(t => typed(t, col("v")).as(t.typeName)): _*)
+      .queryExecution.optimizedPlan match {
+        case Project(list, child) => ColumnTypes.zip(
+          BindReferences.bindReferences(list.map { case a: Alias => a.child }, AttributeSeq(child.output))).toMap
+        case plan => throw new IllegalStateException(s"no select list in\n$plan")
+      }
+    meta.map { m =>
+      val cols = m.header.zip(m.samples).zipWithIndex.map { case ((h, sample), i) =>
+        val e = byType(columnType(sample)).transform { case b: BoundReference => b.copy(ordinal = i) }
+        (e, StructField(h, e.dataType, e.nullable))
+      }
+      m.table -> ((cols.map(_._1), StructType(cols.map(_._2))))
+    }.toMap
   }
 
   /** Full split: read files, write each logical table to
-    * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-N.parquet`, return a summary frame
-    * (table, rows). Compression is zstd (the reference's brotli-5 study:
-    * README.md:14-27; the brotli codec jar is not bundled with Spark, zstd
-    * is the closest ratio — see BASELINE.md). */
+    * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-<id>-<n>.<codec>.parquet`, return a summary
+    * frame (table, rows written). Compression is zstd (the reference's brotli-5
+    * study: README.md:14-27; the brotli codec jar is not bundled with
+    * Spark, zstd is the closest ratio — see BASELINE.md).
+    *
+    * Two Spark jobs over the input files, one task per file split,
+    * whatever the table count, and no cache:
+    *  1. meta: each task scans its files and returns each table's
+    *     [[MetaPartial]]; the driver merges them into every table's
+    *     header and type samples, and resolves each table's typed select
+    *     list ([[typing]]).
+    *  2. write: each task scans its files again, types each record with
+    *     its table's projection and writes it through [[ParquetRowWriter]]
+    *     to a staged file under the hidden `<lakeRoot>/<table>/_split-<id>/`
+    *     (Spark's `_temporary` layout). A task holds at most one open
+    *     writer: a file is closed when the record stream moves to another
+    *     (table, date). It returns (table, date, staged path, rows) per
+    *     file.
+    * After the write job the driver renames each staged file into its
+    * `date=` directory; the staging directories are deleted afterwards,
+    * also when a job fails, so a failed split publishes nothing. The
+    * driver holds only the metas and the list of staged files. */
   def splitToLake(spark: SparkSession, paths: Seq[String], lakeRoot: String,
       compression: String = "zstd"): DataFrame = {
     import spark.implicits._
-    val raw = rawRecords(spark, paths).cache()
+    val files = inputFiles(spark, paths)
+    val meta = tableMeta(files.mapPartitions(in => Iterator(partials(in.flatMap(records)))).collect().toSeq)
+    val written = if (meta.isEmpty) Seq.empty else {
+      val id = UUID.randomUUID().toString
+      val typings = typing(spark, meta)
+      val writer = ParquetRowWriter(spark, Some(compression))
+      val fs = new Path(lakeRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try {
+        val staged = SQLExecution.withSQLConfPropagated(castToImpl(spark)) {
+          files.mapPartitions(in => writeStaged(in.flatMap(records), typings, writer, lakeRoot, id)).collect()
+        }
+        staged.zipWithIndex.foreach { case ((table, date, from, _), n) =>
+          val to = new Path(s"$lakeRoot/$table/date=$date", f"part-$id-$n%05d${writer.extension}")
+          if (!fs.mkdirs(to.getParent) || !fs.rename(new Path(from), to))
+            throw new java.io.IOException(s"rename $from -> $to failed")
+        }
+        staged.toSeq
+      } finally meta.foreach(m => fs.delete(new Path(s"$lakeRoot/${m.table}/_split-$id"), true))
+    }
+    written.groupMapReduce(_._1)(_._4)(_ + _).toSeq.sorted.toDF("table", "rows")
+  }
+
+  /** The write task of [[splitToLake]]: `recs` typed and written to one
+    * staged file per run of records of one (table, date), at most one
+    * writer open at a time; returns (table, date, staged path, rows) per
+    * file. */
+  private def writeStaged(recs: Iterator[RawRecord], typings: Map[String, (Seq[Expression], StructType)],
+      writer: ParquetRowWriter, lakeRoot: String, id: String): Iterator[(String, String, String, Long)] = {
+    val task = TaskContext.get()
+    val projections = scala.collection.mutable.HashMap.empty[String, UnsafeProjection]
+    val written = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, Long)]
+    final class Staged(val table: String, val date: String) {
+      val file = new Path(s"$lakeRoot/$table/_split-$id/" +
+        s"part-${task.partitionId}-${task.attemptNumber}-${written.size}${writer.extension}")
+      val out = writer.open(file, typings(table)._2)
+      var rows = 0L
+    }
+    var open: Staged = null
+    def close(): Unit = if (open != null) {
+      val s = open
+      open = null
+      s.out.close()
+      written += ((s.table, s.date, s.file.toString, s.rows))
+    }
     try {
-      // one aggregation: every table's row count, header and samples
-      val meta = tableMeta(raw)
-      // then the per-table writes run concurrently (disjoint output dirs) —
-      // total job count is O(1) in table count + one write per table
-      val counts = graft.Par.mapBounded(meta.toIndexedSeq) { m =>
-        tableFrameWith(raw, m.table, m.header, m.samples)
-          .write.mode("append").partitionBy("date")
-          .option("compression", compression)
-          .parquet(s"$lakeRoot/${m.table}")
-        Some((m.table, m.rows))
+      recs.foreach { r =>
+        if (open == null || open.table != r.table || open.date != r.date) {
+          close()
+          open = new Staged(r.table, r.date)
+        }
+        val project = projections.getOrElseUpdate(r.table, UnsafeProjection.create(typings(r.table)._1))
+        open.out.write(project(new GenericInternalRow(r.values.map(UTF8String.fromString).toArray[Any])))
+        open.rows += 1
       }
-      counts.toDF("table", "rows")
-    } finally raw.unpersist()
+      close()
+    } finally if (open != null) open.out.close() // failed: the driver deletes the staged file
+    written.iterator
   }
 }

@@ -47,16 +47,15 @@ object NemFixture {
     try {
       Files.write(Paths.get(in.toString, "PUBLIC_FPP_20250607.csv"),
         csv.getBytes(StandardCharsets.UTF_8))
-      NemCsv.splitToLake(spark, Seq(s"$in/PUBLIC_FPP_20250607.csv"), lake.toString)
-      val summary = NemCsv.tablesIn(
-        NemCsv.rawRecords(spark, Seq(s"$in/PUBLIC_FPP_20250607.csv")))
-        .sorted.map { t =>
-          val df = spark.read.parquet(s"$lake/$t")
-          val doubles = df.schema.count(_.dataType.typeName == "double")
-          val tss = df.schema.count(_.dataType.typeName == "timestamp")
-          (t, df.count(), doubles, tss,
-            df.select("date").distinct().collect().map(_.get(0).toString).sorted.mkString(","))
-        }
+      val tables = NemCsv.splitToLake(spark, Seq(s"$in/PUBLIC_FPP_20250607.csv"), lake.toString)
+        .collect().map(_.getString(0))
+      val summary = tables.sorted.toSeq.map { t =>
+        val df = spark.read.parquet(s"$lake/$t")
+        val doubles = df.schema.count(_.dataType.typeName == "double")
+        val tss = df.schema.count(_.dataType.typeName == "timestamp")
+        (t, df.count(), doubles, tss,
+          df.select("date").distinct().collect().map(_.get(0).toString).sorted.mkString(","))
+      }
       summary.toDF("table", "rows", "n_double_cols", "n_ts_cols", "partitions")
     } finally {
       deleteRecursively(in)

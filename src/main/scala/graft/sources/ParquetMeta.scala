@@ -29,6 +29,14 @@ object ParquetMeta {
   private[graft] def open(conf: Configuration, file: Path): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), HadoopReadOptions.builder(conf, file).build())
 
+  /** A name Spark's file listing skips: hidden (`.`), or a marker or
+    * staging name (`_`). */
+  private def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
+
+  /** A parquet data file the lake's readers see: the one rule for Spark's
+    * listing, the compactor, the histories and the reconciliation. */
+  def visible(name: String): Boolean = name.endsWith(".parquet") && !hidden(name)
+
   /** Footer-only metadata of one parquet file. */
   def read(spark: SparkSession, file: String): FileMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -57,9 +65,7 @@ object ParquetMeta {
     val fs = p.getFileSystem(conf)
     val file =
       if (!fs.getFileStatus(p).isDirectory) p
-      else fs.listStatus(p).map(_.getPath)
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .minBy(_.toString)
+      else fs.listStatus(p).map(_.getPath).filterNot(f => hidden(f.getName)).minBy(_.toString)
     val reader = open(conf, file)
     val footer = try new Footer(file, reader.getFooter) finally reader.close()
     val sql = spark.sessionState.conf
@@ -113,17 +119,19 @@ object ParquetMeta {
     columnStats(spark, file).toDF()
   }
 
-  /** Metadata for every parquet file under a directory (recursive). */
+  /** Metadata for every visible parquet file under a directory,
+    * recursively, never descending into a hidden or staging directory
+    * (such as a running write's `_temporary` or `_split-` dir). */
   def readDir(spark: SparkSession, dir: String): Seq[FileMeta] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(dir), true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[FileMeta]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet"))
-        out += read(spark, s.getPath.toString)
+    def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (hidden(name)) Nil
+      else if (s.isDirectory) walk(s.getPath)
+      else if (visible(name)) Seq(s.getPath)
+      else Nil
     }
-    out.toSeq
+    walk(new Path(dir)).map(f => read(spark, f.toString))
   }
 
   def toDF(spark: SparkSession, metas: Seq[FileMeta]): DataFrame = {

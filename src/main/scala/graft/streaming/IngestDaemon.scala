@@ -14,9 +14,10 @@ import graft.sources.{Fetch, HistoryTable, NemCsv}
   * `runOnce` processes one feed tick (the reference cycles feeds
   * round-robin at 60 s — compose with [[Fetch.RoundRobin]] and a driver
   * loop or `Trigger.ProcessingTime`). The split is the tick's only Spark
-  * work: the fetch, both history gates and both history adds run on the
-  * driver ([[HistoryTable]]). Idempotent: re-running against the same
-  * feed downloads and processes nothing new.
+  * work, two jobs whatever the table count ([[NemCsv.splitToLake]]): the
+  * fetch, both history gates and both history adds run on the driver
+  * ([[HistoryTable]]). Idempotent: re-running against the same feed
+  * downloads and processes nothing new.
   */
 object IngestDaemon {
 

@@ -146,6 +146,10 @@ class HistoryTableSpec extends SparkSpec {
     h.add(Seq(("b.zip", 2L, 7L)).toDF("filename", "size_bytes", "batch_id"))
     h.vacuum()
     assert(h.files().size === 1)
+    // every file's columns survive: batch_id is null where a file lacked it
+    val batchIds = spark.read.parquet(h.files().head.getPath.toString)
+      .select("filename", "batch_id").as[(String, Option[Long])].collect().toMap
+    assert(batchIds === Map("a.zip" -> None, "b.zip" -> Some(7L)))
     assert(h.keys() === Set("a.zip", "b.zip"))
     assert(h.filterNew(Seq("a.zip", "b.zip", "c.zip")) === Seq("c.zip"))
   }

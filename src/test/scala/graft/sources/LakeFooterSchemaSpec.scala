@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import graft.plans.Compactor
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
+import org.apache.hadoop.fs.Path
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -15,13 +16,34 @@ import scala.jdk.CollectionConverters._
   * or vacuum. */
 class LakeFooterSchemaSpec extends SparkSpec {
 
-  /** Visible parquet files under `dir`, recursively, in path order. */
+  /** Visible parquet files under `dir`, recursively, in path order: the
+    * lake readers' one rule. */
   private def parquetFiles(dir: String): Seq[String] =
-    Files.walk(Paths.get(dir)).iterator().asScala.map(_.toString)
-      .filter { p =>
-        val n = p.split('/').last
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }.toSeq.sorted
+    ParquetMeta.readDir(spark, dir).map(_.path).sorted
+
+  /** A parquet file's physical schema and Spark schema footer key. */
+  private def footer(f: String) = {
+    val r = ParquetMeta.open(spark.sparkContext.hadoopConfiguration, new Path(f))
+    try {
+      val m = r.getFooter.getFileMetaData
+      (m.getSchema, m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    } finally r.close()
+  }
+
+  /** A split fixture with timestamp, double and all-null string columns. */
+  private def splitFixture(dir: String): String = {
+    val csv = Paths.get(dir, "PUBLIC_FPP_20250607.csv")
+    Files.writeString(csv,
+      """C,NEMP.WORLD,FPP,AEMO,PUBLIC,2025/06/07,23:15:04,1,,1
+        |I,FPP,UNIT_MW,1,MEASUREMENT_DATETIME,FPP_UNITID,MEASURED_MW,NOTE
+        |D,FPP,UNIT_MW,1,"2025/06/07 23:10:04",ARWF1,45.2,
+        |D,FPP,UNIT_MW,1,"2025/06/07 23:10:08",ARWF1,,
+        |I,FPP,REGION_FREQ_MEASURE,1,MEASUREMENT_DATETIME,REGIONID,FREQ_MEASURE_HZ
+        |D,FPP,REGION_FREQ_MEASURE,1,"2025/06/07 23:10:04",NSW1,0.003
+        |C,"END OF REPORT",3
+        |""".stripMargin)
+    csv.toString
+  }
 
   private def assertInferred(paths: Seq[String]): Unit = {
     assert(paths.nonEmpty)
@@ -44,16 +66,8 @@ class LakeFooterSchemaSpec extends SparkSpec {
 
   test("sparkSchema = inferred schema: split output with timestamp, double and all-null string columns") {
     val dir = tmpDir("footer-split")
-    val csv = Paths.get(dir, "PUBLIC_FPP_20250607.csv")
-    Files.writeString(csv,
-      """C,NEMP.WORLD,FPP,AEMO,PUBLIC,2025/06/07,23:15:04,1,,1
-        |I,FPP,UNIT_MW,1,MEASUREMENT_DATETIME,FPP_UNITID,MEASURED_MW,NOTE
-        |D,FPP,UNIT_MW,1,"2025/06/07 23:10:04",ARWF1,45.2,
-        |D,FPP,UNIT_MW,1,"2025/06/07 23:10:08",ARWF1,,
-        |C,"END OF REPORT",2
-        |""".stripMargin)
     val lake = s"$dir/lake"
-    NemCsv.splitToLake(spark, Seq(csv.toString), lake).collect()
+    NemCsv.splitToLake(spark, Seq(splitFixture(dir)), lake).collect()
     val files = parquetFiles(lake)
     assertInferred(files)
     val types = files.flatMap(f => ParquetMeta.sparkSchema(spark, f).fields)
@@ -61,6 +75,42 @@ class LakeFooterSchemaSpec extends SparkSpec {
     assert(types("MEASUREMENT_DATETIME") === TimestampType)
     assert(types("MEASURED_MW") === DoubleType)
     assert(types("NOTE") === StringType) // all null: stays string
+  }
+
+  test("split files carry the parquet schema and Spark schema key of a DataFrameWriter write of the same frame") {
+    val dir = tmpDir("footer-writer")
+    val csv = splitFixture(dir)
+    val lake = s"$dir/lake"
+    val tables = NemCsv.splitToLake(spark, Seq(csv), lake).collect().map(_.getString(0))
+    assert(tables.length === 2)
+    val raw = NemCsv.rawRecords(spark, Seq(csv))
+    tables.foreach { t =>
+      val ref = s"$dir/ref/$t"
+      NemCsv.tableFrame(raw, t).write.partitionBy("date").parquet(ref)
+      val split = parquetFiles(s"$lake/$t").map(footer)
+      assert(split.nonEmpty && split.forall(_ == split.head), t)
+      assert(parquetFiles(ref).map(footer).toSet === Set(split.head), t)
+    }
+  }
+
+  test("hidden and staged parquet files are not compacted, deleted or counted") {
+    import spark.implicits._
+    val lake = tmpDir("visible")
+    val table = s"$lake/T---VIS---1"
+    val part = s"$table/date=2025-06-07"
+    (1 to 2).foreach(i => Seq((i.toDouble, s"id$i")).toDF("v", "id").coalesce(1)
+      .write.mode("append").parquet(part))
+    val one = Files.list(Paths.get(part)).iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    val hidden = Files.copy(one, Paths.get(part, ".x.parquet"))
+    val staged = Paths.get(table, "_split-x", "date=2025-06-07", "part-0.parquet")
+    Files.createDirectories(staged.getParent)
+    Files.copy(one, staged)
+    assert(ParquetMeta.readDir(spark, table).map(_.rows).sum === 2)
+    val stats = Compactor.runOnce(spark, lake, HistoryTable.compacted(spark, tmpDir("visible-hist")))
+    assert(stats.map(s => (s.inputFiles, s.rows)) === Seq((2, 2L)))
+    assert(Files.exists(hidden) && Files.exists(staged))
+    assert(parquetFiles(table).map(_.split('/').last) === Seq("compacted.parquet"))
+    assert(ParquetMeta.readDir(spark, table).map(_.rows).sum === 2)
   }
 
   test("sparkSchema = inferred schema: single-file and multi-file compacted output") {
@@ -186,14 +236,6 @@ class LakeFooterSchemaSpec extends SparkSpec {
     assert(parquetFiles(dir).size === 4)
     assertOneSchema()
     // a driver add writes the physical schema and Spark schema key of a Spark append
-    def footer(f: String) = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
-      try {
-        val m = r.getFooter.getFileMetaData
-        (m.getSchema, m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-      } finally r.close()
-    }
     val byKey = parquetFiles(dir).map(f => spark.read.parquet(f).as[(String, Long, java.sql.Timestamp)]
       .collect().head._1 -> footer(f)).toMap
     assert(byKey("d.zip") === byKey("c.zip"))
