@@ -2,11 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sources.{HistoryTable, ParquetMeta}
 
 /** Partition compactor: merge the many small per-ingest parquet files of
-  * each `<table>/date=D/` partition into compacted output, with
+  * each `<table>/date=D/` partition into one `compacted.parquet`, with
   * schema evolution, atomic publication and history bookkeeping —
   * the reference's compactor binary
   * (/root/reference/src/bin/compactor.rs:33-111,584-792).
@@ -14,13 +14,9 @@ import graft.sources.{HistoryTable, ParquetMeta}
   * Scale: each partition is one independent unit of work; on a cluster
   * the per-partition jobs are scheduled concurrently (the reference used a
   * rayon scope + per-partition mutex; Spark's scheduler + disjoint output
-  * paths make the lock unnecessary). Below `targetFileBytes` a
-  * partition rewrites through `coalesce(1)` into a single
-  * `compacted.parquet` (the reference's one-file contract); above it
-  * the rewrite fans out to `ceil(bytes / target)` bounded files — the
-  * hot-partition escape hatch a 100 TB lake needs, since no sane
-  * single file or single write task should absorb an unbounded
-  * partition.
+  * paths make the lock unnecessary). A partition rewrites through
+  * `coalesce(1)`: its one write task streams the rows and buffers one
+  * row group, so a hot partition costs one task's time, not memory.
   */
 object Compactor {
 
@@ -41,177 +37,126 @@ object Compactor {
     } yield (t.getPath.getName, p.getPath.getName)
   }
 
-  private val NewFile = ".compact_new.parquet"
-  private val NewPrefix = ".compact_new"
+  private val Compacted = "compacted.parquet"
+  private val Tmp = ".compact_tmp"
   private val Manifest = ".compact_manifest"
+  // last line of a complete manifest: a manifest cut short by a crash
+  // mid-write lists too few inputs, and no input was deleted yet
+  private val ManifestEnd = "#end"
 
-  // Generation ids must not repeat: two compactions of the same
-  // partition within one millisecond (fast tests, clock step-back) must
-  // not reuse names, or the recovery invariant "a new generation never
-  // collides with the manifest-listed old one" silently weakens. millis
-  // gives cross-process ordering for humans reading the lake; the
-  // counter gives STRUCTURAL uniqueness within a process regardless of
-  // the clock; the per-process random nonce covers the restart case
-  // (counter reset + clock step-back re-producing an old id) — that
-  // last layer is probabilistic (2^-64 per colliding pair), not
-  // structural, which is the honest limit without lake-side state.
-  private val genCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val procNonce: String =
-    java.lang.Long.toHexString(new java.security.SecureRandom().nextLong())
-  private[plans] def nextGen(): String =
-    s"${System.currentTimeMillis()}x${procNonce}x${genCounter.incrementAndGet()}"
-
-  /** A compacted OUTPUT file: the single-file `compacted.parquet`
-    * (reference parity) or one of a bounded multi-file generation
-    * `compacted-g<gen>-<i>.parquet` ([[compactPartition]]'s
-    * `targetFileBytes` escape hatch). */
-  private def isCompactedName(n: String): Boolean =
-    n == "compacted.parquet" || (n.startsWith("compacted-") && n.endsWith(".parquet"))
-
-  /** Final name of a hidden staged file: `.compact_new.parquet` →
-    * `compacted.parquet`; `.compact_new.compacted-g…-00001.parquet` →
-    * `compacted-g…-00001.parquet`. */
-  private def promotedName(hidden: String): String =
-    if (hidden == NewFile) "compacted.parquet"
-    else hidden.stripPrefix(NewPrefix + ".")
-
-  /** Crash recovery for [[compactPartition]]'s publish protocol. States:
-    *  - hidden `.compact_new*` files without manifest: merge results
-    *    existed but nothing was deleted yet → discard them (inputs are
-    *    intact);
-    *  - manifest present: the files it lists were merged into the new
-    *    files → finish the deletes; promote any still-hidden new files
-    *    (when the manifest lists a compacted name but no hidden file
-    *    remains, the listed name IS the already-promoted merged data —
-    *    never delete it then; multi-file generations are immune by
-    *    construction: their names are generation-unique, so a new
-    *    generation never collides with the listed old one). */
-  private def recover(f: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val manP = new Path(dir, Manifest)
-    val dirP = new Path(dir)
-    def hiddenNew(): Seq[Path] =
-      if (!f.exists(dirP)) Seq.empty
-      else f.listStatus(dirP).map(_.getPath)
-        .filter(_.getName.startsWith(NewPrefix)).toSeq.sortBy(_.getName)
-    if (f.exists(manP)) {
-      val in = f.open(manP)
-      val listed = scala.io.Source.fromInputStream(in).getLines().toVector
-      in.close()
-      val news = hiddenNew()
-      val newExists = news.nonEmpty
-      listed.foreach { name =>
-        if (newExists || !isCompactedName(name)) {
-          val p = new Path(dir, name)
-          if (f.exists(p)) f.delete(p, false)
-        }
-      }
-      news.foreach(h => f.rename(h, new Path(dir, promotedName(h.getName))))
-      f.delete(manP, false)
-    } else hiddenNew().foreach(h => f.delete(h, false))
+  /** The merged file staged by the rewrite, while it is not promoted. */
+  private def staged(f: FileSystem, dir: String): Option[Path] = {
+    val tmp = new Path(dir, Tmp)
+    if (!f.exists(tmp)) None
+    else f.listStatus(tmp).map(_.getPath).find(p => ParquetMeta.visible(p.getName))
   }
 
-  /** Compact one partition dir: read every non-compacted parquet file
-    * under the widened schema, rewrite as compacted output, delete
-    * inputs. Below `targetFileBytes` of input the output is a single
-    * `compacted.parquet` (the reference's one-file-per-partition
-    * contract, compactor.rs:644-755); above it the rewrite targets
-    * `ceil(inputBytes / targetFileBytes)` bounded files named
-    * `compacted-g<gen>-<i>.parquet` — at 100 TB a hot partition must
-    * not funnel through one task or one file, and generation-unique
-    * names keep the crash protocol collision-free. Publish protocol
-    * (crash-safe refinement of the reference's tmp+rename): merge →
-    * hidden new files → manifest of merged names → deletes → promote →
-    * drop manifest; a crash at any point is repaired by [[recover]] on
-    * the next sweep. The rewrite is the only Spark job (two for a
-    * multi-file generation, whose repartition is a shuffle): input
-    * schemas and the output row count come from footers read on the
-    * driver. Returns None if there was nothing to do. */
+  private def delete(f: FileSystem, p: Path, recursive: Boolean = false): Unit =
+    if (f.exists(p) && !f.delete(p, recursive))
+      throw new java.io.IOException(s"compaction publish: delete $p failed")
+
+  private def promote(f: FileSystem, from: Path, dir: String): Unit =
+    if (!f.rename(from, new Path(dir, Compacted)))
+      throw new java.io.IOException(s"compaction publish: rename $from -> $dir/$Compacted failed")
+
+  /** Crash recovery for [[compactPartition]]'s publish protocol. A
+    * complete manifest lists the files merged into the staged file, so
+    * the deletes are finished; the listed `compacted.parquet` is the old
+    * one only while the staged file is still unpromoted (once promoted it
+    * IS the merged data). Without a complete manifest nothing was deleted
+    * yet and the staged file is dropped. Every failed step throws with the
+    * manifest still on disk, so the next call resumes from it. */
+  private def recover(f: FileSystem, dir: String): Unit = {
+    val manP = new Path(dir, Manifest)
+    if (f.exists(manP)) {
+      val in = f.open(manP)
+      val listed = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
+      if (listed.lastOption.contains(ManifestEnd)) {
+        val merged = staged(f, dir)
+        listed.init.filter(n => n != Compacted || merged.isDefined)
+          .foreach(n => delete(f, new Path(dir, n)))
+        merged.foreach(promote(f, _, dir))
+      }
+      delete(f, manP)
+    }
+    delete(f, new Path(dir, Tmp), recursive = true)
+  }
+
+  /** Compact one partition dir: read every visible parquet file under
+    * the widened schema and rewrite them as one `compacted.parquet` (the
+    * reference's one-file-per-partition contract, compactor.rs:644-755).
+    * Publish protocol (crash-safe refinement of the reference's
+    * tmp+rename): merge into `.compact_tmp/` → manifest of the merged
+    * names → deletes → rename of the staged file to `compacted.parquet`
+    * → drop manifest and `.compact_tmp`; a crash or a failed step at any
+    * point is repaired by [[recover]] on the next call. The rewrite is the
+    * only Spark job: input schemas and the output row count come from
+    * footers read on the driver. Returns None if there was nothing to
+    * do. */
   def compactPartition(spark: SparkSession, lakeRoot: String, table: String,
-      partition: String, compression: String = "zstd",
-      targetFileBytes: Long = Long.MaxValue): Option[Stat] = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
+      partition: String, compression: String = "zstd"): Option[Stat] = {
     val dir = s"$lakeRoot/$table/$partition"
     val f = fs(spark, dir)
     recover(f, dir)
-    val statuses = f.listStatus(new Path(dir)).filter(s => ParquetMeta.visible(s.getPath.getName))
-    val inputs = statuses.filter(s => !isCompactedName(s.getPath.getName)).map(_.getPath)
-    val existingCompacted = statuses.filter(s => isCompactedName(s.getPath.getName)).map(_.getPath)
+    val visible = f.listStatus(new Path(dir)).map(_.getPath).filter(p => ParquetMeta.visible(p.getName))
+    val (existing, inputs) = visible.partition(_.getName == Compacted)
     if (inputs.isEmpty) return None
-    val sources = (inputs ++ existingCompacted).map(_.toString)
-    val totalBytes = statuses.map(_.getLen).sum
-    val nFiles =
-      if (targetFileBytes == Long.MaxValue) 1
-      else math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val merged = SchemaEvolution.readWidened(spark, sources.toIndexedSeq)
-    val tmp = new Path(dir, ".compact_tmp")
-    // single-file: coalesce (no shuffle); multi-file: repartition for
-    // even file sizes (a compactor is rewrite-bound; the shuffle is the
-    // price of bounded, balanced output files)
-    (if (nFiles == 1) merged.coalesce(1) else merged.repartition(nFiles))
-      .write.mode("overwrite")
-      .option("compression", compression).parquet(tmp.toString)
-    val partsOut = f.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val gen = nextGen()
-    val hidden = partsOut.zipWithIndex.map { case (p, i) =>
-      val hn =
-        if (partsOut.length == 1) NewFile
-        else f"$NewPrefix.compacted-g$gen-$i%05d.parquet"
-      val hp = new Path(dir, hn)
-      f.rename(p, hp)
-      hp
-    }
-    val rows = hidden.map(h => ParquetMeta.read(spark, h.toString).rows).sum // footers, not a re-scan
-    val manifest = (inputs ++ existingCompacted).map(_.getName)
+    val sources = inputs ++ existing
+    SchemaEvolution.readWidened(spark, sources.map(_.toString).toIndexedSeq)
+      .coalesce(1).write.mode("overwrite")
+      .option("compression", compression).parquet(new Path(dir, Tmp).toString)
+    val merged = staged(f, dir).getOrElse(
+      throw new java.io.IOException(s"compaction of $dir staged no file"))
+    val rows = ParquetMeta.read(spark, merged.toString).rows // footer, not a re-scan
     val out = f.create(new Path(dir, Manifest), true)
-    out.write(manifest.mkString("\n").getBytes("UTF-8")); out.close()
-    inputs.foreach(p => f.delete(p, false))
-    existingCompacted.foreach(p => if (f.exists(p)) f.delete(p, false))
-    hidden.foreach(h => f.rename(h, new Path(dir, promotedName(h.getName))))
-    f.delete(new Path(dir, Manifest), false)
-    f.delete(tmp, true)
+    try out.write((sources.map(_.getName) :+ ManifestEnd).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    sources.foreach(delete(f, _))
+    promote(f, merged, dir)
+    delete(f, new Path(dir, Manifest))
+    delete(f, new Path(dir, Tmp), recursive = true)
     // sweep markers and stray checksums, but never a hidden parquet file
     // (or its checksum): that is another writer's staged output
     f.listStatus(new Path(dir)).map(_.getPath.getName)
-      .filter(n => (n.startsWith("_") || n.startsWith(".")) && !n.startsWith(NewPrefix) &&
-        n != Manifest && !n.contains(".parquet"))
+      .filter(n => (n.startsWith("_") || n.startsWith(".")) && n != Manifest && !n.contains(".parquet"))
       .foreach(n => f.delete(new Path(dir, n), true))
     Some(Stat(table, partition, inputs.length, rows))
   }
 
   /** One compaction sweep: for every partition containing files not yet in
     * the `compacted` history, rewrite and record. The history gate is the
-    * idempotency check (compactor.rs:597-641).
+    * idempotency check (compactor.rs:597-641). A partition whose publish
+    * was cut short (its manifest is on disk) is visited too, so
+    * [[compactPartition]] finishes that publish even when no new file
+    * arrives.
     *
     * Spark jobs: one rewrite per dirty partition ([[compactPartition]]),
     * nothing else. On the driver: the partition listings, the history
     * gate of the candidate paths and the history add
     * ([[HistoryTable.filterNew]], [[HistoryTable.add]]), the
     * dirty-partition set and every footer read. */
-  def runOnce(spark: SparkSession, lakeRoot: String, history: HistoryTable,
-      targetFileBytes: Long = Long.MaxValue): Seq[Stat] = {
+  def runOnce(spark: SparkSession, lakeRoot: String, history: HistoryTable): Seq[Stat] = {
     import spark.implicits._
-    val parts = discoverPartitions(spark, lakeRoot)
     val f = fs(spark, lakeRoot)
-    val candidates = parts.flatMap { case (t, p) =>
-      f.listStatus(new Path(s"$lakeRoot/$t/$p")).map(_.getPath)
-        // compacted OUTPUTS (single-file or multi-file generation) are
-        // never candidates: generation names change on every rewrite, so
-        // treating them as fresh ingest would re-dirty the partition on
-        // every sweep forever
-        .filter(x => ParquetMeta.visible(x.getName) && !isCompactedName(x.getName))
-        .map(x => (t, p, s"$t/$p/${x.getName}"))
+    val listed = discoverPartitions(spark, lakeRoot).map { case (t, p) =>
+      (t, p, f.listStatus(new Path(s"$lakeRoot/$t/$p")).map(_.getPath.getName).toSeq)
+    }
+    // compacted.parquet is never a candidate: it would re-dirty its
+    // partition on every sweep
+    val candidates = listed.flatMap { case (t, p, names) =>
+      names.filter(n => ParquetMeta.visible(n) && n != Compacted).map(n => (t, p, s"$t/$p/$n"))
     }
     val freshSet = history.filterNew(candidates.map(_._3)).toSet
     val fresh = candidates.filter(c => freshSet.contains(c._3))
-    val dirty = fresh.map { case (t, p, _) => (t, p) }.distinct
+    val interrupted = listed.collect { case (t, p, names) if names.contains(Manifest) => (t, p) }
+    val dirty = (fresh.map { case (t, p, _) => (t, p) } ++ interrupted).distinct
     val freshPaths = fresh.map(_._3)
     // fan the per-partition rewrites out concurrently (the reference's
     // rayon scope, compactor.rs:76-94): output dirs are disjoint and the
     // manifest protocol is per-dir, so no lock is needed. Each job is a
     // single coalesce(1) task — concurrency is what keeps >1 core busy.
     val stats = graft.Par.mapBounded(dirty.toIndexedSeq) { case (t, p) =>
-      compactPartition(spark, lakeRoot, t, p, targetFileBytes = targetFileBytes)
+      compactPartition(spark, lakeRoot, t, p)
     }
     if (freshPaths.nonEmpty) {
       val now = new java.sql.Timestamp(System.currentTimeMillis())
@@ -233,8 +178,7 @@ object Compactor {
       maxSweeps: Long = Long.MaxValue,
       control: graft.DaemonControl = new graft.DaemonControl,
       installShutdownHook: Boolean = true,
-      onSweep: Seq[Stat] => Unit = _ => (),
-      targetFileBytes: Long = Long.MaxValue): Seq[Stat] = {
+      onSweep: Seq[Stat] => Unit = _ => ()): Seq[Stat] = {
     control.runGuarded(installShutdownHook) {
       val out = scala.collection.mutable.ArrayBuffer.empty[Stat]
       var sweeps = 0L
@@ -256,7 +200,7 @@ object Compactor {
           nextCompact = t + intervalMillis
           sweeps += 1
           try {
-            val stats = runOnce(spark, lakeRoot, history, targetFileBytes)
+            val stats = runOnce(spark, lakeRoot, history)
             out ++= stats
             try onSweep(stats)
             catch { case scala.util.control.NonFatal(e) =>

@@ -44,11 +44,9 @@ object SchemaEvolution {
   }
 
   /** NEM wall-clock timestamp strings parse at fixed +10:00
-    * (chunk.rs:425-444); ISO strings parse as-is. */
+    * ([[graft.sources.NemCsv.wallClock]]); ISO strings parse as-is. */
   private def parseTs(c: org.apache.spark.sql.Column) =
-    coalesce(
-      to_utc_timestamp(try_to_timestamp(c, lit("yyyy/MM/dd HH:mm:ss")), "+10:00"),
-      c.try_cast(TimestampType))
+    coalesce(graft.sources.NemCsv.wallClock(c), c.try_cast(TimestampType))
 
   /** Cast/null-fill a file's frame to the widened target schema, in target
     * (alphabetical) column order. Empty strings become null before numeric

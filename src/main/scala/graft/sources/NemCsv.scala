@@ -285,6 +285,12 @@ object NemCsv {
     case _ => StringType
   }
 
+  /** A NEM wall-clock string (`yyyy/MM/dd HH:mm:ss` at fixed +10:00, AEST
+    * with no DST, chunk.rs:425-444) as a UTC instant; null where it does
+    * not parse. */
+  private[graft] def wallClock(s: Column): Column =
+    to_utc_timestamp(try_to_timestamp(s, lit("yyyy/MM/dd HH:mm:ss")), "+10:00")
+
   /** A raw string column as one of [[ColumnTypes]]; empty string → null
     * before any cast. */
   private def typed(t: DataType, v: Column): Column = {
@@ -295,8 +301,7 @@ object NemCsv {
     // instead fail the whole split job
     t match {
       case DoubleType => s.try_cast("double")
-      // wall time at fixed +10:00 (AEST, no DST) → UTC instant
-      case TimestampType => to_utc_timestamp(try_to_timestamp(s, lit("yyyy/MM/dd HH:mm:ss")), "+10:00")
+      case TimestampType => wallClock(s)
       case _ => s
     }
   }
@@ -338,8 +343,8 @@ object NemCsv {
   }
 
   /** Full split: read files, write each logical table to
-    * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-<id>-<n>.<codec>.parquet`, return a summary
-    * frame (table, rows written). Compression is zstd (the reference's brotli-5
+    * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-<id>-<n>.<codec>.parquet`, return
+    * (table, rows written) per table, sorted. Compression is zstd (the reference's brotli-5
     * study: README.md:14-27; the brotli codec jar is not bundled with
     * Spark, zstd is the closest ratio — see BASELINE.md).
     *
@@ -361,8 +366,7 @@ object NemCsv {
     * also when a job fails, so a failed split publishes nothing. The
     * driver holds only the metas and the list of staged files. */
   def splitToLake(spark: SparkSession, paths: Seq[String], lakeRoot: String,
-      compression: String = "zstd"): DataFrame = {
-    import spark.implicits._
+      compression: String = "zstd"): Seq[(String, Long)] = {
     val files = inputFiles(spark, paths)
     val meta = tableMeta(files.mapPartitions(in => Iterator(partials(in.flatMap(records)))).collect().toSeq)
     val written = if (meta.isEmpty) Seq.empty else {
@@ -382,7 +386,7 @@ object NemCsv {
         staged.toSeq
       } finally meta.foreach(m => fs.delete(new Path(s"$lakeRoot/${m.table}/_split-$id"), true))
     }
-    written.groupMapReduce(_._1)(_._4)(_ + _).toSeq.sorted.toDF("table", "rows")
+    written.groupMapReduce(_._1)(_._4)(_ + _).toSeq.sorted
   }
 
   /** The write task of [[splitToLake]]: `recs` typed and written to one

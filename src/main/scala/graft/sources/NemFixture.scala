@@ -47,9 +47,8 @@ object NemFixture {
     try {
       Files.write(Paths.get(in.toString, "PUBLIC_FPP_20250607.csv"),
         csv.getBytes(StandardCharsets.UTF_8))
-      val tables = NemCsv.splitToLake(spark, Seq(s"$in/PUBLIC_FPP_20250607.csv"), lake.toString)
-        .collect().map(_.getString(0))
-      val summary = tables.sorted.toSeq.map { t =>
+      val tables = NemCsv.splitToLake(spark, Seq(s"$in/PUBLIC_FPP_20250607.csv"), lake.toString).map(_._1)
+      val summary = tables.map { t =>
         val df = spark.read.parquet(s"$lake/$t")
         val doubles = df.schema.count(_.dataType.typeName == "double")
         val tss = df.schema.count(_.dataType.typeName == "timestamp")

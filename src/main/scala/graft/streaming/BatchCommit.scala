@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import graft.sources.ParquetMeta
 
 /** The idempotent per-batch commit shared by the micro-batch ingest
   * loops ([[CorpusStream]] minhash-gated, [[SemanticCorpusStream]]
@@ -73,10 +74,10 @@ private[streaming] object BatchCommit {
       .start()
 
   /** The published rows of `dir`, or None when it holds no visible
-    * `.parquet` file — missing, never published to, or emptied by a
-    * rollback. Staging dirs (`_tmp_batch_*`) and other `_`/`.` names are
-    * invisible. The files read under their first footer's schema
-    * ([[graft.sources.ParquetMeta.sparkSchema]], as the Spark fallback of
+    * parquet file ([[ParquetMeta.visible]]: staging dirs `_tmp_batch_*`
+    * are not) — missing, never published to, or emptied by a rollback.
+    * The files read under their first footer's schema
+    * ([[ParquetMeta.sparkSchema]], as the Spark fallback of
     * [[graft.sources.HistoryTable]] reads), so a tick's index probe runs
     * no inference job and a first tick raises and logs nothing. */
   def readPublished(spark: SparkSession, dir: String): Option[DataFrame] = {
@@ -84,12 +85,9 @@ private[streaming] object BatchCommit {
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =
       if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).map(_.getPath).filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.toString).toSeq
+      else fs.listStatus(d).map(_.getPath).filter(p => ParquetMeta.visible(p.getName)).sortBy(_.toString).toSeq
     files.headOption.map { first =>
-      spark.read.schema(graft.sources.ParquetMeta.sparkSchema(spark, first.toString))
+      spark.read.schema(ParquetMeta.sparkSchema(spark, first.toString))
         .parquet(files.map(_.toString): _*)
     }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.sources.{Fetch, HistoryTable, NemCsv}
 
 /** The complete ingest daemon — the reference's `nemscraper` main loop
@@ -105,19 +105,24 @@ object IngestDaemon {
     val landed = Option(new java.io.File(downloadDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.endsWith(".tmp"))
       .map(_.getAbsolutePath).toSeq
-    val toProcess = processedHist.filterNew(landed)
-    val tables =
-      if (toProcess.isEmpty) 0L
-      else {
-        val summary = NemCsv.splitToLake(spark, toProcess, lakeRoot)
-        // the summary is a local frame: collecting it runs no Spark job,
-        // where count() runs an aggregation (two jobs under AQE)
-        val n = summary.collect().length.toLong
-        val now = new java.sql.Timestamp(System.currentTimeMillis())
-        processedHist.add(toProcess.toDF("filename") // keyed by path
-          .withColumn("processed_at", org.apache.spark.sql.functions.lit(now)))
-        n
-      }
-    TickResult(links.size, downloaded.size, tables)
+    TickResult(links.size, downloaded.size, processLanded(spark, processedHist, landed, lakeRoot))
+  }
+
+  /** The landed-files step of [[runOnce]] and [[IngestStream]]: split the
+    * files of `landed` not yet in the `processed` history into the lake,
+    * then record them as `filename, processed_at` rows keyed by path.
+    * Returns the number of tables written. */
+  private[streaming] def processLanded(spark: SparkSession, processed: HistoryTable,
+      landed: Seq[String], lakeRoot: String): Long = {
+    import spark.implicits._
+    val toProcess = processed.filterNew(landed)
+    if (toProcess.isEmpty) 0L
+    else {
+      val tables = NemCsv.splitToLake(spark, toProcess, lakeRoot).length.toLong
+      val now = new java.sql.Timestamp(System.currentTimeMillis())
+      processed.add(toProcess.toDF("filename")
+        .withColumn("processed_at", org.apache.spark.sql.functions.lit(now)))
+      tables
+    }
   }
 }

@@ -1,8 +1,12 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.sources.HistoryTable
+import graft.sources.{HistoryTable, ParquetMeta}
+import java.io.OutputStream
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 
 class CompactorSpec extends SparkSpec {
 
@@ -23,42 +27,6 @@ class CompactorSpec extends SparkSpec {
     val back = spark.read.parquet(s"$lake/FPP---UNIT_MW---1")
     assert(back.count() === 2)
     assert(back.schema("mw").dataType.typeName === "double") // widened from string
-  }
-
-  test("crash recovery: interrupted publish is repaired without loss or duplication") {
-    import spark.implicits._
-    val lake = tmpDir("lakecrash")
-    val part = s"$lake/T---C---1/date=2025-06-07"
-    Seq((1.0, "a"), (2.0, "b")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
-    // simulate a crash AFTER the merge result + manifest were written but
-    // BEFORE any deletes: hidden new file holds the merged copy
-    val inputs = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString)
-    assert(inputs.length === 1)
-    spark.read.parquet(part).coalesce(1).write
-      .parquet(s"$part/.crash_stage") // stand-in merge output
-    val stagePart = Files.list(Paths.get(s"$part/.crash_stage"))
-      .filter(_.toString.endsWith(".parquet")).toArray.head.toString
-    Files.move(Paths.get(stagePart), Paths.get(s"$part/.compact_new.parquet"))
-    Files.writeString(Paths.get(s"$part/.compact_manifest"),
-      new java.io.File(inputs.head).getName)
-    // next sweep must: delete the listed input, promote the new file
-    val stat = Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07")
-    assert(stat.isEmpty) // after recovery there is nothing left to compact
-    val back = spark.read.parquet(s"$lake/T---C---1")
-    assert(back.count() === 2) // no loss, no duplication
-    val files = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString)
-    assert(files.length === 1 && files.head.endsWith("compacted.parquet"))
-    // orphaned new-file WITHOUT manifest (crash before manifest): discarded
-    Seq((3.0, "c")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
-    spark.read.parquet(part).limit(1).coalesce(1).write.parquet(s"$part/.crash2")
-    val stale = Files.list(Paths.get(s"$part/.crash2"))
-      .filter(_.toString.endsWith(".parquet")).toArray.head.toString
-    Files.move(Paths.get(stale), Paths.get(s"$part/.compact_new.parquet"))
-    val stat2 = Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07")
-    assert(stat2.get.rows === 3) // stale new-file discarded, real merge ran
-    assert(spark.read.parquet(s"$lake/T---C---1").count() === 3)
   }
 
   test("runOnce: dirty partitions compact concurrently, results complete and correct") {
@@ -129,85 +97,123 @@ class CompactorSpec extends SparkSpec {
     assert(spark.read.parquet(s"$lake/T---X---1").count() === 2)
   }
 
-  test("targetFileBytes: a hot partition compacts to N>1 bounded files; rows reconcile; sweeps stay idempotent") {
+  /** A lake on the [[PublishFailFs]] scheme whose one partition holds a
+    * compacted.parquet and two later files of a wider schema; returns the
+    * lake, the partition dir and its rows under the widened schema. */
+  private def dirtyPartition(name: String): (String, String, Seq[String]) = {
     import spark.implicits._
-    val lake = tmpDir("lakehot")
-    val hist = HistoryTable.compacted(spark, tmpDir("histhot"))
-    val part = s"$lake/T---HOT---1/date=2025-06-07"
-    // ~2000 rows of incompressible-ish strings across several ingest files
-    (0 until 4).foreach { i =>
-      spark.range(i * 500, (i + 1) * 500)
-        .selectExpr("CAST(id AS DOUBLE) AS v", "concat('id-', md5(CAST(id AS STRING))) AS id")
-        .coalesce(1).write.mode("append").parquet(part)
-    }
-    val target = 16L * 1024 // tiny target to force a multi-file generation
-    val stat = Compactor.runOnce(spark, lake, hist, targetFileBytes = target)
-    assert(stat.map(_.rows).sum === 2000)
-    val files = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString.split('/').last)
-    assert(files.length > 1, s"expected a multi-file generation, got ${files.toSeq}")
-    assert(files.forall(n => n.startsWith("compacted-g")), files.toSeq.toString)
-    // footer row counts reconcile with the readback
-    val footerRows = files.map(n =>
-      graft.sources.ParquetMeta.read(spark, s"$part/$n").rows).sum
-    assert(footerRows === 2000)
-    assert(spark.read.parquet(s"$lake/T---HOT---1").count() === 2000)
-    // idempotency: the generation files are not candidates, so a second
-    // sweep is a no-op (no endless re-dirtying from changing gen names)
-    assert(Compactor.runOnce(spark, lake, hist, targetFileBytes = target).isEmpty)
-    // a late arrival folds the WHOLE previous generation into the next one
-    Seq((9e9, "late")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
-    val again = Compactor.runOnce(spark, lake, hist, targetFileBytes = target)
-    assert(again.map(_.rows).sum === 2001)
-    assert(spark.read.parquet(s"$lake/T---HOT---1").count() === 2001)
-    val gen2 = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString.split('/').last)
-    assert(gen2.forall(_.startsWith("compacted-g")))
-    // below the threshold the single-file reference contract is untouched
-    val small = s"$lake/T---COLD---1/date=2025-06-07"
-    Seq((1.0, "x")).toDF("v", "id").coalesce(1).write.mode("append").parquet(small)
-    Compactor.runOnce(spark, lake, hist, targetFileBytes = 1L << 30)
-    val coldFiles = Files.list(Paths.get(small)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString.split('/').last)
-    assert(coldFiles.toSeq === Seq("compacted.parquet"))
+    val lake = s"publishfail://${tmpDir(name)}"
+    val part = s"$lake/T---C---1/date=2025-06-07"
+    Seq(("1.0", "a"), ("2.0", "b")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
+    Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07")
+    Seq((3.0, "c", 1L)).toDF("v", "id", "n").coalesce(1).write.mode("append").parquet(part)
+    Seq((4.0, "d", 2L)).toDF("v", "id", "n").coalesce(1).write.mode("append").parquet(part)
+    (lake, part, rowsOf(part))
   }
 
-  test("targetFileBytes: crash mid-publish of a multi-file generation is repaired without loss") {
-    import spark.implicits._
-    val lake = tmpDir("lakehotcrash")
-    val part = s"$lake/T---HC---1/date=2025-06-07"
-    spark.range(0, 1000)
-      .selectExpr("CAST(id AS DOUBLE) AS v", "concat('id-', md5(CAST(id AS STRING))) AS id")
-      .coalesce(1).write.mode("append").parquet(part)
-    // simulate the crash window: merge staged as hidden gen files +
-    // manifest written, but deletes/promotes never ran
-    val input = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString)
-    assert(input.length === 1)
-    spark.read.parquet(part).repartition(2).write.parquet(s"$part/.crash_stage")
-    val staged = Files.list(Paths.get(s"$part/.crash_stage"))
-      .filter(_.toString.endsWith(".parquet")).toArray.map(_.toString).sorted
-    assert(staged.length === 2)
-    staged.zipWithIndex.foreach { case (s, i) =>
-      Files.move(Paths.get(s),
-        Paths.get(f"$part/.compact_new.compacted-g99-$i%05d.parquet"))
-    }
-    Files.writeString(Paths.get(s"$part/.compact_manifest"),
-      new java.io.File(input.head).getName)
-    // next touch must finish the deletes and promote BOTH hidden files
-    val stat = Compactor.compactPartition(spark, lake, "T---HC---1", "date=2025-06-07")
-    assert(stat.isEmpty) // recovery left nothing to compact
-    val files = Files.list(Paths.get(part)).filter(_.toString.endsWith(".parquet"))
-      .toArray.map(_.toString.split('/').last).sorted
-    assert(files.toSeq === Seq("compacted-g99-00000.parquet", "compacted-g99-00001.parquet"))
-    assert(spark.read.parquet(s"$lake/T---HC---1").count() === 1000) // no loss, no dup
+  private def rowsOf(part: String): Seq[String] = {
+    val files = new Path(part).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(new Path(part)).map(_.getPath).filter(p => ParquetMeta.visible(p.getName))
+    SchemaEvolution.readWidened(spark, files.map(_.toString).toIndexedSeq).collect().map(_.toString).sorted.toSeq
   }
 
-  test("generation ids are structurally unique, even within one millisecond") {
-    // the crash-recovery invariant ("a new generation never collides with
-    // the manifest-listed old one") must hold under same-millis compactions
-    // and clock step-back — a wall-clock-only id doesn't guarantee that
-    val gens = (1 to 1000).map(_ => Compactor.nextGen())
-    assert(gens.distinct.size === gens.size)
+  /** Every name in the partition dir but checksums and markers. */
+  private def namesIn(part: String): Seq[String] =
+    Files.list(Paths.get(new URI(part).getPath)).toArray.map(_.toString.split('/').last)
+      .filter(n => !n.endsWith(".crc") && !n.startsWith("_")).sorted.toSeq
+
+  test("crash recovery: interrupted publish is repaired without loss or duplication") {
+    spark.sparkContext.hadoopConfiguration.set("fs.publishfail.impl", classOf[PublishFailFs].getName)
+    try {
+      val (lake, part, expected) = dirtyPartition("crash_clean")
+      PublishFailFs.failNth(0)
+      assert(Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07").map(_.rows) === Some(4L))
+      val steps = PublishFailFs.steps
+      // the manifest create, three deletes (two inputs and the old
+      // compacted.parquet), the promote rename and the manifest delete
+      assert(steps.length === 6, steps)
+      assert(namesIn(part) === Seq("compacted.parquet") && rowsOf(part) === expected)
+      for (k <- 1 to steps.length) {
+        val (lake, part, expected) = dirtyPartition(s"crash_$k")
+        PublishFailFs.failNth(k)
+        intercept[java.io.IOException](Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07"))
+        PublishFailFs.failNth(0)
+        Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07")
+        assert(namesIn(part) === Seq("compacted.parquet"), s"crash at ${steps(k - 1)}")
+        assert(rowsOf(part) === expected, s"crash at ${steps(k - 1)}")
+      }
+    } finally PublishFailFs.failNth(0)
+  }
+
+  test("publish: a failed promote rename fails the sweep; the next sweep restores every row") {
+    spark.sparkContext.hadoopConfiguration.set("fs.publishfail.impl", classOf[PublishFailFs].getName)
+    import spark.implicits._
+    val lake = s"publishfail://${tmpDir("promotefail")}"
+    val hist = HistoryTable.compacted(spark, tmpDir("promotefail_hist"))
+    val part = s"$lake/T---P---1/date=2025-06-07"
+    try {
+      PublishFailFs.failNth(0)
+      Seq((1.0, "a")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
+      Seq((2.0, "b")).toDF("v", "id").coalesce(1).write.mode("append").parquet(part)
+      PublishFailFs.failPromote()
+      val failed = scala.util.Try(Compactor.runOnce(spark, lake, hist))
+      PublishFailFs.failNth(0)
+      Compactor.runOnce(spark, lake, hist)
+      // the rows are checked first: they are what an unchecked rename loses
+      assert(spark.read.parquet(part).count() === 2)
+      assert(namesIn(part) === Seq("compacted.parquet"))
+      assert(failed.isFailure, "a failed promote must fail the sweep")
+    } finally PublishFailFs.failNth(0)
+  }
+}
+
+/** Local file system that fails one step of the compactor's publish: a
+  * create, delete or rename (by its destination) of the manifest or of a
+  * visible parquet file directly in a `date=` dir. The Spark committer's
+  * own calls, all under `.compact_tmp`, pass. A failing delete or rename
+  * returns false; a failing create crashes mid-write: the first line of
+  * the write lands, then the write throws. */
+class PublishFailFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("publishfail:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (!PublishFailFs.fails("create", f)) out
+    else new FSDataOutputStream(new OutputStream {
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        val eol = b.indexWhere(_ == '\n', off)
+        out.write(b, off, if (eol < 0 || eol >= off + len) len else eol + 1 - off)
+        out.close()
+        throw new java.io.IOException(s"crash while writing $f")
+      }
+    }, null)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    !PublishFailFs.fails("delete", p) && super.delete(p, recursive)
+  override def rename(src: Path, dst: Path): Boolean =
+    !PublishFailFs.fails("rename", dst) && super.rename(src, dst)
+}
+
+object PublishFailFs {
+  private var failAt = 0
+  private var failRenames = false
+  private val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  /** Count publish steps from now and fail the `k`-th (0: none). */
+  def failNth(k: Int): Unit = synchronized { failAt = k; failRenames = false; seen.clear() }
+
+  /** Fail every counted rename (the promote) from now on. */
+  def failPromote(): Unit = synchronized { failNth(0); failRenames = true }
+
+  /** The publish steps counted since the last reset, as `op name`. */
+  def steps: Seq[String] = synchronized(seen.toList)
+
+  private def fails(op: String, p: Path): Boolean = synchronized {
+    val name = p.getName
+    val counted = Option(p.getParent).exists(_.getName.startsWith("date=")) &&
+      (ParquetMeta.visible(name) || name == ".compact_manifest")
+    if (counted) seen += s"$op $name"
+    counted && (seen.length == failAt || (failRenames && op == "rename"))
   }
 }

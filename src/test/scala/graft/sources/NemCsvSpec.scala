@@ -129,8 +129,7 @@ class NemCsvSpec extends SparkSpec {
     val dir = tmpDir("nemlake_in")
     val lake = tmpDir("nemlake_out")
     writeFixture(dir, "PUBLIC_FPP_20250607.csv")
-    val summary = NemCsv.splitToLake(spark, Seq(s"$dir/PUBLIC_FPP_20250607.csv"), lake)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val summary = NemCsv.splitToLake(spark, Seq(s"$dir/PUBLIC_FPP_20250607.csv"), lake).toMap
     assert(summary === Map("FPP---UNIT_MW---1" -> 3L, "FPP---REGION_FREQ_MEASURE---1" -> 2L))
     assert(Files.exists(Paths.get(lake, "FPP---UNIT_MW---1", "date=2025-06-07")))
     val back = spark.read.parquet(s"$lake/FPP---UNIT_MW---1")
@@ -198,8 +197,7 @@ class NemCsvSpec extends SparkSpec {
     assert(b.schema("VB").dataType === DoubleType)
     assert(b.count() === 5)
     val lake = tmpDir("pertable_lake")
-    val summary = NemCsv.splitToLake(spark, Seq(s"$dir/pertable_20250607.csv"), lake)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val summary = NemCsv.splitToLake(spark, Seq(s"$dir/pertable_20250607.csv"), lake).toMap
     assert(summary === Map("FPP---A---1" -> 1100L, "FPP---B---1" -> 5L))
     assert(spark.read.parquet(s"$lake/FPP---B---1").schema("VB").dataType === DoubleType)
   }
@@ -210,7 +208,7 @@ class NemCsvSpec extends SparkSpec {
   private def assertSplitIsTableFrame(paths: Seq[String]): String = {
     def multiset(df: DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val lake = tmpDir("split-eq")
-    val summary = NemCsv.splitToLake(spark, paths, lake).collect().map(r => r.getString(0) -> r.getLong(1))
+    val summary = NemCsv.splitToLake(spark, paths, lake)
     val raw = NemCsv.rawRecords(spark, paths)
     assert(summary.nonEmpty)
     summary.foreach { case (t, rows) =>
@@ -254,7 +252,7 @@ class NemCsvSpec extends SparkSpec {
       val body = "C,hdr\n" + (1 to n).map(t => s"I,FPP,T$t,1,A,B\nD,FPP,T$t,1,$t.5,x\n").mkString
       val file = writeFixture(tmpDir("jobs-split"), "jobs_20250607.csv", body)
       var tables = 0
-      val jobs = jobsOf { tables = NemCsv.splitToLake(spark, Seq(file), tmpDir("jobs-split-lake")).collect().length }
+      val jobs = jobsOf { tables = NemCsv.splitToLake(spark, Seq(file), tmpDir("jobs-split-lake")).length }
       assert(tables === n)
       assert(jobs.size === 2, s"$n tables: $jobs")
     }
