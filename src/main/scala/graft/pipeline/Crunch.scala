@@ -2,8 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
 import graft.operators.Ewma
+import java.time.LocalDateTime
 
 /** The reference's analytics pipeline (`/root/reference/src/bin/
   * crunch.rs:28-511`, spec `calcs.md:1-264`): recompute FPP performance
@@ -50,26 +53,39 @@ object Crunch {
       .drop("rn")
   }
 
+  private val SpineStepMicros = 4000000L
+
   /** 4-second spine for one day: [00:00:00, 23:59:56] inclusive
-    * (crunch.rs:349-370). */
-  def daySpine(spark: org.apache.spark.sql.SparkSession, date: String): DataFrame =
-    spark.range(1).select(explode(sequence(
-      to_timestamp(lit(s"$date 00:00:00")),
-      to_timestamp(lit(s"$date 23:59:56")),
-      expr("INTERVAL 4 SECONDS"))).as("ts"))
+    * (crunch.rs:349-370), both ends read in the session time zone as
+    * `to_timestamp` reads them (a wall time in a DST gap moves forward,
+    * one in an overlap takes the earlier offset), so a DST day has
+    * 20,700 or 22,500 ticks. `spark.range` over the tick numbers with the
+    * timestamp computed per row: the spine is split over the session's
+    * default parallelism, where `explode(sequence(…))` of one row held
+    * every tick in one partition. */
+  def daySpine(spark: org.apache.spark.sql.SparkSession, date: String): DataFrame = {
+    val zone = DateTimeUtils.getZoneId(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    def micros(time: String): Long =
+      DateTimeUtils.instantToMicros(LocalDateTime.parse(s"${date}T$time").atZone(zone).toInstant)
+    val start = micros("00:00:00")
+    val ticks = Math.floorDiv(micros("23:59:56") - start, SpineStepMicros) + 1
+    spark.range(0, ticks).select(timestamp_micros(lit(start) + col("id") * SpineStepMicros).as("ts"))
+  }
 
   private def trunc5m(c: Column): Column =
     timestamp_micros((unix_micros(c) / 300000000L).cast("long") * 300000000L)
 
   /** Step 2 — hypothetical reference trajectory (crunch.rs:324-452):
     * densify latest forecasts onto the 4 s grid per DUID with linear
-    * interpolation between the bracketing 5-min points. */
+    * interpolation between the bracketing 5-min points. The latest
+    * forecasts feed three branches (units, previous and next point); AQE
+    * reuses the exchanges they have in common, and they are not cached,
+    * so nothing is left for the caller to release. */
   def hypotheticalTrajectory(spark: org.apache.spark.sql.SparkSession,
       preds: DataFrame, date: String): DataFrame = {
     val latest = latestForecasts(preds)
       .select(col("DUID").as("duid"), col("INTERVAL_DATETIME").as("ts_5m"),
         col("FORECAST_POE50").as("poe50"))
-      .cache() // two downstream uses (crunch.rs:347)
     val duids = latest.select(col("duid")).distinct()
     val grid = daySpine(spark, date).crossJoin(broadcast(duids))
     val prevF = latest.select(col("duid").as("p_duid"), col("ts_5m").as("p_ts"),
@@ -152,7 +168,10 @@ object Crunch {
   }
 
   /** Step 4 — performance (crunch.rs:93-176): deviations ⟕ freq-measure of
-    * one region on ts; split by frequency-measure sign. */
+    * one region on ts; split by frequency-measure sign. The frame is
+    * unordered: the reference's sort by (ts, duid) belongs to its file
+    * output, so a caller that needs an order sorts (settlement sums per
+    * ts and needs none). */
   def performance(deviations: DataFrame, freqMeasure: DataFrame,
       region: String = "NSW1"): DataFrame = {
     val fm = freqMeasure.filter(col("region") === region)
@@ -162,6 +181,5 @@ object Crunch {
         when(col("freq_measure") < 0, col("freq_measure")).otherwise(lit(0.0)) * col("deviation"))
       .withColumn("p_raise",
         when(col("freq_measure") > 0, col("freq_measure")).otherwise(lit(0.0)) * col("deviation"))
-      .orderBy("ts", "duid")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftops.PlanApi
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,16 +17,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The jobs `body` starts, each as its SQL execution id: None marks a
     * job outside any query execution, such as Spark's schema inference. */
   def jobsOf(body: => Any): Seq[Option[String]] = {
-    val sc = spark.sparkContext
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-    }
+    })(body)
+    seen.asScala.toSeq
+  }
+
+  /** The tasks `body` runs, as their task-end events. */
+  def tasksOf(body: => Any): Seq[SparkListenerTaskEnd] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = seen.add(e)
+    })(body)
+    seen.asScala.toSeq
+  }
+
+  /** `body` run with `listener` attached, every event it caused delivered. */
+  private def listening(listener: SparkListener)(body: => Any): Unit = {
+    val sc = spark.sparkContext
     PlanApi.drainListenerBus(sc) // earlier jobs' events must not reach the listener
     sc.addSparkListener(listener)
     try { body; PlanApi.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
   }
 
   override def afterAll(): Unit = {

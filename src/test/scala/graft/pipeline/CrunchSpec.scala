@@ -5,8 +5,52 @@ import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 class CrunchSpec extends SparkSpec {
+  import CrunchSpec.ts
 
-  def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
+  /** The spine as `explode(sequence(…))` of one row, the form
+    * [[Crunch.daySpine]] must reproduce tick for tick. */
+  private def sequenceSpine(date: String) =
+    spark.range(1).select(explode(sequence(
+      to_timestamp(lit(s"$date 00:00:00")),
+      to_timestamp(lit(s"$date 23:59:56")),
+      expr("INTERVAL 4 SECONDS"))).as("ts"))
+
+  private def micros(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+
+  test("daySpine: the range spine equals the sequence spine in every zone, DST days included") {
+    // America/Santiago switches at midnight: 2025-04-05 24:00 goes back
+    // to 23:00, and 2025-09-07 00:00 (a wall time that does not exist)
+    // forward to 01:00
+    val santiago = java.time.ZoneId.of("America/Santiago").getRules
+    Seq("2025-04-05T23:30" -> "2025-04-06T00:00", "2025-09-07T00:00" -> "2025-09-07T00:00").foreach {
+      case (during, at) =>
+        val switch = santiago.getTransition(java.time.LocalDateTime.parse(during))
+        assert(switch != null && switch.getDateTimeBefore === java.time.LocalDateTime.parse(at), during)
+    }
+    val cases = Seq(
+      "UTC" -> "2025-06-07", "Australia/Brisbane" -> "2025-06-07",
+      "Australia/Sydney" -> "2025-04-06", "Australia/Sydney" -> "2025-10-05",
+      "America/Santiago" -> "2025-04-05", "America/Santiago" -> "2025-09-07")
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    val sizes = try cases.map { case (zone, date) =>
+      spark.conf.set(key, zone)
+      val expected = micros(sequenceSpine(date))
+      assert(micros(Crunch.daySpine(spark, date)) === expected, s"$zone $date")
+      (zone, date) -> expected.size
+    }.toMap finally spark.conf.set(key, saved)
+    // a 25-hour and a 23-hour day, less one 4 s tick each
+    assert(sizes(("Australia/Sydney", "2025-04-06")) === 22500)
+    assert(sizes(("Australia/Sydney", "2025-10-05")) === 20700)
+    assert(sizes(("UTC", "2025-06-07")) === 21600)
+  }
+
+  test("daySpine: the spine is spread over more than one partition") {
+    val rows = Crunch.daySpine(spark, "2025-06-07").rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(rows.count(_ > 0) > 1, rows.toSeq)
+    assert(rows.sum === 21600)
+  }
 
   test("step 1: EWMA resets per region; null passes without advancing state") {
     import spark.implicits._
@@ -120,5 +164,35 @@ class CrunchSpec extends SparkSpec {
     // t1: dev=-1, fm=-0.5 → p_lower=0.5, p_raise=0 (negative fm × negative dev)
     assert(perf(1).getDouble(perf(1).fieldIndex("p_lower")) === 0.5)
     assert(perf(1).getDouble(perf(1).fieldIndex("p_raise")) === -0.0)
+  }
+}
+
+object CrunchSpec {
+
+  def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
+
+  /** A small crunch day, steps 1-4 and the settlement down to the daily
+    * charge, over fixtures like the ones above: one region, one unit with
+    * forecasts at 00:00 and 00:05, SCADA at three ticks, one constraint. */
+  def smallDay(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val t = Seq("2025-06-07T00:00:00Z", "2025-06-07T00:00:04Z", "2025-06-07T00:00:08Z").map(ts)
+    val freq = Seq((t(0), "NSW1", 0.10, 0.0, 1.0), (t(1), "NSW1", -0.05, 0.0, 1.0), (t(2), "NSW1", 0.02, 0.0, 1.0))
+      .toDF("MEASUREMENT_DATETIME", "REGIONID", "FREQ_DEVIATION_HZ", "FREQ_MEASURE_HZ", "HZ_QUALITY_FLAG")
+    val preds = Seq(
+      ("D1", t(0), t(0), t(0), "AWEFS_ASEFS", 10.0),
+      ("D1", ts("2025-06-07T00:05:00Z"), t(0), t(0), "AWEFS_ASEFS", 20.0))
+      .toDF("DUID", "INTERVAL_DATETIME", "RUN_DATETIME", "OFFERDATETIME", "ORIGIN", "FORECAST_POE50")
+    val scada = Seq((t(0), "D1", 12.0), (t(1), "D1", 9.5), (t(2), "D1", 10.1))
+      .toDF("MEASUREMENT_DATETIME", "FPP_UNITID", "MEASURED_MW")
+    val traj = Crunch.hypotheticalTrajectory(spark, preds, "2025-06-07")
+    val perf = Crunch.performance(Crunch.hypotheticalDeviations(traj, scada), Crunch.frequencyMeasure(freq))
+    val perfSplit = perf.select(col("ts"), col("p_raise").as("raise_perf"), col("p_lower").as("lower_perf"))
+    val cf = Seq(("C1", t(0), 0.5)).toDF("constraintid", "ts", "contribution_factor")
+    val defCf = Seq(("C1", t(0), 0.9)).toDF("constraintid", "ts", "default_contribution_factor")
+    val resDcf = Seq(("C1", t(0), 0.6)).toDF("constraintid", "ts", "residual_dcf")
+    val perfRates = Seq(("C1", t(0), 10.0, 20.0)).toDF("constraintid", "ts", "fpp_payment_rate", "fpp_recovery_rate")
+    val resRates = Seq(("C1", t(0), 1.0, 1.0, 1.0)).toDF("constraintid", "ts", "fpp", "used_fcas", "unused_fcas")
+    Crunch.settlement(perfSplit, cf, defCf, resDcf, perfRates, resRates)._2
   }
 }

@@ -1,7 +1,12 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.pipeline.CrunchSpec
 import graft.plans.Compactor
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.RangeExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 import org.apache.hadoop.fs.Path
 import java.nio.file.{Files, Paths}
@@ -13,8 +18,11 @@ import scala.jdk.CollectionConverters._
   * the footer schema is exactly what Spark infers, on every kind of file
   * the lake and the histories hold, and the job counts that this buys: one
   * rewrite job per compacted partition, and none for a history gate, add
-  * or vacuum. */
+  * or vacuum. Beside these job guards, the plan guard of a crunch day:
+  * its grid runs once, spread over the cores, with no range exchange. */
 class LakeFooterSchemaSpec extends SparkSpec {
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
 
   /** Visible parquet files under `dir`, recursively, in path order: the
     * lake readers' one rule. */
@@ -201,6 +209,24 @@ class LakeFooterSchemaSpec extends SparkSpec {
     assert(stats.map(_.partition).sorted === Seq(parts(0), parts(2)))
     assert(jobs.size === 2, jobs)
     assert(jobsOf(Compactor.runOnce(spark, lake, hist)).isEmpty) // nothing dirty: no job
+  }
+
+  test("plan guard: a small crunch day has no range exchange and spreads its grid over the cores") {
+    val day = CrunchSpec.smallDay(spark)
+    val tasks = tasksOf(day.collect())
+    val plan = day.queryExecution.executedPlan
+    val ranged = aqe.collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranged.isEmpty, plan)
+    // the spine's rows per task, read from each task's update of the
+    // Range's row metric: the grid runs once, over more than one task
+    val spines = aqe.collectWithSubqueries(plan) { case r: RangeExec => r.metrics("numOutputRows").id }
+    assert(spines.size === 1, plan)
+    val spineRows = tasks.flatMap(t => t.taskInfo.accumulables.filter(_.id == spines.head)
+      .flatMap(_.update).map(_.toString.toLong)).filter(_ > 0)
+    assert(spineRows.sum === 21600, spineRows)
+    assert(spineRows.size > 1, spineRows)
   }
 
   test("mixed history: files written by Spark and on the driver gate, vacuum and read as one") {
