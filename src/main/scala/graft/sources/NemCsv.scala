@@ -355,18 +355,15 @@ object NemCsv {
     *     header and type samples, and resolves each table's typed select
     *     list ([[typing]]).
     *  2. write: each task scans its files again, types each record with
-    *     its table's projection (reused by later tasks on the same
-    *     thread) and writes it through [[ParquetRowWriter]], whose Hadoop
-    *     conf is one broadcast for the job, to a staged file under the
-    *     hidden `<lakeRoot>/<table>/_split-<id>/` (Spark's `_temporary`
-    *     layout). A task holds at most one open
+    *     its table's projection and writes it through [[ParquetRowWriter]]
+    *     to a staged file under the hidden `<lakeRoot>/<table>/_split-<id>/`
+    *     (Spark's `_temporary` layout). A task holds at most one open
     *     writer: a file is closed when the record stream moves to another
     *     (table, date). It returns (table, date, staged path, rows) per
     *     file.
     * After the write job the driver renames each staged file into its
-    * `date=` directory; the staging directories and the conf broadcast
-    * are deleted afterwards, also when a job fails, so a failed split
-    * publishes nothing and a daemon keeps no broadcast per tick. The
+    * `date=` directory; the staging directories are deleted afterwards,
+    * also when a job fails, so a failed split publishes nothing. The
     * driver holds only the metas and the list of staged files. */
   def splitToLake(spark: SparkSession, paths: Seq[String], lakeRoot: String,
       compression: String = "zstd"): Seq[(String, Long)] = {
@@ -375,7 +372,7 @@ object NemCsv {
     val written = if (meta.isEmpty) Seq.empty else {
       val id = UUID.randomUUID().toString
       val typings = typing(spark, meta)
-      val (writer, writerConf) = ParquetRowWriter.shipped(spark, Some(compression))
+      val writer = ParquetRowWriter(spark, Some(compression))
       val fs = new Path(lakeRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
       try {
         val staged = SQLExecution.withSQLConfPropagated(castToImpl(spark)) {
@@ -387,30 +384,10 @@ object NemCsv {
             throw new java.io.IOException(s"rename $from -> $to failed")
         }
         staged.toSeq
-      } finally {
-        writerConf.destroy()
-        meta.foreach(m => fs.delete(new Path(s"$lakeRoot/${m.table}/_split-$id"), true))
-      }
+      } finally meta.foreach(m => fs.delete(new Path(s"$lakeRoot/${m.table}/_split-$id"), true))
     }
     written.groupMapReduce(_._1)(_._4)(_ + _).toSeq.sorted
   }
-
-  /** Projections of typed select lists, at most [[ProjectionsPerThread]]
-    * per thread, least recently used dropped first. A projection holds its
-    * output row, so it is reused only by later tasks on the thread that
-    * built it, never shared between threads; generating one costs
-    * milliseconds even when its class is cached, as its code is generated
-    * before the class cache is looked up. */
-  private val ProjectionsPerThread = 64
-  private val projectionCache = ThreadLocal.withInitial[java.util.LinkedHashMap[Seq[Expression], UnsafeProjection]](
-    () => new java.util.LinkedHashMap[Seq[Expression], UnsafeProjection](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Seq[Expression], UnsafeProjection]): Boolean =
-        size > ProjectionsPerThread
-    })
-
-  /** The projection of `exprs` from this thread's cache, made on a miss. */
-  private def cachedProjection(exprs: Seq[Expression]): UnsafeProjection =
-    projectionCache.get.computeIfAbsent(exprs, e => UnsafeProjection.create(e))
 
   /** The write task of [[splitToLake]]: `recs` typed and written to one
     * staged file per run of records of one (table, date), at most one
@@ -420,7 +397,6 @@ object NemCsv {
       writer: ParquetRowWriter, lakeRoot: String, id: String): Iterator[(String, String, String, Long)] = {
     val task = TaskContext.get()
     val projections = scala.collection.mutable.HashMap.empty[String, UnsafeProjection]
-    def projection(table: String) = projections.getOrElseUpdate(table, cachedProjection(typings(table)._1))
     val written = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, Long)]
     final class Staged(val table: String, val date: String) {
       val file = new Path(s"$lakeRoot/$table/_split-$id/" +
@@ -441,7 +417,8 @@ object NemCsv {
           close()
           open = new Staged(r.table, r.date)
         }
-        open.out.write(projection(r.table)(new GenericInternalRow(r.values.map(UTF8String.fromString).toArray[Any])))
+        val project = projections.getOrElseUpdate(r.table, UnsafeProjection.create(typings(r.table)._1))
+        open.out.write(project(new GenericInternalRow(r.values.map(UTF8String.fromString).toArray[Any])))
         open.rows += 1
       }
       close()

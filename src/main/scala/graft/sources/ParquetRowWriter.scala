@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
@@ -17,12 +16,10 @@ import org.apache.spark.util.SerializableConfiguration
   * write writes them but without a Spark job of their own: parquet-hadoop
   * with Spark's `ParquetWriteSupport` under the session's parquet confs
   * (the same physical schema, timestamp encoding and Spark schema footer
-  * key). One built by [[ParquetRowWriter.shipped]] reads its confs from a
-  * broadcast and also writes inside a task; one built by
-  * [[ParquetRowWriter.apply]] holds them and writes on the driver only. A
-  * writer buffers at most one row group (`parquet.block.size`) in memory,
-  * as Spark's own file writer does. */
-private[sources] final class ParquetRowWriter(conf: () => Configuration,
+  * key). Serializable, so one built on the driver also writes inside a
+  * task. A writer buffers at most one row group (`parquet.block.size`) in
+  * memory, as Spark's own file writer does. */
+private[sources] final class ParquetRowWriter(conf: SerializableConfiguration,
     codec: CompressionCodecName) extends Serializable {
 
   /** The file-name ending Spark gives this codec's parquet files, e.g.
@@ -31,7 +28,7 @@ private[sources] final class ParquetRowWriter(conf: () => Configuration,
 
   /** An open writer of rows of `schema` into `file`. */
   def open(file: Path, schema: StructType): ParquetWriter[InternalRow] = {
-    val c = new Configuration(conf())
+    val c = new Configuration(conf.value)
     ParquetWriteSupport.setSchema(schema, c)
     new ParquetRowWriter.Builder(file).withConf(c).withCompressionCodec(codec).build()
   }
@@ -45,28 +42,14 @@ private[sources] final class ParquetRowWriter(conf: () => Configuration,
 
 private[sources] object ParquetRowWriter {
 
-  /** A driver-side writer under the session's Hadoop and parquet confs
-    * and the codec of the `compression` write option, else the session's
-    * codec. */
+  /** A writer under the session's Hadoop and parquet confs and the codec
+    * of the `compression` write option, else the session's codec. */
   def apply(spark: SparkSession, compression: Option[String] = None): ParquetRowWriter = {
-    val c = sessionConf(spark)
-    new ParquetRowWriter(() => c, codec(spark, compression))
-  }
-
-  /** The writer of [[apply]] for tasks: its confs travel as one broadcast,
-    * as Spark's file readers ship theirs, instead of in every task's
-    * closure. The caller destroys the broadcast once its jobs are done. */
-  def shipped(spark: SparkSession, compression: Option[String]): (ParquetRowWriter, Broadcast[SerializableConfiguration]) = {
-    val b = spark.sparkContext.broadcast(new SerializableConfiguration(sessionConf(spark)))
-    (new ParquetRowWriter(() => b.value.value, codec(spark, compression)), b)
-  }
-
-  private def sessionConf(spark: SparkSession): Configuration = {
     val c = new Configuration(spark.sparkContext.hadoopConfiguration)
     Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
       SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
       .foreach(e => c.set(e.key, spark.conf.get(e.key)))
-    c
+    new ParquetRowWriter(new SerializableConfiguration(c), codec(spark, compression))
   }
 
   /** The codec of the `compression` write option, else the session's. */

@@ -15,12 +15,14 @@ one pair.
 
 It then prints, per workload and metric (the end-to-end metrics of
 BENCHMARK.json, or its per-layer ones with `--trace 1`), each side's
-median and quartiles, the pairs the change wins (ties count for neither
-side) and whether the change clears the gain rule: it wins at least
-nine tenths of the pairs and its median beats the parent's by more than
-the parent's interquartile range. A failed run is reported with its
-error and leaves its pair out. `--out` appends every run's result as one
-JSON line.
+median and quartiles over its finished runs, the pairs the change wins
+out of every pair run (ties count for neither side) and whether the
+change clears the gain rule: it wins at least nine tenths of all pairs
+run, its median beats the parent's by more than the parent's
+interquartile range, and it failed no more runs than the parent. A
+failed run is reported with its error; a pair whose change run failed
+counts as a loss, and each workload's header gives both sides' failed
+runs. `--out` appends every run's result as one JSON line.
 """
 import argparse
 import json
@@ -61,21 +63,26 @@ def quartiles(xs):
 
 
 def report(workload, specs, pairs):
-    print(f"\n{workload}: {len(pairs)} pairs")
+    """`pairs` holds one (parent, change) per seed run, a failed side None."""
+    failed = {side: sum(1 for p in pairs if p[i] is None) for i, side in enumerate(("parent", "change"))}
+    print(f"\n{workload}: {len(pairs)} pairs, failed runs: parent {failed['parent']}, change {failed['change']}")
     print(f"  {'metric':<24} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30} {'wins':>6}  gain")
     for m in specs:
         name, lower = m["name"], m["better"] == "lower"
-        got = [(p[name], c[name]) for p, c in pairs if name in p and name in c]
-        if not got:
+        ps = [p[name] for p, _ in pairs if p is not None and name in p]
+        cs = [c[name] for _, c in pairs if c is not None and name in c]
+        if not ps or not cs:
             continue
-        ps, cs = [g[0] for g in got], [g[1] for g in got]
-        wins = sum(1 for p, c in got if (c < p if lower else c > p))
+        both = [(p[name], c[name]) for p, c in pairs
+                if p is not None and c is not None and name in p and name in c]
+        wins = sum(1 for p, c in both if (c < p if lower else c > p))
         pm, cm = statistics.median(ps), statistics.median(cs)
         (p1, p3), (c1, c3) = quartiles(ps), quartiles(cs)
         better_by = (pm - cm) if lower else (cm - pm)
-        gain = wins * 10 >= 9 * len(got) and better_by > p3 - p1
+        gain = (wins * 10 >= 9 * len(pairs) and better_by > p3 - p1
+                and failed["change"] <= failed["parent"])
         side = f"{pm:.4g} [{p1:.4g}, {p3:.4g}]", f"{cm:.4g} [{c1:.4g}, {c3:.4g}]"
-        print(f"  {name:<24} {side[0]:<30} {side[1]:<30} {f'{wins}/{len(got)}':>6}  {'yes' if gain else 'no'}")
+        print(f"  {name:<24} {side[0]:<30} {side[1]:<30} {f'{wins}/{len(pairs)}':>6}  {'yes' if gain else 'no'}")
 
 
 def main():
@@ -106,8 +113,7 @@ def main():
                         f.write(json.dumps(line) + "\n")
                 status = "failed: " + err.splitlines()[-1] if err else f"{wall:.0f} s"
                 print(f"[{workload} seed {seed}] {side}: {status}", file=sys.stderr, flush=True)
-            if got["parent"] is not None and got["change"] is not None:
-                pairs.append((got["parent"], got["change"]))
+            pairs.append((got["parent"], got["change"]))
         report(workload, specs, pairs)
 
 
