@@ -108,7 +108,8 @@ object Compactor {
     val merged = staged(f, dir).getOrElse(
       throw new java.io.IOException(s"compaction of $dir staged no file"))
     val rows = ParquetMeta.read(spark, merged.toString).rows // footer, not a re-scan
-    val out = f.create(new Path(dir, Manifest), true)
+    val out = ParquetMeta.outputFile(spark.sparkContext.hadoopConfiguration, new Path(dir, Manifest))
+      .createOrOverwrite(0)
     try out.write((sources.map(_.getName) :+ ManifestEnd).mkString("\n").getBytes("UTF-8"))
     finally out.close()
     sources.foreach(delete(f, _))

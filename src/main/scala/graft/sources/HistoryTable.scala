@@ -152,7 +152,7 @@ final class HistoryTable(spark: SparkSession, dir: String, keyCol: String) {
     schema.exists { schema =>
       val meta = footers.map(_._1).find(_.getSchema == schema).getOrElse(footers.head._1).getKeyValueMetaData
       publish(dst) { tmp =>
-        val w = ExampleParquetWriter.builder(tmp).withConf(c).withType(schema)
+        val w = ExampleParquetWriter.builder(ParquetMeta.outputFile(c, tmp)).withConf(c).withType(schema)
           .withExtraMetaData((meta.asScala - ModelNameKey).asJava)
           .withCompressionCodec(ParquetRowWriter.codec(spark)).build()
         try inputs.foreach(p => withRecords(c, p, identity)((_, _, records) => records.foreach(w.write)))

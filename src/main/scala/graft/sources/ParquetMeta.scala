@@ -7,7 +7,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.{InputFile, LocalInputFile, LocalOutputFile, OutputFile}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Parquet footer metadata reads — row counts, schema and row-group stats
@@ -16,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * used by the reconciliation verify job where a full `count()` scan per
   * file would be wasteful, and by the lake's readers
   * ([[graft.plans.SchemaEvolution.readWidened]], [[HistoryTable]]) in place
-  * of Spark's schema inference, which runs one job per read. */
+  * of Spark's schema inference, which runs one job per read. It also
+  * picks the file layer of every file the program itself reads or writes
+  * ([[inputFile]], [[outputFile]]). */
 object ParquetMeta {
 
   final case class FileMeta(path: String, rows: Long, rowGroups: Int,
@@ -27,7 +31,36 @@ object ParquetMeta {
     * fresh Hadoop `Configuration`, which loads the default resources: about
     * 13 ms of every open on a 4-vCPU host, ten times the open itself. */
   private[graft] def open(conf: Configuration, file: Path): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), HadoopReadOptions.builder(conf, file).build())
+    ParquetFileReader.open(inputFile(conf, file), HadoopReadOptions.builder(conf, file).build())
+
+  /** `file` as a path of the local file system, when its Hadoop file
+    * system serves the `file` scheme. The branch is chosen on the scheme of
+    * the qualified path, not on the file system's class: in Spark's jar set
+    * hive-exec registers Hive's `ProxyLocalFileSystem` for `file:` through
+    * the ServiceLoader, so a `LocalFileSystem` class test never matches. */
+  private def local(conf: Configuration, file: Path): Option[java.nio.file.Path] = {
+    val uri = file.getFileSystem(conf).makeQualified(file).toUri
+    if (uri.getScheme == "file") Some(Paths.get(uri)) else None
+  }
+
+  /** A parquet file the program itself reads. A local one is read through
+    * parquet's local file I/O; any other through its Hadoop file system. */
+  private[graft] def inputFile(conf: Configuration, file: Path): InputFile =
+    local(conf, file).fold[InputFile](HadoopInputFile.fromPath(file, conf))(new LocalInputFile(_))
+
+  /** A file the program itself writes (its parquet files and the
+    * compactor's manifest), its missing parent directories made. A local
+    * one is written through parquet's local file I/O, with no `.crc`
+    * sidecar: Hadoop's checksummed local file system forks `chmod` for a
+    * new file, its `.crc` and each new directory on a host without the
+    * native Hadoop library. Any other scheme keeps its Hadoop file system,
+    * which sees every create. Renames and deletes stay on the Hadoop file
+    * system, which forks nothing for them. */
+  private[graft] def outputFile(conf: Configuration, file: Path): OutputFile =
+    local(conf, file).fold[OutputFile](HadoopOutputFile.fromPath(file, conf)) { p =>
+      Files.createDirectories(p.getParent)
+      new LocalOutputFile(p)
+    }
 
   /** A name Spark's file listing skips: hidden (`.`), or a marker or
     * staging name (`_`). */

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.OutputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
@@ -18,7 +19,13 @@ import org.apache.spark.util.SerializableConfiguration
   * (the same physical schema, timestamp encoding and Spark schema footer
   * key). Serializable, so one built on the driver also writes inside a
   * task. A writer buffers at most one row group (`parquet.block.size`) in
-  * memory, as Spark's own file writer does. */
+  * memory, as Spark's own file writer does.
+  *
+  * A local file is written through parquet's local file I/O
+  * ([[ParquetMeta.outputFile]]), so it has no Hadoop `.crc` sidecar. Its
+  * integrity check is parquet's own: every page carries a CRC
+  * (`parquet.page.write-checksum.enabled`, on by default), which a read
+  * under `parquet.page.verify-checksum.enabled=true` verifies. */
 private[sources] final class ParquetRowWriter(conf: SerializableConfiguration,
     codec: CompressionCodecName) extends Serializable {
 
@@ -30,7 +37,7 @@ private[sources] final class ParquetRowWriter(conf: SerializableConfiguration,
   def open(file: Path, schema: StructType): ParquetWriter[InternalRow] = {
     val c = new Configuration(conf.value)
     ParquetWriteSupport.setSchema(schema, c)
-    new ParquetRowWriter.Builder(file).withConf(c).withCompressionCodec(codec).build()
+    new ParquetRowWriter.Builder(ParquetMeta.outputFile(c, file)).withConf(c).withCompressionCodec(codec).build()
   }
 
   /** `rows` as one parquet file. */
@@ -57,7 +64,7 @@ private[sources] object ParquetRowWriter {
     CompressionCodecName.valueOf(new ParquetOptions(compression.map("compression" -> _).toMap,
       spark.sessionState.conf).compressionCodecClassName)
 
-  private final class Builder(file: Path) extends ParquetWriter.Builder[InternalRow, Builder](file) {
+  private final class Builder(file: OutputFile) extends ParquetWriter.Builder[InternalRow, Builder](file) {
     override protected def self(): Builder = this
     override protected def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
       new ParquetWriteSupport

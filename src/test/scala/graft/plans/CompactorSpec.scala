@@ -165,14 +165,31 @@ class CompactorSpec extends SparkSpec {
       assert(failed.isFailure, "a failed promote must fail the sweep")
     } finally PublishFailFs.failNth(0)
   }
+
+  test("off the file scheme, a history add and the compaction manifest are created through the lake's file system") {
+    spark.sparkContext.hadoopConfiguration.set("fs.publishfail.impl", classOf[PublishFailFs].getName)
+    import spark.implicits._
+    val (lake, part, expected) = dirtyPartition("seam")
+    val histDir = s"publishfail://${tmpDir("seam_hist")}"
+    try {
+      PublishFailFs.failNth(0)
+      Compactor.compactPartition(spark, lake, "T---C---1", "date=2025-06-07")
+      HistoryTable.compacted(spark, histDir).add(Seq("T---C---1/date=2025-06-07/x.parquet").toDF("path"))
+      val created = PublishFailFs.creations
+      assert(created.exists(_.getName == ".compact_manifest") &&
+        created.exists(p => p.getName.startsWith(".tmp-") && p.getParent.getName == "compacted"), created)
+      assert(rowsOf(part) === expected)
+      assert(HistoryTable.compacted(spark, histDir).keys() === Set("T---C---1/date=2025-06-07/x.parquet"))
+    } finally PublishFailFs.failNth(0)
+  }
 }
 
-/** Local file system that fails one step of the compactor's publish: a
-  * create, delete or rename (by its destination) of the manifest or of a
-  * visible parquet file directly in a `date=` dir. The Spark committer's
-  * own calls, all under `.compact_tmp`, pass. A failing delete or rename
-  * returns false; a failing create crashes mid-write: the first line of
-  * the write lands, then the write throws. */
+/** Local file system that records every create and fails one step of the
+  * compactor's publish: a create, delete or rename (by its destination) of
+  * the manifest or of a visible parquet file directly in a `date=` dir.
+  * The Spark committer's own calls, all under `.compact_tmp`, pass. A
+  * failing delete or rename returns false; a failing create crashes
+  * mid-write: the first line of the write lands, then the write throws. */
 class PublishFailFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("publishfail:///")
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
@@ -199,9 +216,13 @@ object PublishFailFs {
   private var failAt = 0
   private var failRenames = false
   private val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val creates = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   /** Count publish steps from now and fail the `k`-th (0: none). */
-  def failNth(k: Int): Unit = synchronized { failAt = k; failRenames = false; seen.clear() }
+  def failNth(k: Int): Unit = synchronized { failAt = k; failRenames = false; seen.clear(); creates.clear() }
+
+  /** Every file created since the last reset, counted or not. */
+  def creations: Seq[Path] = synchronized(creates.toList)
 
   /** Fail every counted rename (the promote) from now on. */
   def failPromote(): Unit = synchronized { failNth(0); failRenames = true }
@@ -210,6 +231,7 @@ object PublishFailFs {
   def steps: Seq[String] = synchronized(seen.toList)
 
   private def fails(op: String, p: Path): Boolean = synchronized {
+    if (op == "create") creates += p
     val name = p.getName
     val counted = Option(p.getParent).exists(_.getName.startsWith("date=")) &&
       (ParquetMeta.visible(name) || name == ".compact_manifest")

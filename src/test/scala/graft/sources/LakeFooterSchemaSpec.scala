@@ -3,11 +3,12 @@ package graft.sources
 import graft.SparkSpec
 import graft.pipeline.CrunchSpec
 import graft.plans.Compactor
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.RangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType, StructField, StructType, TimestampType}
 import org.apache.hadoop.fs.Path
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -18,7 +19,9 @@ import scala.jdk.CollectionConverters._
   * the footer schema is exactly what Spark infers, on every kind of file
   * the lake and the histories hold, and the job counts that this buys: one
   * rewrite job per compacted partition, and none for a history gate, add
-  * or vacuum. Beside these job guards, the plan guard of a crunch day:
+  * or vacuum. The files the program writes itself on `file:` paths carry
+  * no Hadoop `.crc` sidecar; their pages carry parquet's CRCs instead.
+  * Beside these job guards, the plan guard of a crunch day:
   * its grid runs once, spread over the cores, with no range exchange. */
 class LakeFooterSchemaSpec extends SparkSpec {
 
@@ -145,6 +148,47 @@ class LakeFooterSchemaSpec extends SparkSpec {
     val consolidated = parquetFiles(s"$root/downloaded")
     assert(consolidated.size === 1 && consolidated.head.split('/').last.startsWith("consolidated-"))
     assertInferred(consolidated)
+  }
+
+  test("the program's own files on file: paths have no .crc sidecar: split, history adds, sweep, vacuum") {
+    import spark.implicits._
+    val dir = tmpDir("no-crc")
+    val lake = s"$dir/lake"
+    def crcs(root: String): Seq[String] = Files.walk(Paths.get(root)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".crc")).toSeq
+    NemCsv.splitToLake(spark, Seq(splitFixture(dir)), lake)
+    assert(parquetFiles(lake).size === 2)
+    assert(crcs(lake).isEmpty, crcs(lake))
+    val processed = HistoryTable.processed(spark, dir)
+    Seq("a.zip", "b.zip").foreach(n => processed.add(Seq((n, 1L)).toDF("filename", "rows")))
+    val compacted = HistoryTable.compacted(spark, dir)
+    assert(Compactor.runOnce(spark, lake, compacted).size === 2)
+    processed.vacuum()
+    assert(parquetFiles(s"$dir/processed").map(_.split('/').last).forall(_.startsWith("consolidated-")))
+    assert(processed.keys() === Set("a.zip", "b.zip") && compacted.files().size === 1)
+    assert(crcs(s"$dir/processed").isEmpty && crcs(s"$dir/compacted").isEmpty)
+    // the one sidecar left is that of Spark's own compaction rewrite
+    assert(crcs(lake) === Seq(".compacted.parquet.crc", ".compacted.parquet.crc"))
+  }
+
+  test("a byte flipped in a data page of a locally written file fails a read that verifies page CRCs") {
+    val file = new Path(tmpDir("page-crc"), "flags.parquet")
+    ParquetRowWriter(spark, Some("uncompressed"))
+      .write(file, StructType(Seq(StructField("flag", BooleanType))), Iterator(InternalRow(true)))
+    val r = ParquetMeta.open(spark.sparkContext.hadoopConfiguration, file)
+    // no dictionary for booleans: the chunk's last byte is the data page's packed value
+    val last = try {
+      val c = r.getFooter.getBlocks.get(0).getColumns.get(0)
+      c.getStartingPos + c.getTotalSize - 1
+    } finally r.close()
+    val raf = new java.io.RandomAccessFile(file.toUri.getPath, "rw")
+    try { raf.seek(last); val b = raf.read(); raf.seek(last); raf.write(b ^ 1) } finally raf.close()
+    def read(verify: Boolean) = spark.read.option("parquet.page.verify-checksum.enabled", verify.toString)
+      .parquet(file.toString).collect().map(_.getBoolean(0)).toSeq
+    assert(read(verify = false) === Seq(false)) // unverified, the flip reads back as data
+    val e = intercept[Exception](read(verify = true))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CRC checksum verification failed")), e)
   }
 
   test("job guard: compacting a 6-file mixed-schema partition runs exactly 1 job") {
