@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import graft.sources.{HistoryTable, ParquetMeta}
+import graft.sources.{HistoryTable, ParquetMerge, ParquetMeta, ParquetRowWriter}
 
 /** Partition compactor: merge the many small per-ingest parquet files of
   * each `<table>/date=D/` partition into one `compacted.parquet`, with
@@ -11,12 +11,11 @@ import graft.sources.{HistoryTable, ParquetMeta}
   * the reference's compactor binary
   * (/root/reference/src/bin/compactor.rs:33-111,584-792).
   *
-  * Scale: each partition is one independent unit of work; on a cluster
-  * the per-partition jobs are scheduled concurrently (the reference used a
-  * rayon scope + per-partition mutex; Spark's scheduler + disjoint output
-  * paths make the lock unnecessary). A partition rewrites through
-  * `coalesce(1)`: its one write task streams the rows and buffers one
-  * row group, so a hot partition costs one task's time, not memory.
+  * Scale: a sweep merges every dirty partition in one Spark job, one task
+  * per partition, on as many cores as there are (the reference used a
+  * rayon scope + per-partition mutex; disjoint output paths make the lock
+  * unnecessary). A task streams its partition's rows and buffers one row
+  * group, so a hot partition costs one task's time, not memory.
   */
 object Compactor {
 
@@ -44,7 +43,7 @@ object Compactor {
   // mid-write lists too few inputs, and no input was deleted yet
   private val ManifestEnd = "#end"
 
-  /** The merged file staged by the rewrite, while it is not promoted. */
+  /** The merged file staged by the merge, while it is not promoted. */
   private def staged(f: FileSystem, dir: String): Option[Path] = {
     val tmp = new Path(dir, Tmp)
     if (!f.exists(tmp)) None
@@ -59,7 +58,7 @@ object Compactor {
     if (!f.rename(from, new Path(dir, Compacted)))
       throw new java.io.IOException(s"compaction publish: rename $from -> $dir/$Compacted failed")
 
-  /** Crash recovery for [[compactPartition]]'s publish protocol. A
+  /** Crash recovery for [[compact]]'s publish protocol. A
     * complete manifest lists the files merged into the staged file, so
     * the deletes are finished; the listed `compacted.parquet` is the old
     * one only while the staged file is still unpromoted (once promoted it
@@ -82,60 +81,68 @@ object Compactor {
     delete(f, new Path(dir, Tmp), recursive = true)
   }
 
-  /** Compact one partition dir: read every visible parquet file under
-    * the widened schema and rewrite them as one `compacted.parquet` (the
-    * reference's one-file-per-partition contract, compactor.rs:644-755).
-    * Publish protocol (crash-safe refinement of the reference's
-    * tmp+rename): merge into `.compact_tmp/` → manifest of the merged
-    * names → deletes → rename of the staged file to `compacted.parquet`
-    * → drop manifest and `.compact_tmp`; a crash or a failed step at any
-    * point is repaired by [[recover]] on the next call. The rewrite is the
-    * only Spark job: input schemas and the output row count come from
-    * footers read on the driver. Returns None if there was nothing to
-    * do. */
-  def compactPartition(spark: SparkSession, lakeRoot: String, table: String,
-      partition: String, compression: String = "zstd"): Option[Stat] = {
-    val dir = s"$lakeRoot/$table/$partition"
-    val f = fs(spark, dir)
-    recover(f, dir)
-    val visible = f.listStatus(new Path(dir)).map(_.getPath).filter(p => ParquetMeta.visible(p.getName))
-    val (existing, inputs) = visible.partition(_.getName == Compacted)
-    if (inputs.isEmpty) return None
-    val sources = inputs ++ existing
-    SchemaEvolution.readWidened(spark, sources.map(_.toString).toIndexedSeq)
-      .coalesce(1).write.mode("overwrite")
-      .option("compression", compression).parquet(new Path(dir, Tmp).toString)
-    val merged = staged(f, dir).getOrElse(
-      throw new java.io.IOException(s"compaction of $dir staged no file"))
-    val rows = ParquetMeta.read(spark, merged.toString).rows // footer, not a re-scan
-    val out = ParquetMeta.outputFile(spark.sparkContext.hadoopConfiguration, new Path(dir, Manifest))
-      .createOrOverwrite(0)
-    try out.write((sources.map(_.getName) :+ ManifestEnd).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    sources.foreach(delete(f, _))
-    promote(f, merged, dir)
-    delete(f, new Path(dir, Manifest))
-    delete(f, new Path(dir, Tmp), recursive = true)
-    // sweep markers and stray checksums, but never a hidden parquet file
-    // (or its checksum): that is another writer's staged output
-    f.listStatus(new Path(dir)).map(_.getPath.getName)
-      .filter(n => (n.startsWith("_") || n.startsWith(".")) && n != Manifest && !n.contains(".parquet"))
-      .foreach(n => f.delete(new Path(dir, n), true))
-    Some(Stat(table, partition, inputs.length, rows))
+  /** Compact one partition dir, as [[runOnce]] compacts each dirty
+    * partition. Returns None if there was nothing to do. */
+  def compactPartition(spark: SparkSession, lakeRoot: String, table: String, partition: String): Option[Stat] =
+    compact(spark, lakeRoot, Seq((table, partition))).headOption
+
+  /** Merge the visible parquet files of each of `parts` into one
+    * `compacted.parquet` under their widened schema (the reference's
+    * one-file-per-partition contract, compactor.rs:644-755): one Spark job,
+    * one task per partition, stages each merged file under `.compact_tmp/`
+    * ([[ParquetMerge]]); the driver then publishes each (crash-safe
+    * refinement of the reference's tmp+rename): manifest of the merged
+    * names → deletes → rename of the staged file to `compacted.parquet` →
+    * drop manifest and `.compact_tmp`. A crash or a failed step at any
+    * point is repaired by [[recover]] on the next call. */
+  private def compact(spark: SparkSession, lakeRoot: String, parts: Seq[(String, String)]): Seq[Stat] = {
+    val f = fs(spark, lakeRoot)
+    val merges = parts.flatMap { case (t, p) =>
+      val dir = s"$lakeRoot/$t/$p"
+      recover(f, dir)
+      val visible = f.listStatus(new Path(dir)).map(_.getPath).filter(p => ParquetMeta.visible(p.getName))
+      val (existing, inputs) = visible.partition(_.getName == Compacted)
+      Option.when(inputs.nonEmpty)((Stat(t, p, inputs.length, 0L), dir, (inputs ++ existing).toSeq))
+    }
+    if (merges.isEmpty) return Seq.empty
+    val plans = merges.map { case (_, dir, sources) =>
+      ParquetMerge.plan(spark, sources, new Path(s"$dir/$Tmp/$Compacted"))(SchemaEvolution.widen)
+    }
+    val merge = new ParquetMerge(ParquetRowWriter(spark, Some(ParquetRowWriter.LakeCodec)))
+    // one query, one task per partition: task i merges plans(i); a query,
+    // not a bare RDD job, so the tasks run under the session's SQL confs
+    val rows = spark.range(0, plans.size, 1, plans.size).map(i => merge(plans(i.intValue)))(Encoders.scalaLong)
+      .collect()
+    merges.zip(rows).map { case ((stat, dir, sources), rows) =>
+      val merged = staged(f, dir).getOrElse(throw new java.io.IOException(s"compaction of $dir staged no file"))
+      val out = ParquetMeta.outputFile(f.getConf, new Path(dir, Manifest)).createOrOverwrite(0)
+      try out.write((sources.map(_.getName) :+ ManifestEnd).mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+      sources.foreach(delete(f, _))
+      promote(f, merged, dir)
+      delete(f, new Path(dir, Manifest))
+      delete(f, new Path(dir, Tmp), recursive = true)
+      // sweep markers and stray checksums, but never a hidden parquet file
+      // (or its checksum): that is another writer's staged output
+      f.listStatus(new Path(dir)).map(_.getPath.getName)
+        .filter(n => (n.startsWith("_") || n.startsWith(".")) && n != Manifest && !n.contains(".parquet"))
+        .foreach(n => f.delete(new Path(dir, n), true))
+      stat.copy(rows = rows)
+    }
   }
 
   /** One compaction sweep: for every partition containing files not yet in
-    * the `compacted` history, rewrite and record. The history gate is the
+    * the `compacted` history, merge and record. The history gate is the
     * idempotency check (compactor.rs:597-641). A partition whose publish
-    * was cut short (its manifest is on disk) is visited too, so
-    * [[compactPartition]] finishes that publish even when no new file
-    * arrives.
+    * was cut short (its manifest is on disk) is visited too, so its
+    * publish is finished even when no new file arrives.
     *
-    * Spark jobs: one rewrite per dirty partition ([[compactPartition]]),
-    * nothing else. On the driver: the partition listings, the history
-    * gate of the candidate paths and the history add
-    * ([[HistoryTable.filterNew]], [[HistoryTable.add]]), the
-    * dirty-partition set and every footer read. */
+    * Spark jobs: one, whatever the number of dirty partitions, with one
+    * merge task per partition; none when nothing is dirty. On the driver:
+    * the partition listings, the history gate of the candidate paths and
+    * the history add ([[HistoryTable.filterNew]], [[HistoryTable.add]]),
+    * the dirty-partition set, every footer read and each partition's
+    * publish. */
   def runOnce(spark: SparkSession, lakeRoot: String, history: HistoryTable): Seq[Stat] = {
     import spark.implicits._
     val f = fs(spark, lakeRoot)
@@ -152,13 +159,7 @@ object Compactor {
     val interrupted = listed.collect { case (t, p, names) if names.contains(Manifest) => (t, p) }
     val dirty = (fresh.map { case (t, p, _) => (t, p) } ++ interrupted).distinct
     val freshPaths = fresh.map(_._3)
-    // fan the per-partition rewrites out concurrently (the reference's
-    // rayon scope, compactor.rs:76-94): output dirs are disjoint and the
-    // manifest protocol is per-dir, so no lock is needed. Each job is a
-    // single coalesce(1) task — concurrency is what keeps >1 core busy.
-    val stats = graft.Par.mapBounded(dirty.toIndexedSeq) { case (t, p) =>
-      compactPartition(spark, lakeRoot, t, p)
-    }
+    val stats = compact(spark, lakeRoot, dirty)
     if (freshPaths.nonEmpty) {
       val now = new java.sql.Timestamp(System.currentTimeMillis())
       history.add(freshPaths.toIndexedSeq.toDF("path")

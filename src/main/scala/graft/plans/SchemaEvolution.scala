@@ -74,22 +74,15 @@ object SchemaEvolution {
 
   /** Read a set of parquet files as one frame under the widened schema —
     * the `union_by_name + to_supertypes` read used everywhere in the
-    * reference (crunch.rs:183-217, dashboards' union_by_name=true).
-    *
-    * Runs no Spark job: every file's schema comes from its footer, read on
-    * the driver ([[graft.sources.ParquetMeta.sparkSchema]]; Spark's own
-    * inference would run one job per file). Each run of consecutive files
-    * with the same schema is one relation read under that schema and
-    * conformed once, so the union keeps the files' order run by run.
-    * Nothing is scanned until the result is consumed. */
+    * reference (crunch.rs:183-217, dashboards' union_by_name=true): each
+    * file read under its footer schema
+    * ([[graft.sources.ParquetMeta.sparkSchema]], no inference job) and
+    * conformed, in file order. The compactor merges by the same
+    * [[conform]] without a plan of its own ([[graft.sources.ParquetMerge]]);
+    * this frame is what its tests compare against. */
   def readWidened(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): DataFrame = {
     val schemas = files.map(graft.sources.ParquetMeta.sparkSchema(spark, _))
     val target = widen(schemas)
-    val runs = files.zip(schemas).foldLeft(Vector.empty[(StructType, Vector[String])]) {
-      case (done :+ ((s, run)), (f, fs)) if fs == s => done :+ ((s, run :+ f))
-      case (done, (f, fs)) => done :+ ((fs, Vector(f)))
-    }
-    runs.map { case (s, run) => conform(spark.read.schema(s).parquet(run: _*), target) }
-      .reduce(_ unionByName _)
+    files.zip(schemas).map { case (f, s) => conform(spark.read.schema(s).parquet(f), target) }.reduce(_ unionByName _)
   }
 }

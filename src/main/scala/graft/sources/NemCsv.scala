@@ -4,10 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.input.PortableDataStream
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, BoundReference,
-  Expression, GenericInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -322,17 +320,11 @@ object NemCsv {
 
   /** Each table's typed columns as expressions over a row of its record's
     * values, one string per column, and their schema: [[typed]] resolved
-    * once per column type over an empty one-column relation (no job), as
-    * the optimized select list Spark would run, then bound to each
-    * column's ordinal. */
+    * once per column type over a one-string row
+    * ([[ParquetMerge.boundSelect]]), then bound to each column's ordinal. */
   private def typing(spark: SparkSession, meta: Seq[TableMeta]): Map[String, (Seq[Expression], StructType)] = {
-    val v = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(StructField("v", StringType))))
-    val byType = v.select(ColumnTypes.map(t => typed(t, col("v")).as(t.typeName)): _*)
-      .queryExecution.optimizedPlan match {
-        case Project(list, child) => ColumnTypes.zip(
-          BindReferences.bindReferences(list.map { case a: Alias => a.child }, AttributeSeq(child.output))).toMap
-        case plan => throw new IllegalStateException(s"no select list in\n$plan")
-      }
+    val byType = ColumnTypes.zip(ParquetMerge.boundSelect(spark, StructType(Seq(StructField("v", StringType))))(
+      _.select(ColumnTypes.map(t => typed(t, col("v")).as(t.typeName)): _*))).toMap
     meta.map { m =>
       val cols = m.header.zip(m.samples).zipWithIndex.map { case ((h, sample), i) =>
         val e = byType(columnType(sample)).transform { case b: BoundReference => b.copy(ordinal = i) }
@@ -344,9 +336,8 @@ object NemCsv {
 
   /** Full split: read files, write each logical table to
     * `<lakeRoot>/<table>/date=YYYY-MM-DD/part-<id>-<n>.<codec>.parquet`, return
-    * (table, rows written) per table, sorted. Compression is zstd (the reference's brotli-5
-    * study: README.md:14-27; the brotli codec jar is not bundled with
-    * Spark, zstd is the closest ratio — see BASELINE.md).
+    * (table, rows written) per table, sorted. Compression is the lake's
+    * codec ([[ParquetRowWriter.LakeCodec]]).
     *
     * Two Spark jobs over the input files, one task per file split,
     * whatever the table count, and no cache:
@@ -365,14 +356,13 @@ object NemCsv {
     * `date=` directory; the staging directories are deleted afterwards,
     * also when a job fails, so a failed split publishes nothing. The
     * driver holds only the metas and the list of staged files. */
-  def splitToLake(spark: SparkSession, paths: Seq[String], lakeRoot: String,
-      compression: String = "zstd"): Seq[(String, Long)] = {
+  def splitToLake(spark: SparkSession, paths: Seq[String], lakeRoot: String): Seq[(String, Long)] = {
     val files = inputFiles(spark, paths)
     val meta = tableMeta(files.mapPartitions(in => Iterator(partials(in.flatMap(records)))).collect().toSeq)
     val written = if (meta.isEmpty) Seq.empty else {
       val id = UUID.randomUUID().toString
       val typings = typing(spark, meta)
-      val writer = ParquetRowWriter(spark, Some(compression))
+      val writer = ParquetRowWriter(spark, Some(ParquetRowWriter.LakeCodec))
       val fs = new Path(lakeRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
       try {
         val staged = SQLExecution.withSQLConfPropagated(castToImpl(spark)) {

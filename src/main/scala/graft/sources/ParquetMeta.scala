@@ -16,11 +16,11 @@ import scala.jdk.CollectionConverters._
   * without scanning data (reference `src/bin/verify.rs:88-111`,
   * `src/bin/inspect_parquet.rs:21-188`). Driver-side footer reads only;
   * used by the reconciliation verify job where a full `count()` scan per
-  * file would be wasteful, and by the lake's readers
-  * ([[graft.plans.SchemaEvolution.readWidened]], [[HistoryTable]]) in place
-  * of Spark's schema inference, which runs one job per read. It also
-  * picks the file layer of every file the program itself reads or writes
-  * ([[inputFile]], [[outputFile]]). */
+  * file would be wasteful, and by the merges of the compactor and the
+  * histories ([[ParquetMerge]]) and the lake's readers in place of Spark's
+  * schema inference, which runs one job per read. It also picks the file
+  * layer of every file the program itself reads or writes ([[inputFile]],
+  * [[outputFile]]): footers, the merges' rows and the written files. */
 object ParquetMeta {
 
   final case class FileMeta(path: String, rows: Long, rowGroups: Int,
@@ -165,10 +165,5 @@ object ParquetMeta {
       else Nil
     }
     walk(new Path(dir)).map(f => read(spark, f.toString))
-  }
-
-  def toDF(spark: SparkSession, metas: Seq[FileMeta]): DataFrame = {
-    import spark.implicits._
-    metas.toDF()
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.OutputFile
@@ -26,18 +26,19 @@ import org.apache.spark.util.SerializableConfiguration
   * integrity check is parquet's own: every page carries a CRC
   * (`parquet.page.write-checksum.enabled`, on by default), which a read
   * under `parquet.page.verify-checksum.enabled=true` verifies. */
-private[sources] final class ParquetRowWriter(conf: SerializableConfiguration,
+private[graft] final class ParquetRowWriter(val conf: SerializableConfiguration,
     codec: CompressionCodecName) extends Serializable {
 
   /** The file-name ending Spark gives this codec's parquet files, e.g.
     * `.zstd.parquet`. */
   def extension: String = codec.getExtension + ".parquet"
 
-  /** An open writer of rows of `schema` into `file`. */
+  /** An open writer of rows of `schema` into `file`, over any file there (a failed attempt's). */
   def open(file: Path, schema: StructType): ParquetWriter[InternalRow] = {
     val c = new Configuration(conf.value)
     ParquetWriteSupport.setSchema(schema, c)
-    new ParquetRowWriter.Builder(ParquetMeta.outputFile(c, file)).withConf(c).withCompressionCodec(codec).build()
+    new ParquetRowWriter.Builder(ParquetMeta.outputFile(c, file)).withConf(c).withCompressionCodec(codec)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
   }
 
   /** `rows` as one parquet file. */
@@ -47,22 +48,25 @@ private[sources] final class ParquetRowWriter(conf: SerializableConfiguration,
   }
 }
 
-private[sources] object ParquetRowWriter {
+private[graft] object ParquetRowWriter {
 
-  /** A writer under the session's Hadoop and parquet confs and the codec
-    * of the `compression` write option, else the session's codec. */
-  def apply(spark: SparkSession, compression: Option[String] = None): ParquetRowWriter = {
+  /** The split's and the compactor's codec: zstd, the closest ratio to the
+    * reference's brotli-5, whose codec Spark does not bundle (BASELINE.md). */
+  val LakeCodec: CompressionCodecName = CompressionCodecName.ZSTD
+
+  /** A writer of `codec` (by default the session's) under the session's
+    * Hadoop conf and the parquet confs Spark's writer and row reader take
+    * from it. */
+  def apply(spark: SparkSession, codec: Option[CompressionCodecName] = None): ParquetRowWriter = {
     val c = new Configuration(spark.sparkContext.hadoopConfiguration)
     Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE,
+      SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
       .foreach(e => c.set(e.key, spark.conf.get(e.key)))
-    new ParquetRowWriter(new SerializableConfiguration(c), codec(spark, compression))
+    new ParquetRowWriter(new SerializableConfiguration(c), codec.getOrElse(CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)))
   }
-
-  /** The codec of the `compression` write option, else the session's. */
-  def codec(spark: SparkSession, compression: Option[String] = None): CompressionCodecName =
-    CompressionCodecName.valueOf(new ParquetOptions(compression.map("compression" -> _).toMap,
-      spark.sessionState.conf).compressionCodecClassName)
 
   private final class Builder(file: OutputFile) extends ParquetWriter.Builder[InternalRow, Builder](file) {
     override protected def self(): Builder = this

@@ -7,8 +7,8 @@ import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils, Spark
 
 /** Bridge into Spark's `private[sql]` / `private[spark]` API: the plan
   * constructor so custom logical plans (graft.plans.AsOfJoin) can surface
-  * as DataFrames, and the listener bus drain. Lives under
-  * `org.apache.spark.sql` for access; contains no logic. */
+  * as DataFrames, the listener bus drain and a task's own I/O metrics.
+  * Lives under `org.apache.spark.sql` for access; contains no logic. */
 object PlanApi {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
@@ -41,6 +41,12 @@ object PlanApi {
     * an action can miss its tail; `listenerBus` is `private[spark]`. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Count a task's own file bytes in its I/O metrics (`private[spark]`). */
+  def countTaskBytes(t: org.apache.spark.TaskContext, read: Long, written: Long): Unit = {
+    t.taskMetrics().inputMetrics.incBytesRead(read)
+    t.taskMetrics().outputMetrics.setBytesWritten(written)
+  }
 
   /** Test access to the private[sql] extension builders. */
   def plannerStrategiesOf(e: org.apache.spark.sql.SparkSessionExtensions,

@@ -33,20 +33,44 @@ class CompactorSpec extends SparkSpec {
     import spark.implicits._
     val lake = tmpDir("lakepar")
     val hist = HistoryTable.compacted(spark, tmpDir("histpar"))
-    // 12 independent partitions across 3 tables, 2 small files each
+    // 12 independent partitions across 3 tables of different schemas, 2
+    // small files each: their readers request different schemas in one job
     val parts = for (t <- 1 to 3; d <- 1 to 4) yield (s"T---P$t---1", f"date=2025-06-$d%02d")
     parts.foreach { case (t, p) =>
-      Seq((1.0, s"$t/$p/a")).toDF("v", "id").coalesce(1).write.mode("append").parquet(s"$lake/$t/$p")
-      Seq((2.0, s"$t/$p/b")).toDF("v", "id").coalesce(1).write.mode("append").parquet(s"$lake/$t/$p")
+      Seq("a", "b").foreach { f =>
+        val id = s"$t/$p/$f"
+        val df = t match {
+          case "T---P1---1" => Seq((1.0, id)).toDF("v", "id")
+          case "T---P2---1" => Seq((7L, id, 3)).toDF("n", "id", "k")
+          case _ => Seq((id, "x", true)).toDF("id", "s", "flag")
+        }
+        df.coalesce(1).write.mode("append").parquet(s"$lake/$t/$p")
+      }
     }
-    val stats = Compactor.runOnce(spark, lake, hist)
-    assert(stats.length === 12)
-    assert(stats.map(_.rows).sum === 24)
-    parts.foreach { case (t, p) =>
+    // and one partition mixing NEM wall-clock timestamp strings, empty
+    // strings, int/long and a column missing from some files
+    val mixed = s"$lake/T---MIX---1/date=2025-06-07"
+    val ts = java.sql.Timestamp.valueOf("2025-06-07 13:10:00")
+    Seq((ts, "1.5", 1, "")).toDF("ts", "mw", "n", "note").coalesce(1).write.mode("append").parquet(mixed)
+    Seq(("2025/06/07 23:10:04", "", 2L, "x"), ("", "2.5", 3L, "y")).toDF("ts", "mw", "n", "extra")
+      .coalesce(1).write.mode("append").parquet(mixed)
+    Seq((4.5, "z")).toDF("mw", "note").coalesce(1).write.mode("append").parquet(mixed)
+    val expected = rowsOf(mixed)
+    var stats = Seq.empty[Compactor.Stat]
+    val jobs = jobsOf { stats = Compactor.runOnce(spark, lake, hist) }
+    assert(jobs.size === 1, jobs)
+    assert(stats.length === 13)
+    assert(stats.map(_.rows).sum === 28)
+    (parts :+ (("T---MIX---1", "date=2025-06-07"))).foreach { case (t, p) =>
       val files = Files.list(Paths.get(s"$lake/$t/$p"))
         .filter(_.toString.endsWith(".parquet")).toArray.map(_.toString)
       assert(files.length === 1 && files.head.endsWith("compacted.parquet"))
     }
+    val merged = s"$mixed/compacted.parquet"
+    assert(rowsOf(mixed) === expected)
+    assert(ParquetMeta.sparkSchema(spark, merged) === spark.read.parquet(merged).schema)
+    // the timestamp and the wall-clock string parse; the empty string and the missing column are null
+    assert(spark.read.parquet(merged).where("ts is not null").count() === 2)
     assert(Compactor.runOnce(spark, lake, hist).isEmpty) // idempotent after fan-out
   }
 

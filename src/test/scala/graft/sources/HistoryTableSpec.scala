@@ -104,7 +104,7 @@ class HistoryTableSpec extends SparkSpec {
     assert(h.keys() === Set("a.zip", "b.zip"))
   }
 
-  test("above the bound: the anti-join gate and the Spark rewrite give the driver paths' answers") {
+  test("above the bound: the anti-join gate gives the driver gate's answers; the vacuum runs no job") {
     import spark.implicits._
     val now = new java.sql.Timestamp(1717000000000L)
     def history(name: String): HistoryTable = {
@@ -126,8 +126,8 @@ class HistoryTableSpec extends SparkSpec {
     // a bound crossed after the first files were read gives the same answer
     assert(spilled.filterNew(cands, bound = 2L) === gated)
     driver.vacuum()
-    val vacuumJobs = jobsOf(spilled.vacuum(bound = 0L))
-    assert(vacuumJobs.size === 1 && vacuumJobs.forall(_.isDefined), vacuumJobs)
+    val vacuumJobs = jobsOf(spilled.vacuum())
+    assert(vacuumJobs.isEmpty, vacuumJobs)
     def rows(h: HistoryTable) = {
       val f = h.files()
       assert(f.size === 1 && f.head.getPath.getName.startsWith("consolidated-"))
@@ -139,12 +139,13 @@ class HistoryTableSpec extends SparkSpec {
     assert(spilled.filterNew(cands, bound = 0L) === driver.filterNew(cands))
   }
 
-  test("vacuum of files with different parquet schemas rewrites them in Spark; keys survive") {
+  test("vacuum of files with different parquet schemas merges them on the driver; keys survive") {
     import spark.implicits._
     val h = HistoryTable.processed(spark, tmpDir("hist-mixed-schema"))
     h.add(Seq(("a.zip", 1L)).toDF("filename", "size_bytes"))
     h.add(Seq(("b.zip", 2L, 7L)).toDF("filename", "size_bytes", "batch_id"))
-    h.vacuum()
+    val jobs = jobsOf(h.vacuum())
+    assert(jobs.isEmpty, jobs)
     assert(h.files().size === 1)
     // every file's columns survive: batch_id is null where a file lacked it
     val batchIds = spark.read.parquet(h.files().head.getPath.toString)
@@ -154,7 +155,7 @@ class HistoryTableSpec extends SparkSpec {
     assert(h.filterNew(Seq("a.zip", "b.zip", "c.zip")) === Seq("c.zip"))
   }
 
-  test("a failed write leaves no temp file: driver write and Spark rewrite") {
+  test("a failed write leaves no temp file: a failed publish and a vacuum over a torn input") {
     import spark.implicits._
     val root = tmpDir("hist-fail")
     val h = HistoryTable.processed(spark, root)
@@ -172,11 +173,17 @@ class HistoryTableSpec extends SparkSpec {
     }
     assert(temps() === Seq.empty)
     assert(h.files().map(_.getPath) === listed)
-    // a Spark rewrite whose job fails: the second file's key column is not
-    // a string, so the rewrite cannot read it under the first file's schema
-    h.add(Seq((7L, 2L)).toDF("filename", "rows"))
+    // a vacuum whose merge fails mid-write: a visible input torn after its
+    // footer was written, its data pages zeroed
+    val torn = Paths.get(dir, "torn.parquet")
+    Files.copy(Paths.get(listed.head.toUri), torn)
+    val bytes = Files.readAllBytes(torn)
+    val footer = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footer, 0.toByte)
+    Files.write(torn, bytes)
     val both = h.files().map(_.getPath)
-    intercept[Exception](h.vacuum())
+    assert(both.size === 2)
+    intercept[java.io.IOException](h.vacuum()) // reading the torn pages, after the merge opened its temp file
     assert(temps() === Seq.empty)
     assert(h.files().map(_.getPath) === both) // nothing published, nothing deleted
   }
